@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Benchmark harness: headline engine queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the host's cores); prints ONE JSON line.
 
     python bench.py             # single run -> JSON line on stdout
     python bench.py --scaling   # N vs 4N cores (local[8] vs local[32]),
@@ -19,7 +19,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 LATTICE_M = int(os.environ.get("SPARK_GRAFT_BENCH_M", "96"))
 
 
@@ -512,6 +512,12 @@ def run_suite(
     subset = os.environ.get("SPARK_GRAFT_MAIN_ONLY")
     if subset and not scaling_suite:
         want = [w.strip() for w in subset.split(",") if w.strip()]
+        unknown = [k for k in want if k not in qs]
+        if unknown:
+            raise SystemExit(
+                f"SPARK_GRAFT_MAIN_ONLY: unknown queries {unknown}; "
+                f"valid names: {sorted(qs)}"
+            )
         qs = {k: qs[k] for k in want}
     times, counts = {}, {}
     if scaling_suite:
@@ -613,7 +619,11 @@ def run_suite(
         and not only
         and os.environ.get("SPARK_GRAFT_SF1", "1") != "0"
     ):
-        out["sf1_evidence"] = _sf1_evidence(spark)
+        # a failed 10x block must not lose the suite computed above
+        try:
+            out["sf1_evidence"] = _sf1_evidence(spark)
+        except Exception as e:  # noqa: BLE001 - recorded, not raised
+            out["sf1_evidence"] = {"error": f"{type(e).__name__}: {e}"}
     spark.stop()
     return out
 

@@ -32,7 +32,7 @@ edge; map-1 endpoints against a map-0 edge fall back to (+a, +b)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rayjoin_spark.plans.cells import (
@@ -52,22 +52,45 @@ BROADCAST_GUARD_ROWS = 4_000_000
 
 
 def _side(edge_cells: DataFrame, suffix: str) -> DataFrame:
-    cols = [F.col(c).alias(f"{c}_{suffix}") for c in _EDGE_COLS]
-    return edge_cells.select("cx", "cy", *cols)
+    return edge_cells.selectExpr("cx", "cy", *[f"{c} AS {c}_{suffix}" for c in _EDGE_COLS])
 
 
-def _sos_sign(px: Column, py: Column, ea: Column, eb: Column, ec: Column, flip: bool) -> Column:
-    """sign of SUBEDGE(p, e) with SoS zero-replacement.
+#: min-shared-cell ownership: keep a candidate pair only in the first cell
+#: both bbox rectangles cover
+_OWNER_SQL = "cx = greatest(ix1_a, ix1_b) AND cy = greatest(iy1_a, iy1_b)"
+
+
+def _sos_sign_sql(p: str, e: str, flip: bool) -> str:
+    """sign of SUBEDGE(point p, edge e) with SoS zero-replacement, over
+    the suffixed columns x{1,2}_p / a_e, b_e, c_e (p names the endpoint,
+    e.g. "1_a"; e names the edge side).
 
     flip=True  -> zeros replaced by (-e.a, -e.b)  (map0 point vs map1 edge)
     flip=False -> zeros replaced by (+e.a, +e.b)  (map1 point vs map0 edge)
     Mirrors reference src/algo/lsi.h:42-87. Returned value is only used for
     its sign; it is never zero for non-degenerate edges.
     """
-    s = px * ea + py * eb + ec
-    alt_a = -ea if flip else ea
-    alt_b = -eb if flip else eb
-    return F.when(s != 0, s).when(ea != 0, alt_a).otherwise(alt_b)
+    ea, eb, ec = f"a_{e}", f"b_{e}", f"c_{e}"
+    s = f"x{p} * {ea} + y{p} * {eb} + {ec}"
+    neg = "-" if flip else ""
+    return f"CASE WHEN {s} != 0 THEN {s} WHEN {ea} != 0 THEN {neg}{ea} ELSE {neg}{eb} END"
+
+
+def _lsi_predicate_sql() -> str:
+    # endpoints of map0 edge vs map1 edge line: zeros -> (-a_b, -b_b);
+    # endpoints of map1 edge vs map0 edge line: zeros -> (+a_a, +b_a)
+    s_a1, s_a2 = _sos_sign_sql("1_a", "b", True), _sos_sign_sql("2_a", "b", True)
+    s_b1, s_b2 = _sos_sign_sql("1_b", "a", False), _sos_sign_sql("2_b", "a", False)
+    same_fwd = "x1_a = x1_b AND y1_a = y1_b AND x2_a = x2_b AND y2_a = y2_b"
+    same_rev = "x1_a = x2_b AND y1_a = y2_b AND x2_a = x1_b AND y2_a = y1_b"
+    return (
+        f"(({s_a1}) > 0) != (({s_a2}) > 0) AND (({s_b1}) > 0) != (({s_b2}) > 0)"
+        f" AND NOT ({same_fwd}) AND NOT ({same_rev})"
+    )
+
+
+#: the exact SoS intersection predicate (built once; pure SQL text)
+_LSI_PREDICATE_SQL = _lsi_predicate_sql()
 
 
 def lsi_candidates(
@@ -97,79 +120,55 @@ def lsi_candidates(
         k = int(split_long_edges)
     ca = _side(explode_edges_to_cells(edges_a, grid, k), "a")
     cb = _side(explode_edges_to_cells(edges_b, grid, k), "b")
-    j = ca.join(cb, ["cx", "cy"], "inner")
-    return j.filter(
-        (F.col("cx") == F.greatest("ix1_a", "ix1_b"))
-        & (F.col("cy") == F.greatest("iy1_a", "iy1_b"))
-    )
+    return ca.join(cb, ["cx", "cy"], "inner").filter(_OWNER_SQL)
 
 
 def lsi_intersect_filter(j: DataFrame) -> DataFrame:
     """Apply the exact SoS sign predicate to candidate pairs (int64, codegen)."""
-    a_a, b_a, c_a = F.col("a_a"), F.col("b_a"), F.col("c_a")
-    a_b, b_b, c_b = F.col("a_b"), F.col("b_b"), F.col("c_b")
-    # endpoints of map0 edge vs map1 edge line: zeros -> (-a_b, -b_b)
-    s_a1 = _sos_sign(F.col("x1_a"), F.col("y1_a"), a_b, b_b, c_b, flip=True)
-    s_a2 = _sos_sign(F.col("x2_a"), F.col("y2_a"), a_b, b_b, c_b, flip=True)
-    # endpoints of map1 edge vs map0 edge line: zeros -> (+a_a, +b_a)
-    s_b1 = _sos_sign(F.col("x1_b"), F.col("y1_b"), a_a, b_a, c_a, flip=False)
-    s_b2 = _sos_sign(F.col("x2_b"), F.col("y2_b"), a_a, b_a, c_a, flip=False)
-    opposite = ((s_a1 > 0) != (s_a2 > 0)) & ((s_b1 > 0) != (s_b2 > 0))
-    same_fwd = (
-        (F.col("x1_a") == F.col("x1_b"))
-        & (F.col("y1_a") == F.col("y1_b"))
-        & (F.col("x2_a") == F.col("x2_b"))
-        & (F.col("y2_a") == F.col("y2_b"))
-    )
-    same_rev = (
-        (F.col("x1_a") == F.col("x2_b"))
-        & (F.col("y1_a") == F.col("y2_b"))
-        & (F.col("x2_a") == F.col("x1_b"))
-        & (F.col("y2_a") == F.col("y1_b"))
-    )
-    return j.filter(opposite & ~same_fwd & ~same_rev)
+    return j.filter(_LSI_PREDICATE_SQL)
+
+
+def _xsect_sql() -> list[str]:
+    dec = "DECIMAL(38,0)"
+    a_a, b_a, c_a = (f"CAST({c}_a AS {dec})" for c in "abc")
+    a_b, b_b, c_b = (f"CAST({c}_b AS {dec})" for c in "abc")
+    den0 = f"{a_a} * {b_b} - {a_b} * {b_a}"  # <= 2^59, never 0 for intersecting pairs
+    numx0 = f"{c_b} * {b_a} - {c_a} * {b_b}"  # <= 2^88
+    numy0 = f"{a_b} * {c_a} - {a_a} * {c_b}"
+    neg = f"{den0} < 0"
+    return [
+        f"CAST(CASE WHEN {neg} THEN -({e}) ELSE {e} END AS {dec}) AS {name}"
+        for e, name in ((den0, "den"), (numx0, "num_x"), (numy0, "num_y"))
+    ]
+
+
+#: (den, num_x, num_y) projections of the exact intersection point
+_XSECT_SQL = _xsect_sql()
 
 
 def with_xsect_point(pairs: DataFrame) -> DataFrame:
     """Exact rational intersection point as decimal(38,0) (num_x, num_y, den),
-    normalized den > 0, clamped to the joint bbox of the 4 endpoints
-    (reference src/algo/lsi.h:116-141). Adds unscaled-domain-free doubles
-    xsect_xd, xsect_yd (snapped-grid coordinates; callers unscale)."""
-    dec = "decimal(38,0)"
-    a_a, b_a = F.col("a_a").cast(dec), F.col("b_a").cast(dec)
-    a_b, b_b = F.col("a_b").cast(dec), F.col("b_b").cast(dec)
-    c_a, c_b = F.col("c_a").cast(dec), F.col("c_b").cast(dec)
-    den0 = a_a * b_b - a_b * b_a  # <= 2^59, never 0 for intersecting pairs
-    numx0 = c_b * b_a - c_a * b_b  # <= 2^88
-    numy0 = a_b * c_a - a_a * c_b
-    neg = den0 < 0
-    p = (
-        pairs.withColumn("den", F.when(neg, -den0).otherwise(den0).cast(dec))
-        .withColumn("num_x", F.when(neg, -numx0).otherwise(numx0).cast(dec))
-        .withColumn("num_y", F.when(neg, -numy0).otherwise(numy0).cast(dec))
+    normalized den > 0 (reference src/algo/lsi.h:116-141). Adds
+    unscaled-domain-free doubles xsect_xd, xsect_yd (snapped-grid
+    coordinates; callers unscale).
+
+    No bbox clamp. The reference clamps the point to the bbox of the 4
+    endpoints; for a pair that passed the SoS predicate the clamp never
+    fires. The two lines meet in exactly one point X: parallel lines leave
+    both endpoints of a strictly on one side of line b, and collinear ones
+    put both on it, where SoS replaces both zero signs by the same
+    tie-break; either way the predicate is false. The side of line a is
+    affine along segment b, so were X outside segment b it would be
+    nonzero with one sign at both of b's endpoints, and the predicate
+    false. So X lies on segment b, likewise on segment a, and inside the
+    bbox. tests/oracle.py keeps the clamp, so every parity test re-checks
+    this.
+    """
+    return pairs.selectExpr("*", *_XSECT_SQL).selectExpr(
+        "*",
+        "CAST(num_x AS DOUBLE) / CAST(den AS DOUBLE) AS xsect_xd",
+        "CAST(num_y AS DOUBLE) / CAST(den AS DOUBLE) AS xsect_yd",
     )
-    # clamp to bbox of the 4 endpoints (den > 0 so num vs t*den is safe)
-    lo_x = F.least("x1_a", "x2_a", "x1_b", "x2_b").cast(dec)
-    hi_x = F.greatest("x1_a", "x2_a", "x1_b", "x2_b").cast(dec)
-    lo_y = F.least("y1_a", "y2_a", "y1_b", "y2_b").cast(dec)
-    hi_y = F.greatest("y1_a", "y2_a", "y1_b", "y2_b").cast(dec)
-    d = F.col("den")
-    p = p.withColumn(
-        "num_x",
-        F.when(F.col("num_x") < lo_x * d, lo_x * d)
-        .when(F.col("num_x") > hi_x * d, hi_x * d)
-        .otherwise(F.col("num_x"))
-        .cast(dec),
-    ).withColumn(
-        "num_y",
-        F.when(F.col("num_y") < lo_y * d, lo_y * d)
-        .when(F.col("num_y") > hi_y * d, hi_y * d)
-        .otherwise(F.col("num_y"))
-        .cast(dec),
-    )
-    return p.withColumn(
-        "xsect_xd", F.col("num_x").cast("double") / F.col("den").cast("double")
-    ).withColumn("xsect_yd", F.col("num_y").cast("double") / F.col("den").cast("double"))
 
 
 def lsi_stats(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec | None = None) -> DataFrame:
@@ -245,24 +244,13 @@ def lsi_join(
         cb = F.broadcast(cb)
     elif guard:
         ca, cb = ca.hint("merge"), cb.hint("merge")
-    j = ca.join(cb, ["cx", "cy"], "inner").filter(
-        (F.col("cx") == F.greatest("ix1_a", "ix1_b"))
-        & (F.col("cy") == F.greatest("iy1_a", "iy1_b"))
-    )
-    out = lsi_intersect_filter(j)
+    out = lsi_intersect_filter(ca.join(cb, ["cx", "cy"], "inner").filter(_OWNER_SQL))
     if k:
         # fragment pairs can re-meet in several sub-bboxes; all copies of a
         # pair carry identical geometry columns, so any survivor is exact
         out = out.dropDuplicates(["eid_a", "eid_b"])
     if with_points:
-        out = with_xsect_point(out)
-        return out.select(
-            F.col("eid_a"),
-            F.col("eid_b"),
-            "num_x",
-            "num_y",
-            "den",
-            "xsect_xd",
-            "xsect_yd",
+        return with_xsect_point(out).selectExpr(
+            "eid_a", "eid_b", "num_x", "num_y", "den", "xsect_xd", "xsect_yd"
         )
-    return out.select("eid_a", "eid_b")
+    return out.selectExpr("eid_a", "eid_b")

@@ -61,7 +61,7 @@ from rayjoin_spark.plans.cells import (
     edge_cell_stats,
     explode_edges_to_cells,
 )
-from rayjoin_spark.plans.scaling import INTERNAL_MIN, GridSpec, Scaling
+from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 # Exact total-order key for xsect_y = n_/b (b > 0), where n_ = -a*px - c,
 # |n_| <= 2^59: floor(n_ * 2^62 / b) represented as a LEXICOGRAPHIC PAIR of
@@ -88,52 +88,45 @@ _SK_LO_SQL = """
 """
 
 
-def _argmin_key(query_map_id: int):
-    """Ordering struct (yk_hi, yk_lo, sk_hi, sk_lo, eid) — all bigint.
+def _argmin_key_sql(query_map_id: int) -> str:
+    """Ordering struct (yk_hi, yk_lo, sk_hi, sk_lo, ek) — all bigint.
 
     Slope tie rule keeps the larger a/b for query_map_id=1, smaller for 0;
     componentwise negation reverses the lexicographic slope order (valid
     because tuple equality is componentwise)."""
-    yk_hi, yk_lo = F.expr(_YK_HI_SQL), F.expr(_YK_LO_SQL)
-    sk_hi, sk_lo = F.expr(_SK_HI_SQL), F.expr(_SK_LO_SQL)
-    if query_map_id == 1:
-        sk_hi, sk_lo = -sk_hi, -sk_lo
-    return F.struct(
-        yk_hi.alias("yk_hi"),
-        yk_lo.alias("yk_lo"),
-        sk_hi.alias("sk_hi"),
-        sk_lo.alias("sk_lo"),
-        F.col("eid").alias("ek"),
+    neg = "-" if query_map_id == 1 else ""
+    return (
+        f"named_struct('yk_hi', {_YK_HI_SQL}, 'yk_lo', {_YK_LO_SQL}, "
+        f"'sk_hi', {neg}({_SK_HI_SQL}), 'sk_lo', {neg}({_SK_LO_SQL}), 'ek', eid)"
     )
 
 
 def prepare_query_points(
-    points: DataFrame, scaling: Scaling, grid: GridSpec, x: str = "x", y: str = "y"
+    points: DataFrame, scaling: Scaling, grid: GridSpec, x: str = "x", y: str = "y",
+    point_id: str = "point_id",
 ) -> DataFrame:
-    px = scaling.scale_x(F.col(x))
-    py = scaling.scale_y(F.col(y))
-    return (
-        points.withColumn("px", px)
-        .withColumn("py", py)
-        .withColumn("pcx", grid.cell_of(F.col("px")))
-        .withColumn("pcy", grid.cell_of(F.col("py")))
+    """(point_id, px, py, pcx, pcy): the snapped point and its cell, in one
+    narrow projection."""
+    sx, sy = scaling.scale_x_sql(x), scaling.scale_y_sql(y)
+    return points.selectExpr(
+        f"`{point_id}` AS point_id",
+        f"{sx} AS px",
+        f"{sy} AS py",
+        f"{grid.cell_of_sql(sx)} AS pcx",
+        f"{grid.cell_of_sql(sy)} AS pcy",
     )
 
 
-def _candidate_filter(cand: DataFrame, query_map_id: int) -> DataFrame:
+def _candidate_filter_sql(query_map_id: int) -> str:
     """x-range + below-edge filters with SoS (reference src/algo/pip.h:39-69)."""
-    x_min = F.least("x1", "x2")
-    x_max = F.greatest("x1", "x2")
-    px, py = F.col("px"), F.col("py")
     if query_map_id == 0:
-        in_x = (px > x_min) & (px <= x_max)
+        in_x = "px > least(x1, x2) AND px <= greatest(x1, x2)"
+        neg = "-"
     else:
-        in_x = (px >= x_min) & (px < x_max)
-    s = px * F.col("a") + py * F.col("b") + F.col("c")
-    sos_a = -F.col("a") if query_map_id == 0 else F.col("a")
-    sos_b = -F.col("b") if query_map_id == 0 else F.col("b")
-    s_eff = F.when(s != 0, s).when(F.col("a") != 0, sos_a).otherwise(sos_b)
-    return cand.filter(in_x & (s_eff < 0))
+        in_x = "px >= least(x1, x2) AND px < greatest(x1, x2)"
+        neg = ""
+    s = "px * a + py * b + c"
+    return f"{in_x} AND CASE WHEN {s} != 0 THEN {s} WHEN a != 0 THEN {neg}a ELSE {neg}b END < 0"
 
 
 class PipIndex:
@@ -165,7 +158,7 @@ class PipIndex:
         # / [x_min, x_max) is empty when x1 == x2 (reference
         # src/algo/pip.h:44-46 "this also eliminates vertical edges").
         # Dropping them up front keeps grid columns sparse.
-        self.base_edges = base_edges.filter(F.col("x1") != F.col("x2"))
+        self.base_edges = base_edges.filter("x1 != x2")
         # long-edge pre-split (plans/cells.py): fragments may duplicate a
         # (cell, eid) row at seams — harmless for PIP, whose per-point
         # min_by argmin and acceptance guard are duplicate-insensitive
@@ -192,7 +185,7 @@ class PipIndex:
             self._est_rows = stats[3] if k else stats[2]
         self.edge_cells = (
             explode_edges_to_cells(self.base_edges, grid, k)
-            .select(
+            .selectExpr(
                 "cx", "cy", "eid", "x1", "y1", "x2", "y2", "a", "b", "c",
                 "left_polygon_id", "right_polygon_id",
             )
@@ -203,9 +196,8 @@ class PipIndex:
         # .distinct() here would just add a second full shuffle of the
         # edge-cells frame to the index build
         self.col_cells = (
-            self.edge_cells.select("cx", "cy")
-            .groupBy("cx")
-            .agg(F.array_sort(F.collect_set("cy")).alias("cys"))
+            self.edge_cells.groupBy("cx")
+            .agg(F.expr("array_sort(collect_set(cy)) AS cys"))
             .persist()
         )
 
@@ -277,34 +269,37 @@ def _argmin_in_cells(src: DataFrame, index: PipIndex, query_map_id: int,
     on (cx, cy), filter, argmin. Returns (point_id, eid, face_id[, band_top,
     x/y payload]) — one row per point that has any candidate."""
     cand = (
-        src.withColumn("band_cy", F.explode(cells_col))
-        .join(
-            index.joinable_cells(),
-            (F.col("pcx") == F.col("cx")) & (F.col("band_cy") == F.col("cy")),
-            "inner",
-        )
+        src.selectExpr("*", f"explode({cells_col}) AS band_cy")
+        .join(index.joinable_cells(), F.expr("pcx = cx AND band_cy = cy"), "inner")
+        .filter(_candidate_filter_sql(query_map_id))
+        .selectExpr("*", "-a * px - c AS n_")
     )
-    cand = _candidate_filter(cand, query_map_id).withColumn(
-        "n_", -F.col("a") * F.col("px") - F.col("c")
+    payload = (
+        "eid, x1, y1, x2, y2, a, b, c, px, left_polygon_id, right_polygon_id"
+        + (", band_top" if with_guard else "")
     )
-    payload = [
-        "eid", "x1", "y1", "x2", "y2", "a", "b", "c", "px",
-        "left_polygon_id", "right_polygon_id",
-    ]
-    if with_guard:
-        payload.append("band_top")
     best = cand.groupBy("point_id").agg(
-        F.min_by(F.struct(*payload), _argmin_key(query_map_id)).alias("e")
+        F.expr(f"min_by(struct({payload}), {_argmin_key_sql(query_map_id)}) AS e")
     )
-    return best.select("point_id", "e.*")
+    return best.selectExpr("point_id", "e.*")
 
 
-def _face_column():
-    """Hit edge's face (reference src/map/map.h:79-87): right_polygon_id if
-    p1.x < p2.x in chain order, else left_polygon_id."""
-    return F.when(
-        F.col("x1") < F.col("x2"), F.col("right_polygon_id")
-    ).otherwise(F.col("left_polygon_id"))
+#: hit edge's face (reference src/map/map.h:79-87): right_polygon_id if
+#: p1.x < p2.x in chain order, else left_polygon_id
+_FACE_SQL = "CASE WHEN x1 < x2 THEN right_polygon_id ELSE left_polygon_id END"
+
+#: (point_id, closest_eid, face_id) of an argmin row
+_HIT_COLS = ("point_id", "eid AS closest_eid", f"{_FACE_SQL} AS face_id")
+
+
+def _accept_sql(grid: GridSpec) -> str:
+    """Acceptance guard (reference src/algo/pip.h:98-114, band
+    generalization): the band argmin is final iff the edge's high end or
+    its ray crossing lies within the searched band; both cell calcs in
+    double, as the reference does."""
+    cell_of_ymax = grid.cell_of_sql("greatest(y1, y2)")
+    cell_of_xsect = grid.cell_of_sql("CAST(-a * px - c AS DOUBLE) / b")
+    return f"{cell_of_ymax} <= band_top OR {cell_of_xsect} <= band_top"
 
 
 def pip_locate(
@@ -343,18 +338,14 @@ def pip_locate(
         if caches is not None:
             caches.append(index)
 
-    pts = prepare_query_points(points, scaling, grid, x="x", y="y").select(
-        F.col(point_id).alias("point_id"), "px", "py", "pcx", "pcy"
-    )
+    pts = prepare_query_points(points, scaling, grid, point_id=point_id)
 
     if mode == "walk":
         hits = _pip_walk(pts, index, query_map_id, max_rounds, skip_empty_cells, grid)
     else:
         # attach the remaining column (non-empty cells at/above the point)
-        stepped = (
-            pts.join(index.skipmap_joinable(), F.col("pcx") == F.col("cx"), "left")
-            .withColumn("cands", F.filter("cys", lambda c: c >= F.col("pcy")))
-            .select("point_id", "px", "py", "pcx", "pcy", "cands")
+        stepped = pts.join(index.skipmap_joinable(), F.expr("pcx = cx"), "left").selectExpr(
+            "point_id", "px", "py", "pcx", "pcy", "filter(cys, c -> c >= pcy) AS cands"
         )
         if mode == "auto":
             # both the banded pass and the completion pass consume stepped;
@@ -367,58 +358,33 @@ def pip_locate(
             if caches is not None:
                 caches.append(stepped)
         if mode == "single":
-            src = stepped.filter(F.size("cands") > 0)
+            src = stepped.filter("size(cands) > 0")
             hits = _argmin_in_cells(src, index, query_map_id, "cands", False)
-            hits = hits.select("point_id", F.col("eid").alias("closest_eid"),
-                               _face_column().alias("face_id"))
+            hits = hits.selectExpr(*_HIT_COLS)
         else:  # auto: one guarded band round + whole-column completion
-            banded = (
-                stepped.filter(F.size("cands") > 0)
-                .withColumn("band", F.slice("cands", 1, band0))
-                .withColumn("band_top", F.element_at("band", -1))
+            band = f"slice(cands, 1, {band0})"
+            banded = stepped.filter("size(cands) > 0").selectExpr(
+                "*", f"{band} AS band", f"element_at({band}, -1) AS band_top"
             )
             bestA = _argmin_in_cells(banded, index, query_map_id, "band", True)
-            # acceptance guard (reference src/algo/pip.h:98-114, band
-            # generalization): the band argmin is final iff the edge's high
-            # end or its ray crossing lies within the searched band; both
-            # cell calcs in double, as the reference does
-            y_max = F.greatest("y1", "y2")
-            cs = grid.cell_scale
-            cell_of_ymax = ((y_max - F.lit(INTERNAL_MIN)) * F.lit(cs)).cast("int")
-            xsect_yd = (-F.col("a") * F.col("px") - F.col("c")).cast("double") / F.col("b")
-            cell_of_xsect = ((xsect_yd - F.lit(INTERNAL_MIN)) * F.lit(cs)).cast("int")
             # persist (not an eager checkpoint): both consumers below —
             # the anti-join and the final union — reuse the one cached
             # computation with NO intermediate job and no serial disk
             # write; at cluster scale the band pass stays a fully
             # parallel stage
-            accepted = (
-                bestA.filter(
-                    (cell_of_ymax <= F.col("band_top"))
-                    | (cell_of_xsect <= F.col("band_top"))
-                )
-                .select("point_id", F.col("eid").alias("closest_eid"),
-                        _face_column().alias("face_id"))
-                .persist()
-            )
+            accepted = bestA.filter(_accept_sql(grid)).selectExpr(*_HIT_COLS).persist()
             if caches is not None:
                 caches.append(accepted)
             # completion: unresolved points join their whole remaining
             # column — the global argmin there needs no guard (a rejected
             # band argmin re-registers at its crossing cell above the band)
-            rest = stepped.join(accepted.select("point_id"), "point_id", "left_anti")
-            rest = rest.filter(F.size("cands") > 0)
+            rest = stepped.join(accepted.selectExpr("point_id"), "point_id", "left_anti")
+            rest = rest.filter("size(cands) > 0")
             bestB = _argmin_in_cells(rest, index, query_map_id, "cands", False)
-            bestB = bestB.select("point_id", F.col("eid").alias("closest_eid"),
-                                 _face_column().alias("face_id"))
-            hits = accepted.unionByName(bestB)
+            hits = accepted.unionByName(bestB.selectExpr(*_HIT_COLS))
 
-    out = pts.select("point_id").join(hits, "point_id", "left")
-    return out.select(
-        "point_id",
-        "closest_eid",
-        F.coalesce(F.col("face_id"), F.lit(0)).alias("face_id"),
-    )
+    out = pts.selectExpr("point_id").join(hits, "point_id", "left")
+    return out.selectExpr("point_id", "closest_eid", "coalesce(face_id, 0) AS face_id")
 
 
 def _pip_walk(
@@ -439,7 +405,6 @@ def _pip_walk(
     results = []
     if max_rounds is None:
         max_rounds = grid.grid_size + 1
-    cell_scale = grid.cell_scale
 
     band0, band_max = 4, 64
     for rnd in range(max_rounds):
@@ -475,20 +440,8 @@ def _pip_walk(
         # same explode/join/filter/argmin as the auto path — one shared
         # implementation so an SoS or payload fix can never diverge
         best = _argmin_in_cells(nxt, index, query_map_id, "band", True)
-        y_max = F.greatest("y1", "y2")
-        cell_of_ymax = ((y_max - F.lit(INTERNAL_MIN)) * F.lit(cell_scale)).cast("int")
-        xsect_yd = (-F.col("a") * F.col("px") - F.col("c")).cast("double") / F.col("b")
-        cell_of_xsect = ((xsect_yd - F.lit(INTERNAL_MIN)) * F.lit(cell_scale)).cast("int")
-        accepted = best.filter(
-            (cell_of_ymax <= F.col("band_top")) | (cell_of_xsect <= F.col("band_top"))
-        ).localCheckpoint(eager=True)
-        results.append(
-            accepted.select(
-                "point_id",
-                F.col("eid").alias("closest_eid"),
-                _face_column().alias("face_id"),
-            )
-        )
+        accepted = best.filter(_accept_sql(grid)).localCheckpoint(eager=True)
+        results.append(accepted.selectExpr(*_HIT_COLS))
         # unresolved: no accepted best this round -> advance past the band;
         # checkpointing the (small) next frontier keeps per-round IO
         # proportional to what is left

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import with_cell_bbox
+from rayjoin_spark.plans.cells import explode_edges_to_cells
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 
@@ -115,10 +115,7 @@ def owned_candidates(edges: DataFrame, rects: DataFrame, grid: GridSpec) -> Data
     covered cells, equi-join on the cell, and each (edge, rect) pair
     survives only in the lexicographically smallest cell both cover
     (min-shared-cell ownership — zero-shuffle dedup, no distinct)."""
-    ec = with_cell_bbox(edges, grid)
-    ec = ec.withColumn("cx", F.explode(F.sequence("ix1", "ix2"))).withColumn(
-        "cy", F.explode(F.sequence("iy1", "iy2"))
-    )
+    ec = explode_edges_to_cells(edges, grid)
     rc = _rect_cells(rects, grid)
     return ec.join(rc, ["cx", "cy"], "inner").filter(
         (F.col("cx") == F.greatest("ix1", "rix1"))

@@ -43,21 +43,24 @@ def cell_of(grid: GridSpec, col):
     return grid.cell_of(col)
 
 
+def _cell_rect_sql(grid: GridSpec, lo_x: str, hi_x: str, lo_y: str, hi_y: str) -> list[str]:
+    """ix1, ix2, iy1, iy2 projections: the cells of a box's corners, given
+    as SQL text (cell_of is monotone, so the cell of the low corner is the
+    least covered cell)."""
+    return [
+        f"{grid.cell_of_sql(v)} AS {name}"
+        for v, name in ((lo_x, "ix1"), (hi_x, "ix2"), (lo_y, "iy1"), (hi_y, "iy2"))
+    ]
+
+
 def with_cell_bbox(edges: DataFrame, grid: GridSpec) -> DataFrame:
     """Add the covered-cell rectangle [ix1,ix2] x [iy1,iy2] of each edge's bbox
     (conservative over-approximation, mirroring reference
     src/grid/uniform_grid.h:63-83: candidate generation may over-approximate,
     never under-approximate)."""
-    cx1 = grid.cell_of(F.col("x1"))
-    cx2 = grid.cell_of(F.col("x2"))
-    cy1 = grid.cell_of(F.col("y1"))
-    cy2 = grid.cell_of(F.col("y2"))
-    return (
-        edges.withColumn("ix1", F.least(cx1, cx2))
-        .withColumn("ix2", F.greatest(cx1, cx2))
-        .withColumn("iy1", F.least(cy1, cy2))
-        .withColumn("iy2", F.greatest(cy1, cy2))
-    )
+    return edges.selectExpr("*", *_cell_rect_sql(
+        grid, "least(x1, x2)", "greatest(x1, x2)", "least(y1, y2)", "greatest(y1, y2)"
+    ))
 
 
 def explode_edges_to_cells(
@@ -81,8 +84,8 @@ def explode_edges_to_cells(
         e = _fragment_cell_bboxes(edges, grid, max_cells_per_edge)
     else:
         e = with_cell_bbox(edges, grid)
-    return e.withColumn("cx", F.explode(F.sequence("ix1", "ix2"))).withColumn(
-        "cy", F.explode(F.sequence("iy1", "iy2"))
+    return e.selectExpr("*", "explode(sequence(ix1, ix2)) AS cx").selectExpr(
+        "*", "explode(sequence(iy1, iy2)) AS cy"
     )
 
 
@@ -98,27 +101,21 @@ def _fragment_cell_bboxes(edges: DataFrame, grid: GridSpec, k: int) -> DataFrame
     fragment bbox IS the exact parent bbox (f=0 endpoints are x1 and x2;
     the +-1 widen is clamped away) — the unsplit plan, bit-identical.
     """
-    e = with_cell_bbox(edges, grid)
-    span = F.greatest(F.col("ix2") - F.col("ix1"), F.col("iy2") - F.col("iy1")) + 1
-    e = e.withColumn(
-        "_nf",
-        F.when(span <= k, F.lit(1)).otherwise(F.ceil(span / F.lit(k))).cast("bigint"),
-    ).withColumn("_f", F.explode(F.sequence(F.lit(0).cast("bigint"), F.col("_nf") - 1)))
-    fx0 = F.expr("x1 + ((x2 - x1) * _f) DIV _nf")
-    fx1 = F.expr("x1 + ((x2 - x1) * (_f + 1)) DIV _nf")
-    fy0 = F.expr("y1 + ((y2 - y1) * _f) DIV _nf")
-    fy1 = F.expr("y1 + ((y2 - y1) * (_f + 1)) DIV _nf")
-    lox = F.greatest(F.least(fx0, fx1) - 1, F.least("x1", "x2"))
-    hix = F.least(F.greatest(fx0, fx1) + 1, F.greatest("x1", "x2"))
-    loy = F.greatest(F.least(fy0, fy1) - 1, F.least("y1", "y2"))
-    hiy = F.least(F.greatest(fy0, fy1) + 1, F.greatest("y1", "y2"))
-    return (
-        e.withColumn("ix1", grid.cell_of(lox))
-        .withColumn("ix2", grid.cell_of(hix))
-        .withColumn("iy1", grid.cell_of(loy))
-        .withColumn("iy2", grid.cell_of(hiy))
-        .drop("_nf", "_f")
-    )
+    cols = edges.columns
+    span = "greatest(ix2 - ix1, iy2 - iy1) + 1"
+    e = with_cell_bbox(edges, grid).selectExpr(
+        *cols,
+        f"CAST(CASE WHEN {span} <= {k} THEN 1 ELSE ceil(({span}) / {k}) END AS BIGINT) AS _nf",
+    ).selectExpr("*", "explode(sequence(CAST(0 AS BIGINT), _nf - 1)) AS _f")
+    fx0 = "x1 + ((x2 - x1) * _f) DIV _nf"
+    fx1 = "x1 + ((x2 - x1) * (_f + 1)) DIV _nf"
+    fy0 = "y1 + ((y2 - y1) * _f) DIV _nf"
+    fy1 = "y1 + ((y2 - y1) * (_f + 1)) DIV _nf"
+    lox = f"greatest(least({fx0}, {fx1}) - 1, least(x1, x2))"
+    hix = f"least(greatest({fx0}, {fx1}) + 1, greatest(x1, x2))"
+    loy = f"greatest(least({fy0}, {fy1}) - 1, least(y1, y2))"
+    hiy = f"least(greatest({fy0}, {fy1}) + 1, greatest(y1, y2))"
+    return e.selectExpr(*cols, *_cell_rect_sql(grid, lox, hix, loy, hiy))
 
 
 #: memo for edge_cell_stats keyed on (analyzed-plan semanticHash, schema,
@@ -160,19 +157,21 @@ def edge_cell_stats(
     key = _stats_key(edges, grid, k)
     if key is not None and key in _STATS_MEMO:
         return _STATS_MEMO[key]
-    e = with_cell_bbox(edges, grid)
-    sx = F.col("ix2") - F.col("ix1") + 1
-    sy = F.col("iy2") - F.col("iy1") + 1
-    span = F.greatest(sx, sy)
-    frag_est = F.when(span <= k, sx * sy).otherwise(
-        F.ceil(span / F.lit(k)) * F.least(sx, F.lit(k + 3)) * F.least(sy, F.lit(k + 3))
+    frag_est = (
+        f"CASE WHEN greatest(sx, sy) <= {k} THEN sx * sy "
+        f"ELSE ceil(greatest(sx, sy) / {k}) * least(sx, {k + 3}) * least(sy, {k + 3}) END"
     )
-    row = e.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.max(span), F.lit(0)).alias("mx"),
-        F.coalesce(F.sum(sx * sy), F.lit(0)).alias("eu"),
-        F.coalesce(F.sum(frag_est), F.lit(0)).alias("es"),
-    ).collect()[0]
+    row = (
+        with_cell_bbox(edges, grid)
+        .selectExpr("ix2 - ix1 + 1 AS sx", "iy2 - iy1 + 1 AS sy")
+        .selectExpr(
+            "count(*) AS n",
+            "coalesce(max(greatest(sx, sy)), 0) AS mx",
+            "coalesce(sum(sx * sy), 0) AS eu",
+            f"coalesce(sum({frag_est}), 0) AS es",
+        )
+        .collect()[0]
+    )
     out = (int(row["n"]), int(row["mx"]), int(row["eu"]), int(row["es"]))
     if key is not None:
         if len(_STATS_MEMO) >= _STATS_MEMO_CAP:

@@ -18,7 +18,7 @@ single partition at 100 TB scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rayjoin_spark.plans.scaling import Scaling
@@ -28,8 +28,8 @@ EID_STRIDE_DEFAULT = 1 << 20
 
 def scale_points(points: DataFrame, scaling: Scaling, x: str = "x", y: str = "y") -> DataFrame:
     """Add snapped-integer coords `xi`, `yi` (reference src/map/scaling.h:79-93)."""
-    return points.withColumn("xi", scaling.scale_x(F.col(x))).withColumn(
-        "yi", scaling.scale_y(F.col(y))
+    return points.selectExpr(
+        "*", f"{scaling.scale_x_sql(x)} AS xi", f"{scaling.scale_y_sql(y)} AS yi"
     )
 
 
@@ -53,37 +53,36 @@ def build_edges(
     reference's predicates return false for them anyway
     (src/algo/lsi.h:48-49).
     """
-    pts = scale_points(points, scaling)
-    w = Window.partitionBy("chain_id").orderBy("seq")
+    w = "OVER (PARTITION BY chain_id ORDER BY seq)"
+    # integer line equation ax + by + c = 0, sign-normalized to b >= 0
+    flip = "x2 - x1 < 0"
     e = (
-        pts.select(
+        points.selectExpr(
             "chain_id",
             "seq",
-            F.col("xi").alias("x1"),
-            F.col("yi").alias("y1"),
-            F.lead("xi").over(w).alias("x2"),
-            F.lead("yi").over(w).alias("y2"),
+            f"{scaling.scale_x_sql('x')} AS x1",
+            f"{scaling.scale_y_sql('y')} AS y1",
         )
-        .filter(F.col("x2").isNotNull())
-        .withColumn("eid", F.col("chain_id") * F.lit(eid_stride) + F.col("seq"))
+        .selectExpr("chain_id", "seq", "x1", "y1", f"lead(x1) {w} AS x2", f"lead(y1) {w} AS y2")
+        .filter("x2 IS NOT NULL")
+        .selectExpr(
+            f"chain_id * {eid_stride} + seq AS eid",
+            "chain_id",
+            "seq",
+            "x1",
+            "y1",
+            "x2",
+            "y2",
+            f"CASE WHEN {flip} THEN -(y1 - y2) ELSE y1 - y2 END AS a",
+            f"CASE WHEN {flip} THEN -(x2 - x1) ELSE x2 - x1 END AS b",
+        )
+        .selectExpr("*", "-x1 * a - y1 * b AS c")
+        .filter("a != 0 OR b != 0")
     )
-    # integer line equation ax + by + c = 0, b >= 0
-    a0 = F.col("y1") - F.col("y2")
-    b0 = F.col("x2") - F.col("x1")
-    e = (
-        e.withColumn("a0", a0)
-        .withColumn("b0", b0)
-        .withColumn("flip", F.col("b0") < 0)
-        .withColumn("a", F.when(F.col("flip"), -F.col("a0")).otherwise(F.col("a0")))
-        .withColumn("b", F.when(F.col("flip"), -F.col("b0")).otherwise(F.col("b0")))
-        .withColumn("c", -F.col("x1") * F.col("a") - F.col("y1") * F.col("b"))
-        .drop("a0", "b0", "flip")
-        .filter((F.col("a") != 0) | (F.col("b") != 0))
-    )
-    ch = chains.select("chain_id", "left_polygon_id", "right_polygon_id")
+    ch = chains.selectExpr("chain_id", "left_polygon_id", "right_polygon_id")
     if broadcast_chains:
         ch = F.broadcast(ch)
-    return e.join(ch, "chain_id").select(
+    return e.join(ch, "chain_id").selectExpr(
         "eid",
         "chain_id",
         "seq",

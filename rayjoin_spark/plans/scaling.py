@@ -40,6 +40,12 @@ INTERNAL_MIN = -(1 << 28)
 INTERNAL_RANGE = INTERNAL_MAX - INTERNAL_MIN
 
 
+def _dbl(v: float) -> str:
+    """Spark SQL double literal that parses back to exactly ``v`` (repr is
+    the shortest round-trip form; the D suffix keeps it out of DECIMAL)."""
+    return f"({float(v)!r}D)"
+
+
 @dataclass(frozen=True)
 class Scaling:
     """Affine map double->int grid; mirrors reference src/map/scaling.h:56-71."""
@@ -76,7 +82,16 @@ class Scaling:
         return Scaling(mx0, mx1, my0, my1, rx, ry, dx, dy)
 
     # --- column expressions (C++ cast double->int truncates toward zero;
-    #     Spark CAST(double AS BIGINT) has identical semantics) ---
+    #     Spark CAST(double AS BIGINT) has identical semantics). The SQL
+    #     text forms are what the hot-path operators project in one
+    #     selectExpr; the Column forms are the same arithmetic over the
+    #     same constants, for callers composing Column trees ---
+    def scale_x_sql(self, col: str) -> str:
+        return f"CAST(({col}) * {_dbl(self.rx)} + {_dbl(self.dx)} AS BIGINT)"
+
+    def scale_y_sql(self, col: str) -> str:
+        return f"CAST(({col}) * {_dbl(self.ry)} + {_dbl(self.dy)} AS BIGINT)"
+
     def scale_x(self, col: Column) -> Column:
         return (col * F.lit(self.rx) + F.lit(self.dx)).cast("bigint")
 
@@ -132,6 +147,10 @@ class GridSpec:
     @property
     def cell_scale(self) -> float:
         return float(self.grid_size) / INTERNAL_RANGE * 0.999
+
+    def cell_of_sql(self, col: str) -> str:
+        """SQL text of cell_of over the expression text ``col``."""
+        return f"CAST((({col}) - ({INTERNAL_MIN})) * {_dbl(self.cell_scale)} AS INT)"
 
     def cell_of(self, col: Column) -> Column:
         return ((col - F.lit(INTERNAL_MIN)) * F.lit(self.cell_scale)).cast("int")

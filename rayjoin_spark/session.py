@@ -13,14 +13,38 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: share of physical memory given to the local-mode driver JVM by default
+DRIVER_MEM_SHARE = 0.5
+DRIVER_MEM_MIN_MB = 1024
+
+
+def host_driver_memory() -> str:
+    """Default ``spark.driver.memory``: half the host's physical memory
+    (at least 1 GiB). In local mode the driver JVM is the whole engine."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(DRIVER_MEM_MIN_MB, int(phys_mb * DRIVER_MEM_SHARE))}m"
+
+
 def get_spark(
     app_name: str = "rayjoin_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Local session sized from the host: ``local[os.cpu_count()]`` and a
+    driver heap of half the physical memory, unless $SPARK_GRAFT_CPUS /
+    $SPARK_GRAFT_DRIVER_MEM (or the arguments / ``extra_conf``) say
+    otherwise.
+
+    PySpark's DataFrame call-site capture is OFF by default: with it on,
+    every DataFrame/Column call costs extra py4j round trips (active
+    session, conf read, origin set/clear), which made building one LSI
+    plan cost thousands of JVM calls. Re-enable it when chasing the
+    Python origin of an analysis error:
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+    """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     b = (
@@ -31,7 +55,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -39,6 +64,7 @@ def get_spark(
         # cell joins are pure equi-joins over uniform keys: a shuffled hash
         # join beats sort-merge (no point sorting 1e8 candidate rows)
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -1,6 +1,10 @@
 """LSI join vs the exact Python oracle on the synthetic lattice pair."""
 
+from fractions import Fraction
+
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from rayjoin_spark.plans.layers import build_edges
@@ -8,7 +12,7 @@ from rayjoin_spark.plans.scaling import GridSpec, compute_scaling
 from rayjoin_spark.operators.lsi import lsi_join, with_xsect_point, lsi_candidates, lsi_intersect_filter
 from rayjoin_spark.sources.datagen import lattice_chains, transformed_lattice
 
-from tests.oracle import build_edges_py, lsi_oracle, xsect_point_py
+from tests.oracle import build_edges_py, intersect_test_py, lsi_oracle, xsect_point_py
 
 
 def _collect_layers(spark, m):
@@ -97,3 +101,50 @@ def test_xsect_points_match_oracle(spark):
         assert int(r["num_y"]) * y.denominator == y.numerator * den
         assert abs(r["xsect_xd"] - float(x)) < 1e-6
         assert abs(r["xsect_yd"] - float(y)) < 1e-6
+
+
+#: segment endpoints on a tiny integer lattice, so shared vertices,
+#: T-junctions, collinear overlaps and axis-parallel edges are common
+_coord = st.integers(-3, 3)
+_segment = st.tuples(_coord, _coord, _coord, _coord).filter(lambda s: s[:2] != s[2:])
+_layer = st.lists(_segment, min_size=1, max_size=10)
+
+
+def _snapped_edges(segments, eid0, unit):
+    """Edge rows as plans/layers.build_edges makes them (b >= 0)."""
+    out = []
+    for i, (x1, y1, x2, y2) in enumerate(segments):
+        x1, y1, x2, y2 = x1 * unit, y1 * unit, x2 * unit, y2 * unit
+        a, b = y1 - y2, x2 - x1
+        if b < 0:
+            a, b = -a, -b
+        out.append(dict(eid=eid0 + i, x1=x1, y1=y1, x2=x2, y2=y2, a=a, b=b, c=-x1 * a - y1 * b))
+    return out
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(a=_layer, b=_layer, unit=st.sampled_from([1, 1 << 22]))
+# shared vertex; T-junction; collinear overlap; vertical x horizontal cross
+@example(a=[(0, 0, 2, 2)], b=[(2, 2, 3, 0)], unit=1)
+@example(a=[(0, 0, 2, 0)], b=[(1, 0, 1, 2)], unit=1)
+@example(a=[(0, 0, 3, 0)], b=[(1, 0, 2, 0), (2, 0, 3, 0)], unit=1)
+@example(a=[(1, -2, 1, 2)], b=[(-2, 1, 3, 1), (1, 2, 1, 3)], unit=1 << 22)
+def test_exact_points_equal_clamped_oracle(spark, a, b, unit):
+    """with_xsect_point has no bbox clamp: for every pair the SoS predicate
+    keeps, the exact point already lies in the endpoints' bbox, so the
+    engine's unclamped point equals the oracle's clamped one row for row."""
+    ea_py, eb_py = _snapped_edges(a, 0, unit), _snapped_edges(b, 100, unit)
+    schema = "eid long, x1 long, y1 long, x2 long, y2 long, a long, b long, c long"
+    cols = ["eid", "x1", "y1", "x2", "y2", "a", "b", "c"]
+    ea = spark.createDataFrame([[e[c] for c in cols] for e in ea_py], schema)
+    eb = spark.createDataFrame([[e[c] for c in cols] for e in eb_py], schema)
+    got = sorted(
+        (r["eid_a"], r["eid_b"], Fraction(int(r["num_x"]), int(r["den"])),
+         Fraction(int(r["num_y"]), int(r["den"])))
+        for r in lsi_join(ea, eb, GridSpec(16), with_points=True).collect()
+    )
+    want = sorted(
+        (e1["eid"], e2["eid"], *xsect_point_py(e1, e2))
+        for e1 in ea_py for e2 in eb_py if intersect_test_py(e1, e2)
+    )
+    assert got == want

@@ -157,3 +157,60 @@ def test_new_ops_plans_no_python_hot_path(spark):
 
     out = nearest_edge(pdf, edf, Scaling.identity(), GridSpec(8))
     assert "BatchEvalPython" not in _plan(out) and "ArrowEvalPython" not in _plan(out)
+
+
+def _jvm_calls(spark, build):
+    """py4j commands ``build()`` sends from this thread, not counting the
+    object-release messages py4j's finalizer thread sends on its own."""
+    import threading
+
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me, n = threading.get_ident(), [0]
+
+    def counted(command, *args, **kwargs):
+        if threading.get_ident() == me and not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            n[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        client.send_command = send
+    return n[0]
+
+
+#: JVM round trips allowed for BUILDING (not running) one lazy plan on the
+#: m=4 lattice: ~1.5x the measured counts (lsi_join 120, pip_locate 177
+#: with call-site capture off and one projection per step; the
+#: Column-tree builders with capture on took 3,234 and 2,349)
+LSI_BUILD_CALLS = 180
+PIP_BUILD_CALLS = 265
+
+
+def test_plan_build_round_trip_budget(spark):
+    """Building an operator's plan costs a few JVM calls, not thousands:
+    the per-query driver constant must not creep back."""
+    from rayjoin_spark.operators.pip import PipIndex, pip_locate
+    from rayjoin_spark.plans.cells import edge_cell_stats
+    from rayjoin_spark.sources.datagen import uniform_points
+
+    ca, pa = lattice_chains(spark, 4)
+    cb, pb = transformed_lattice(spark, 4)
+    scaling = compute_scaling(pa, pb)
+    ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
+    grid = GridSpec(16)
+    # the stats aggs and the index's size probe are jobs, not plan building
+    stats = (edge_cell_stats(ea, grid), edge_cell_stats(eb, grid))
+    idx = PipIndex(ea, grid)
+    idx.joinable_cells(), idx.skipmap_joinable()
+    pts = uniform_points(spark, 100, -0.5, 4.5, -0.5, 4.5, seed=1)
+
+    n_lsi = _jvm_calls(spark, lambda: lsi_join(ea, eb, grid, with_points=True, stats=stats))
+    n_pip = _jvm_calls(spark, lambda: pip_locate(pts, ea, scaling, grid, index=idx))
+    idx.unpersist()
+    assert n_lsi <= LSI_BUILD_CALLS, n_lsi
+    assert n_pip <= PIP_BUILD_CALLS, n_pip
