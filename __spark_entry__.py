@@ -2763,56 +2763,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        "overlay_chains": q_overlay,
-        "overlay_points": q_overlay_points,
-        "burst_detect": q_burst_detect,
-        "weighted_sample": q_weighted_sample,
-        "rect_join": q_rect_join,
-        "skipgram_pairs": q_skipgram_pairs,
-        "tile_quantiles": q_tile_quantiles,
-        "raster_diff": q_raster_diff,
-        "mirror_clusters": q_mirror_clusters,
-        "scc_hosts": q_scc,
-        "nearest_edge": q_nearest_edge,
-        "semdedup": q_semdedup,
-        "winnow_fingerprints": q_winnow,
-        "graph_degrees": q_graph_degrees,
-        "inverted_index": q_inverted_index,
-        "quality_classifier": q_quality_classifier,
-        "url_canonical": q_url_canonical,
-        "anchor_links": q_anchor_links,
-        "anchor_profile": q_anchor_profile,
-        "crawl_priorities": q_crawl_priorities,
-        "latest_snapshot": q_latest_snapshot,
-        "ngram_novelty": q_ngram_novelty,
-        "main_content": q_main_content,
-        "dedup_incremental": q_dedup_incremental,
-        "corpus_card": q_corpus_card,
-        "c4_filter": q_c4_filter,
-        "sitemap_parse": q_sitemap_parse,
-        "robots_sitemaps": q_robots_sitemaps,
-        "cdx_index": q_cdx_index,
-        "wet_roundtrip": q_wet_roundtrip,
-        "recrawl_schedule": q_recrawl_schedule,
-        "crawl_budget": q_crawl_budget,
-        "normalize_text": q_normalize_text,
-        "crawl_diff": q_crawl_diff,
-        "crawl_frontier": q_crawl_frontier,
-        "robots_filter": q_robots_filter,
-        "fetch_schedule": q_fetch_schedule,
-        "tile_pyramid": q_tile_pyramid,
-        "simplify_dp": q_simplify_dp,
-        "cell_hilbert": q_cell_hilbert,
-        "adaptive_cells": q_adaptive_cells,
-        "geohash_encode": q_geohash_encode,
-        "quadkey_encode": q_quadkey,
-        "mercator_tiles": q_mercator_tiles,
-        "tile_bounds": q_tile_bounds,
-        "geo_dist_join": q_geo_dist_join,
-        "event_asof": q_event_asof,
-        "event_interval_join": q_event_interval_join,
-        "boilerplate_frac": q_boilerplate,
-        "domain_topk": q_domain_topk,
         "dedup_keep_best": q_dedup_keep_best,
         "dup_spans": q_dup_spans,
         "source_mix": q_source_mix,
@@ -2854,10 +2804,62 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_payloads": q_tile_payloads,
         "structured_data": q_structured_data,
         "segment_clip": q_segment_clip,
+        "overlay_chains": q_overlay,
+        "overlay_points": q_overlay_points,
+        "nearest_edge": q_nearest_edge,
         "lsi_join": q_lsi,
         "lsi_join_finegrid": q_lsi_finegrid,
         "pip_locate": q_pip,
         "pip_locate_finegrid": q_pip_finegrid,
+        "lsi_join_salted": q_lsi_salted,
+        "xsect_density": q_xsect_density,
+        "burst_detect": q_burst_detect,
+        "weighted_sample": q_weighted_sample,
+        "rect_join": q_rect_join,
+        "skipgram_pairs": q_skipgram_pairs,
+        "tile_quantiles": q_tile_quantiles,
+        "raster_diff": q_raster_diff,
+        "mirror_clusters": q_mirror_clusters,
+        "scc_hosts": q_scc,
+        "semdedup": q_semdedup,
+        "winnow_fingerprints": q_winnow,
+        "graph_degrees": q_graph_degrees,
+        "inverted_index": q_inverted_index,
+        "quality_classifier": q_quality_classifier,
+        "url_canonical": q_url_canonical,
+        "anchor_links": q_anchor_links,
+        "anchor_profile": q_anchor_profile,
+        "crawl_priorities": q_crawl_priorities,
+        "latest_snapshot": q_latest_snapshot,
+        "ngram_novelty": q_ngram_novelty,
+        "main_content": q_main_content,
+        "dedup_incremental": q_dedup_incremental,
+        "corpus_card": q_corpus_card,
+        "c4_filter": q_c4_filter,
+        "sitemap_parse": q_sitemap_parse,
+        "robots_sitemaps": q_robots_sitemaps,
+        "cdx_index": q_cdx_index,
+        "wet_roundtrip": q_wet_roundtrip,
+        "recrawl_schedule": q_recrawl_schedule,
+        "crawl_budget": q_crawl_budget,
+        "normalize_text": q_normalize_text,
+        "crawl_diff": q_crawl_diff,
+        "crawl_frontier": q_crawl_frontier,
+        "robots_filter": q_robots_filter,
+        "fetch_schedule": q_fetch_schedule,
+        "tile_pyramid": q_tile_pyramid,
+        "simplify_dp": q_simplify_dp,
+        "cell_hilbert": q_cell_hilbert,
+        "adaptive_cells": q_adaptive_cells,
+        "geohash_encode": q_geohash_encode,
+        "quadkey_encode": q_quadkey,
+        "mercator_tiles": q_mercator_tiles,
+        "tile_bounds": q_tile_bounds,
+        "geo_dist_join": q_geo_dist_join,
+        "event_asof": q_event_asof,
+        "event_interval_join": q_event_interval_join,
+        "boilerplate_frac": q_boilerplate,
+        "domain_topk": q_domain_topk,
         "grid_cell_counts": q_grid_cells,
         "cell_workload_hist": q_cell_workload,
         "tile_counts": q_tiles,
@@ -2899,12 +2901,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dwell_segments": q_dwell_segments,
         "union_area": q_union_area,
         "interval_merge": q_interval_merge,
-        "xsect_density": q_xsect_density,
         "reciprocity": q_reciprocity,
         "assortativity": q_assortativity,
         "closest_pair": q_closest_pair,
         "local_moran": q_local_moran,
-        "lsi_join_salted": q_lsi_salted,
         "cell_morton": q_cell_morton,
         "event_rollup": q_event_rollup,
         "event_sessions": q_event_sessions,

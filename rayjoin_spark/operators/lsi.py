@@ -35,11 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import (
-    SPLIT_CELLS_DEFAULT,
-    edge_cell_stats,
-    explode_edges_to_cells,
-)
+from rayjoin_spark.plans.cells import explode_edges_to_cells, layer_split
 from rayjoin_spark.plans.scaling import GridSpec
 
 _EDGE_COLS = ["eid", "x1", "y1", "x2", "y2", "a", "b", "c", "ix1", "iy1"]
@@ -93,34 +89,38 @@ def _lsi_predicate_sql() -> str:
 _LSI_PREDICATE_SQL = _lsi_predicate_sql()
 
 
-def lsi_candidates(
-    edges_a: DataFrame,
-    edges_b: DataFrame,
-    grid: GridSpec,
-    split_long_edges: int | str | None = "auto",
-) -> DataFrame:
-    """Candidate pairs sharing >=1 grid cell (before the exact test),
-    deduped by min-shared-cell ownership.
+def _owned_pairs(
+    edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec, join=None
+) -> tuple[DataFrame, bool]:
+    """The one cell-join core: explode each side (long-edge split decided
+    per side by layer_split), suffix its columns, pin the join to
+    sort-merge when the estimated exploded rows pass the broadcast guard,
+    equi-join on the cell and keep each pair in its min shared cell.
 
-    ``split_long_edges`` mirrors lsi_join's long-edge pre-split decision
-    ('auto' runs the same cheap span agg) so this generator — and the
-    lsi_stats diagnostic built on it — stays LINEAR in an edge's cell
-    span; without it the diagnostic would hit the quadratic bbox explode
-    on exactly the fine-grid inputs it exists to diagnose. When splitting
-    is active a pair may survive ownership in several fragment cells;
+    ``join(cells_a, cells_b)`` replaces the plain (cx, cy) inner join (the
+    salted join of plans/skew.py). Returns (pairs, split): when either side
+    is split a pair may survive ownership in several fragment cells, so
+    consumers needing unique pairs dedup by (eid_a, eid_b)."""
+    k_a, est_a = layer_split(edges_a, grid)
+    k_b, est_b = layer_split(edges_b, grid)
+    ca = _side(explode_edges_to_cells(edges_a, grid, k_a), "a")
+    cb = _side(explode_edges_to_cells(edges_b, grid, k_b), "b")
+    if est_a + est_b > BROADCAST_GUARD_ROWS:
+        ca, cb = ca.hint("merge"), cb.hint("merge")
+    j = join(ca, cb) if join else ca.join(cb, ["cx", "cy"], "inner")
+    return j.filter(_OWNER_SQL), bool(k_a or k_b)
+
+
+def lsi_candidates(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> DataFrame:
+    """Candidate pairs sharing >=1 grid cell (before the exact test),
+    deduped by min-shared-cell ownership — the cell-join core's output.
+
+    The long-edge split keeps this generator (and the lsi_stats diagnostic
+    built on it) LINEAR in an edge's cell span at fine grids. When a side
+    is split a pair may survive ownership in several fragment cells;
     consumers needing unique pairs dedup by (eid_a, eid_b) (lsi_stats
     counts distinct pairs explicitly)."""
-    k = None
-    if split_long_edges == "auto":
-        (_, span_a, _, _) = edge_cell_stats(edges_a, grid)
-        (_, span_b, _, _) = edge_cell_stats(edges_b, grid)
-        if max(span_a, span_b) > SPLIT_CELLS_DEFAULT:
-            k = SPLIT_CELLS_DEFAULT
-    elif split_long_edges:
-        k = int(split_long_edges)
-    ca = _side(explode_edges_to_cells(edges_a, grid, k), "a")
-    cb = _side(explode_edges_to_cells(edges_b, grid, k), "b")
-    return ca.join(cb, ["cx", "cy"], "inner").filter(_OWNER_SQL)
+    return _owned_pairs(edges_a, edges_b, grid)[0]
 
 
 def lsi_intersect_filter(j: DataFrame) -> DataFrame:
@@ -189,14 +189,22 @@ def lsi_stats(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec | None = No
     )
 
 
+def _matched_pairs(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec, join=None) -> DataFrame:
+    """Unique exactly-intersecting pairs: the core's owned candidates
+    through the SoS predicate, deduped by (eid_a, eid_b) only when a side
+    was split — an output-sized shuffle that exists only then. Fragment
+    copies of a pair carry identical geometry columns, so any survivor is
+    exact."""
+    pairs, split = _owned_pairs(edges_a, edges_b, grid, join)
+    out = lsi_intersect_filter(pairs)
+    return out.dropDuplicates(["eid_a", "eid_b"]) if split else out
+
+
 def lsi_join(
     edges_a: DataFrame,
     edges_b: DataFrame,
     grid: GridSpec | None = None,
     with_points: bool = False,
-    broadcast: str | None = None,
-    split_long_edges: int | str | None = "auto",
-    stats: tuple | None = None,
 ) -> DataFrame:
     """The LSI spatial theta join: equi-join on grid cell + exact predicate.
 
@@ -206,49 +214,15 @@ def lsi_join(
     grid : grid spec (cell size tunes candidate count vs join fan-out;
         reference default 2048, experiments 15000 — src/flags.cc:6)
     with_points : also emit the exact intersection point columns
-    broadcast : 'a' | 'b' | None — broadcast one side's exploded cells
-        (use when one layer is small; otherwise AQE decides)
-    split_long_edges : 'auto' (default) | int k | None. 'auto' runs one
-        cheap agg per side; when the longest edge spans more than
-        SPLIT_CELLS_DEFAULT cells the bbox explode switches to parametric
-        fragments (plans/cells.py) and matched pairs are deduped by
-        (eid_a, eid_b) — an output-sized shuffle that only exists when
-        splitting is active. 'auto' also arms the explode-aware broadcast
-        guard: above BROADCAST_GUARD_ROWS estimated exploded rows the join
-        is hinted to sort-merge so AQE cannot broadcast-convert an
-        exploded side. An int forces that fragment length; None disables
-        both (round-3 behavior, quadratic for long edges at fine grids).
-    stats : optional precomputed (edge_cell_stats(edges_a, grid),
-        edge_cell_stats(edges_b, grid)) so callers that already ran the
-        aggs (overlay shares them with its PipIndexes) skip the two jobs.
+
+    Each side's long-edge split comes from plans.cells.layer_split (one
+    cheap agg per DataFrame object and grid): a side whose longest edge
+    spans more than the fragment length explodes as parametric
+    fragments, and above BROADCAST_GUARD_ROWS estimated exploded rows the
+    join is hinted to sort-merge so AQE cannot broadcast-convert an
+    exploded side.
     """
-    grid = grid or GridSpec()
-    k = None
-    guard = False
-    if split_long_edges == "auto":
-        if stats is None:
-            stats = (edge_cell_stats(edges_a, grid), edge_cell_stats(edges_b, grid))
-        (_, span_a, eu_a, es_a), (_, span_b, eu_b, es_b) = stats
-        if max(span_a, span_b) > SPLIT_CELLS_DEFAULT:
-            k = SPLIT_CELLS_DEFAULT
-            guard = (es_a + es_b) > BROADCAST_GUARD_ROWS
-        else:
-            guard = (eu_a + eu_b) > BROADCAST_GUARD_ROWS
-    elif split_long_edges:
-        k = int(split_long_edges)
-    ca = _side(explode_edges_to_cells(edges_a, grid, k), "a")
-    cb = _side(explode_edges_to_cells(edges_b, grid, k), "b")
-    if broadcast == "a":
-        ca = F.broadcast(ca)
-    elif broadcast == "b":
-        cb = F.broadcast(cb)
-    elif guard:
-        ca, cb = ca.hint("merge"), cb.hint("merge")
-    out = lsi_intersect_filter(ca.join(cb, ["cx", "cy"], "inner").filter(_OWNER_SQL))
-    if k:
-        # fragment pairs can re-meet in several sub-bboxes; all copies of a
-        # pair carry identical geometry columns, so any survivor is exact
-        out = out.dropDuplicates(["eid_a", "eid_b"])
+    out = _matched_pairs(edges_a, edges_b, grid or GridSpec())
     if with_points:
         return with_xsect_point(out).selectExpr(
             "eid_a", "eid_b", "num_x", "num_y", "den", "xsect_xd", "xsect_yd"

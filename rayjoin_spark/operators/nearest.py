@@ -46,11 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import (
-    SPLIT_CELLS_DEFAULT,
-    edge_cell_stats,
-    explode_edges_to_cells,
-)
+from rayjoin_spark.plans.cells import explode_edges_to_cells, layer_split
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 #: 2^59 as a decimal literal for the fractional limb shifts
@@ -152,15 +148,12 @@ def nearest_edge(
         max_rounds = 64
     cell_w = int(1.0 / grid.cell_scale)
 
-    # long-edge pre-split, same 'auto' decision as lsi_join / PipIndex:
-    # a long diagonal segment at a fine grid would otherwise explode its
-    # bbox QUADRATICALLY (plans/cells.py module doc). dropDuplicates
-    # below already absorbs the fragment-seam duplicate (cell, eid) rows.
-    k = None
-    (_, span, est_u, est_s) = edge_cell_stats(edges, grid)
-    if span > SPLIT_CELLS_DEFAULT:
-        k = SPLIT_CELLS_DEFAULT
-    est_rows = est_s if k else est_u
+    # long-edge pre-split, the same layer_split decision as lsi_join /
+    # PipIndex: a long diagonal segment at a fine grid would otherwise
+    # explode its bbox QUADRATICALLY (plans/cells.py module doc).
+    # dropDuplicates below absorbs the fragment-seam duplicate (cell, eid)
+    # rows.
+    k, est_rows = layer_split(edges, grid)
 
     # round-0 radius: shared circle-Poisson + candidate-volume-cap rule
     # (plans/cells.round0_radius with k=1 — the nearest query resolves on

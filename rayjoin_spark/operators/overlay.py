@@ -58,7 +58,6 @@ from pyspark.sql import functions as F
 
 from rayjoin_spark.operators.lsi import lsi_join
 from rayjoin_spark.operators.pip import PipIndex, pip_locate
-from rayjoin_spark.plans.cells import edge_cell_stats
 from rayjoin_spark.plans.layers import build_edges, EID_STRIDE_DEFAULT
 from rayjoin_spark.plans.ranking import ordered_index
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
@@ -188,26 +187,17 @@ def overlay(
 
     _mark("edges", edges_a, edges_b)
 
-    # one long-edge/guard stats agg per side, shared by the LSI join and
-    # both PIP indexes (each would otherwise run its own job)
-    stats_a = edge_cell_stats(edges_a, grid)
-    stats_b = edge_cell_stats(edges_b, grid)
-
     # --- phase 1: LSI with exact points (shared by both maps) ---
     xs = (
         prebuilt_xs
         if prebuilt_xs is not None
-        else lsi_join(
-            edges_a, edges_b, grid, with_points=True, stats=(stats_a, stats_b)
-        )
+        else lsi_join(edges_a, edges_b, grid, with_points=True)
     ).persist()
     _mark("lsi", xs)
 
-    # PIP indexes over each layer, shared by both locates against it
-    idx = [
-        PipIndex(edges_a, grid, stats=stats_a),
-        PipIndex(edges_b, grid, stats=stats_b),
-    ]
+    # PIP indexes over each layer, shared by both locates against it; they
+    # reuse the long-edge stats the LSI join took of the same frames
+    idx = [PipIndex(edges_a, grid), PipIndex(edges_b, grid)]
 
     def _one_side(im: int) -> DataFrame:
         chains, points, edges, other_edges = [

@@ -56,11 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import (
-    SPLIT_CELLS_DEFAULT,
-    edge_cell_stats,
-    explode_edges_to_cells,
-)
+from rayjoin_spark.plans.cells import explode_edges_to_cells, layer_split
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 # Exact total-order key for xsect_y = n_/b (b > 0), where n_ = -a*px - c,
@@ -144,9 +140,7 @@ class PipIndex:
 
     def __init__(self, base_edges: DataFrame, grid: GridSpec,
                  broadcast_max_rows: int = 2_000_000,
-                 skipmap_max_entries: int = 4_000_000,
-                 split_long_edges: int | str | None = "auto",
-                 stats: tuple | None = None):
+                 skipmap_max_entries: int = 4_000_000):
         self.grid = grid
         self._bcast_max = broadcast_max_rows
         self._skipmap_max = skipmap_max_entries
@@ -154,35 +148,20 @@ class PipIndex:
         self._skipmap = None
         self._n_rows = None
         self._n_cells = None
+        # long-edge pre-split (plans/cells.py): fragments may duplicate a
+        # (cell, eid) row at seams — harmless for PIP, whose per-point
+        # min_by argmin and acceptance guard are duplicate-insensitive.
+        # Decided on the UNFILTERED layer, so an lsi_join over the same
+        # frame shares the stats agg; est_rows then over-counts the
+        # vertical edges dropped below, which keeps it an upper bound on
+        # edge-cell rows — the broadcast decisions below skip the
+        # exact-size job when the bound is already under the cap.
+        k, self._est_rows = layer_split(base_edges, grid)
         # vertical edges can never qualify: the SoS x-interval (x_min, x_max]
         # / [x_min, x_max) is empty when x1 == x2 (reference
         # src/algo/pip.h:44-46 "this also eliminates vertical edges").
         # Dropping them up front keeps grid columns sparse.
         self.base_edges = base_edges.filter("x1 != x2")
-        # long-edge pre-split (plans/cells.py): fragments may duplicate a
-        # (cell, eid) row at seams — harmless for PIP, whose per-point
-        # min_by argmin and acceptance guard are duplicate-insensitive
-        # `stats` = a precomputed edge_cell_stats(base_edges, grid) tuple
-        # (overlay shares one agg between its lsi_join and PipIndexes);
-        # NOTE it describes base_edges BEFORE the vertical-edge filter —
-        # fine for the split decision (a conservative over-estimate)
-        k = None
-        if split_long_edges == "auto":
-            if stats is None:
-                stats = edge_cell_stats(self.base_edges, grid)
-            if stats[1] > SPLIT_CELLS_DEFAULT:
-                k = SPLIT_CELLS_DEFAULT
-        elif split_long_edges:
-            k = int(split_long_edges)
-        # upper bound on edge-cell rows from the shared stats agg (exact
-        # bbox-explode total pre-vertical-filter; the split estimate is
-        # itself an upper bound): lets the broadcast decisions below skip
-        # the exact-size job when the bound is already under the cap.
-        # Only valid in auto mode — stats' split estimate assumes the
-        # default fragment length, not an explicit override.
-        self._est_rows = None
-        if stats is not None and split_long_edges == "auto":
-            self._est_rows = stats[3] if k else stats[2]
         self.edge_cells = (
             explode_edges_to_cells(self.base_edges, grid, k)
             .selectExpr(
@@ -220,11 +199,7 @@ class PipIndex:
         (bound above cap) pays the exact-size agg — where its one job is
         noise next to the query itself."""
         if self._joinable is None:
-            if (
-                self._bcast_max
-                and self._est_rows is not None
-                and self._est_rows <= self._bcast_max
-            ):
+            if self._bcast_max and self._est_rows <= self._bcast_max:
                 n_rows = self._est_rows
             else:
                 n_rows, _ = self._sizes()
@@ -244,11 +219,7 @@ class PipIndex:
         SHARDS the skip map across executors by cx (hash shuffle), the
         gsize>=8k dense-layer path the module docstring promises."""
         if self._skipmap is None:
-            if (
-                self._skipmap_max
-                and self._est_rows is not None
-                and self._est_rows <= self._skipmap_max
-            ):
+            if self._skipmap_max and self._est_rows <= self._skipmap_max:
                 n_cells = self._est_rows  # n_cells <= n_rows <= bound
             else:
                 _, n_cells = self._sizes()

@@ -10,7 +10,7 @@ internally — we never materialize it.
 
 Also provides the per-cell workload metrics the reference exposes as
 histograms (src/grid/uniform_grid.h:360-494), which drive explicit salting
-of hot cells at scale (see operators/skew.py).
+of hot cells at scale (see plans/skew.py).
 
 Long edges at fine grids: the bbox rectangle explode is QUADRATIC in the
 edge's cell span for diagonal edges (a unit lattice diagonal at gsize 15000
@@ -29,13 +29,15 @@ lsi.py does; PIP's min_by argmin is duplicate-insensitive).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rayjoin_spark.plans.scaling import GridSpec
 
-#: default fragment length (in cells) for long-edge pre-splitting; also the
-#: auto-split trigger: spans <= this explode exactly as before
+#: fragment length (in cells) for long-edge pre-splitting; also the split
+#: trigger in layer_split: spans <= this explode exactly as before
 SPLIT_CELLS_DEFAULT = 8
 
 
@@ -118,45 +120,27 @@ def _fragment_cell_bboxes(edges: DataFrame, grid: GridSpec, k: int) -> DataFrame
     return e.selectExpr(*cols, *_cell_rect_sql(grid, lox, hix, loy, hiy))
 
 
-#: memo for edge_cell_stats keyed on (analyzed-plan semanticHash, schema,
-#: gsize, k). A stale or colliding entry steers the auto-split decision and
-#: the explode-aware broadcast guard — heuristics, but the guard is
-#: OOM-protective, so the key includes the full column signature on top of
-#: the 32-bit semanticHash: a wrong hit then needs a same-schema 32-bit
-#: collision within the <=512 live entries (~1e-5 birthday mass), against
-#: plans that in practice differ in relations the hash covers. Caching
-#: across FRESH DataFrame objects carrying the same logical plan (e.g.
-#: sources/derived.edges_a rebuilt per bench repeat) removes the flat
-#: two-extra-jobs constant every split_long_edges='auto' call otherwise
-#: pays (round-4 VERDICT #1).
-_STATS_MEMO: dict[tuple, tuple[int, int, int, int]] = {}
-_STATS_MEMO_CAP = 512
+#: per-DataFrame stats, keyed by the frame object itself, then by gsize.
+#: A DataFrame fixes its file listing when it is analyzed, so an entry is
+#: never staler than the frame it belongs to; a fresh read gets fresh
+#: stats, and a dropped frame drops its entry.
+_STATS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _stats_key(edges: DataFrame, grid: GridSpec, k: int):
-    try:
-        h = edges._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - foreign/mocked DataFrame
-        return None
-    return (int(h), tuple(edges.columns), grid.grid_size, int(k))
-
-
-def edge_cell_stats(
-    edges: DataFrame, grid: GridSpec, k: int = SPLIT_CELLS_DEFAULT
-) -> tuple[int, int, int, int]:
+def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, int]:
     """One cheap narrow agg over the (pre-explode) edge table:
     (n_edges, max_span_cells, est_rows_unsplit, est_rows_split).
 
     est_rows_unsplit = exact total bbox-explode rows; est_rows_split = an
-    upper-bound estimate under max_cells_per_edge=k fragmentation (each
+    upper-bound estimate under SPLIT_CELLS_DEFAULT fragmentation (each
     fragment bbox <= (k+3)^2 cells incl. the +-1 widen and DIV slack).
-    Drives the auto-split decision and the explode-aware broadcast guard in
-    operators/lsi.py and operators/pip.py. Memoized per logical plan
-    (semanticHash) + grid + k — see _STATS_MEMO.
+    Computed once per DataFrame object and grid (see _STATS); read
+    through layer_split.
     """
-    key = _stats_key(edges, grid, k)
-    if key is not None and key in _STATS_MEMO:
-        return _STATS_MEMO[key]
+    per_grid = _STATS.setdefault(edges, {})
+    if grid.grid_size in per_grid:
+        return per_grid[grid.grid_size]
+    k = SPLIT_CELLS_DEFAULT
     frag_est = (
         f"CASE WHEN greatest(sx, sy) <= {k} THEN sx * sy "
         f"ELSE ceil(greatest(sx, sy) / {k}) * least(sx, {k + 3}) * least(sy, {k + 3}) END"
@@ -173,11 +157,23 @@ def edge_cell_stats(
         .collect()[0]
     )
     out = (int(row["n"]), int(row["mx"]), int(row["eu"]), int(row["es"]))
-    if key is not None:
-        if len(_STATS_MEMO) >= _STATS_MEMO_CAP:
-            _STATS_MEMO.clear()
-        _STATS_MEMO[key] = out
+    per_grid[grid.grid_size] = out
     return out
+
+
+def layer_split(edges: DataFrame, grid: GridSpec) -> tuple[int | None, int]:
+    """The long-edge decision for one edge layer at one grid: (k, est_rows).
+
+    k = SPLIT_CELLS_DEFAULT when the layer's longest edge spans more cells
+    than that (the explode then fragments, see module docstring), else
+    None (the plain bbox explode). est_rows is the upper bound on the
+    exploded rows under that choice — what the broadcast guards compare.
+    Every cell-join consumer (LSI, PIP, nearest edge) decides here.
+    """
+    _, span, est_unsplit, est_split = edge_cell_stats(edges, grid)
+    if span > SPLIT_CELLS_DEFAULT:
+        return SPLIT_CELLS_DEFAULT, est_split
+    return None, est_unsplit
 
 
 def cell_counts(edge_cells: DataFrame) -> DataFrame:

@@ -128,30 +128,21 @@ def lsi_join_salted(
     hot_threshold: int = 1_000_000,
     n_salts: int = 8,
     target_pairs: int | None = None,
-    split_long_edges: int | None = None,
 ):
     """LSI join with explicit hot-cell salting (same output as lsi_join).
 
+    Runs lsi_join's cell-join core (long-edge split, broadcast guard,
+    ownership, exact predicate, split dedup) with the plain cell join
+    swapped for salted_cell_join over the hot cells of the exploded sides.
     ``target_pairs`` switches to workload-proportional salt counts (see
-    salted_cell_join); ``split_long_edges`` applies the fine-grid fragment
-    explode (plans/cells.py) with the same (eid_a, eid_b) output dedup as
-    lsi_join's auto path.
+    salted_cell_join).
     """
-    from rayjoin_spark.operators.lsi import _side, lsi_intersect_filter
-    from rayjoin_spark.plans.cells import explode_edges_to_cells
+    from rayjoin_spark.operators.lsi import _matched_pairs
 
-    eca = explode_edges_to_cells(edges_a, grid, split_long_edges)
-    ecb = explode_edges_to_cells(edges_b, grid, split_long_edges)
-    hot = hot_cells(eca, ecb, hot_threshold)
-    j = salted_cell_join(
-        _side(eca, "a"), _side(ecb, "b"), hot,
-        n_salts=n_salts, target_pairs=target_pairs,
-    )
-    j = j.filter(
-        (F.col("cx") == F.greatest("ix1_a", "ix1_b"))
-        & (F.col("cy") == F.greatest("iy1_a", "iy1_b"))
-    )
-    out = lsi_intersect_filter(j).select("eid_a", "eid_b")
-    if split_long_edges:
-        out = out.dropDuplicates(["eid_a", "eid_b"])
-    return out
+    def join(cells_a, cells_b):
+        return salted_cell_join(
+            cells_a, cells_b, hot_cells(cells_a, cells_b, hot_threshold),
+            n_salts=n_salts, target_pairs=target_pairs,
+        )
+
+    return _matched_pairs(edges_a, edges_b, grid, join).selectExpr("eid_a", "eid_b")

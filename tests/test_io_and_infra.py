@@ -86,6 +86,18 @@ def test_salted_lsi_row_parity(spark):
     got2 = [(r["eid_a"], r["eid_b"]) for r in prop.collect()]
     assert len(got2) == len(set(got2))
     assert set(got2) == plain
+    # fine grid: the m=4 pair's edges span hundreds of cells at gsize
+    # 2048, so the core's long-edge split (and its dedup) fires here too
+    ca, pa = lattice_chains(spark, 4)
+    cb, pb = transformed_lattice(spark, 4)
+    scaling = compute_scaling(pa, pb)
+    ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
+    fine = GridSpec(2048)
+    want = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, fine).collect()}
+    salted = lsi_join_salted(ea, eb, fine, hot_threshold=0, n_salts=4)
+    got3 = [(r["eid_a"], r["eid_b"]) for r in salted.collect()]
+    assert len(got3) == len(set(got3))
+    assert set(got3) == want and want
 
 
 def test_skewed_fixture_salting(spark):

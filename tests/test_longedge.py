@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rayjoin_spark.operators import lsi as lsi_mod
-from rayjoin_spark.operators.lsi import lsi_join
+from rayjoin_spark.operators.lsi import lsi_candidates, lsi_join
 from rayjoin_spark.operators.pip import pip_locate
 from rayjoin_spark.plans.cells import (
     SPLIT_CELLS_DEFAULT,
@@ -56,6 +56,23 @@ def test_fragment_explode_is_linear(spark, layers):
     got_split = explode_edges_to_cells(eb, fine, SPLIT_CELLS_DEFAULT).count()
     assert got_split <= est_split
     assert got_split * 5 < est_unsplit  # the real explode is ~linear in span
+
+
+def test_edge_cell_stats_bound_to_the_frame(spark, tmp_path):
+    # stats belong to one DataFrame object: a fresh read of an overwritten
+    # path gets fresh stats (they steer the OOM-protective broadcast
+    # guard), while a repeat call on the same object runs no job
+    path = str(tmp_path / "edges")
+    grid = GridSpec(16)
+    for m in (4, 8):
+        ca, pa = lattice_chains(spark, m)
+        build_edges(ca, pa, compute_scaling(pa)).write.mode("overwrite").parquet(path)
+        edges = spark.read.parquet(path)
+        assert edge_cell_stats(edges, grid)[0] == edges.count()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    edge_cell_stats(edges, grid)
+    assert set(tracker.getJobIdsForGroup()) == before
 
 
 def test_fragment_explode_covers_edge_cells(spark, layers):
@@ -108,10 +125,11 @@ def test_pip_fine_grid_matches_coarse(spark, layers):
     assert len(want) == 400
 
 
-def test_broadcast_guard_pins_sort_merge(spark, layers, monkeypatch):
+@pytest.mark.parametrize("op", [lsi_join, lsi_candidates])
+def test_broadcast_guard_pins_sort_merge(spark, layers, monkeypatch, op):
     _, ea, eb = layers
     monkeypatch.setattr(lsi_mod, "BROADCAST_GUARD_ROWS", 0)
-    df = lsi_join(ea, eb, GridSpec(64))
+    df = op(ea, eb, GridSpec(64))
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" in analyzed and "merge" in analyzed.lower()
     df.collect()

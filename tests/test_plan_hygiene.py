@@ -203,13 +203,14 @@ def test_plan_build_round_trip_budget(spark):
     scaling = compute_scaling(pa, pb)
     ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
     grid = GridSpec(16)
-    # the stats aggs and the index's size probe are jobs, not plan building
-    stats = (edge_cell_stats(ea, grid), edge_cell_stats(eb, grid))
+    # the stats aggs and the index's size probe are jobs, not plan building;
+    # the stats stay bound to these frame objects for the builds below
+    edge_cell_stats(ea, grid), edge_cell_stats(eb, grid)
     idx = PipIndex(ea, grid)
     idx.joinable_cells(), idx.skipmap_joinable()
     pts = uniform_points(spark, 100, -0.5, 4.5, -0.5, 4.5, seed=1)
 
-    n_lsi = _jvm_calls(spark, lambda: lsi_join(ea, eb, grid, with_points=True, stats=stats))
+    n_lsi = _jvm_calls(spark, lambda: lsi_join(ea, eb, grid, with_points=True))
     n_pip = _jvm_calls(spark, lambda: pip_locate(pts, ea, scaling, grid, index=idx))
     idx.unpersist()
     assert n_lsi <= LSI_BUILD_CALLS, n_lsi
