@@ -7,9 +7,11 @@ it holds k candidates whose k-th smallest exact integer squared distance
 is within the ring's guaranteed-covered radius. Distances are snapped-int
 arithmetic — exact, portable, total-ordered (ties by corpus id).
 
-Scale shape: every round is an equi-join on (cx, cy) against the same
-hash-partitioned corpus-cell table; only unresolved queries survive to the
-next round; lineage is cut per round. Like nearest_edge, rounds batch a
+Scale shape: the rounds are the shared annulus loop
+(plans/cells.annulus_rounds, also behind nearest_edge). Every round is an
+equi-join on the cell against the same corpus-cell table (broadcast when
+small, else persisted and sort-merge pinned); only unresolved queries
+survive to the next round; lineage is cut per round. Rounds batch a
 geometrically growing annulus of Chebyshev rings [lo..hi] with a
 density-derived (and candidate-volume-capped) round-0 radius sized so the
 expected window holds >= ~3k corpus points — the typical query resolves in
@@ -17,8 +19,7 @@ ONE round and the driver-synchronized round count is O(log gsize) worst
 case instead of O(resolution radius). The carried top-k array rides
 through the per-round groupBy as exploded candidate rows (annulus cell
 sets are disjoint across rounds, so a corpus id can never duplicate
-between the carry and the new candidates), replacing the former
-all-queries join-back.
+between the carry and the new candidates).
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rayjoin_spark.plans.cells import annulus_rounds, round0_radius
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 
@@ -37,7 +39,6 @@ def knn_points(
     k: int = 5,
     query_id: str = "point_id",
     corpus_id: str = "corpus_id",
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """Exact k nearest corpus points per query point.
 
@@ -45,131 +46,49 @@ def knn_points(
     Returns (point_id, corpus_id, dist2, rank), rank 1..k by (dist2, id).
     """
     grid = grid or GridSpec(64)
-    if max_rounds is None:
-        # hi doubles per round: generous hard cap
-        max_rounds = 64
-    # guaranteed minimum int-width of a cell (floor of 1/cell_scale)
-    cell_w = int(1.0 / grid.cell_scale)
-
     cp = (
         corpus.select(
             F.col(corpus_id).alias("cid"),
             scaling.scale_x(F.col("x")).alias("cx_i"),
             scaling.scale_y(F.col("y")).alias("cy_i"),
         )
-        .withColumn("ccx", grid.cell_of(F.col("cx_i")))
-        .withColumn("ccy", grid.cell_of(F.col("cy_i")))
-        .persist()
+        .withColumn("icx", grid.cell_of(F.col("cx_i")))
+        .withColumn("icy", grid.cell_of(F.col("cy_i")))
     )
-    # broadcast a small corpus: every ring round becomes a narrow map-side
-    # join (no per-round shuffle of the probe side); large corpora keep the
-    # hash-partitioned shuffle join — the 100 TB path
     n_cp = cp.count()
-    if n_cp <= 2_000_000:
-        cp = F.broadcast(cp)
-
     qp = queries.select(
         F.col(query_id).alias("qid"),
         scaling.scale_x(F.col("x")).alias("qx"),
         scaling.scale_y(F.col("y")).alias("qy"),
-    )
-    active = (
-        qp.withColumn("qcx", grid.cell_of(F.col("qx")))
-        .withColumn("qcy", grid.cell_of(F.col("qy")))
-        .withColumn("best", F.array().cast("array<struct<d:bigint,cid:bigint>>"))
-        .localCheckpoint(eager=True)
+        F.array().cast("array<struct<d:bigint,cid:bigint>>").alias("best"),
     )
     # round-0 radius: shared circle-Poisson + candidate-volume-cap rule
-    # (plans/cells.round0_radius; the count is a cheap scan of the
-    # checkpoint just materialized)
-    from rayjoin_spark.plans.cells import round0_radius
-
     density = max(n_cp, 1) / float(grid.grid_size * grid.grid_size)
-    r0 = round0_radius(density, k, active.count())
-    done = []
 
-    lo, hi = 0, r0
-    for _ in range(max_rounds):
-        probes = (
-            active.withColumn("_dx", F.explode(F.sequence(F.lit(-hi), F.lit(hi))))
-            .withColumn("_dy", F.explode(F.sequence(F.lit(-hi), F.lit(hi))))
-            .filter(F.greatest(F.abs("_dx"), F.abs("_dy")) >= F.lit(lo))
-            .select(
-                "qid",
-                "qx",
-                "qy",
-                "qcx",
-                "qcy",
-                (F.col("qcx") + F.col("_dx")).alias("cx"),
-                (F.col("qcy") + F.col("_dy")).alias("cy"),
-            )
-            .filter(
-                (F.col("cx") >= 0)
-                & (F.col("cx") < grid.grid_size)
-                & (F.col("cy") >= 0)
-                & (F.col("cy") < grid.grid_size)
-            )
-        )
-        cand = probes.join(
-            cp, (F.col("cx") == F.col("ccx")) & (F.col("cy") == F.col("ccy")), "inner"
-        ).select(
-            "qid",
-            "qx",
-            "qy",
-            "qcx",
-            "qcy",
-            F.struct(
-                (
-                    (F.col("cx_i") - F.col("qx")) * (F.col("cx_i") - F.col("qx"))
-                    + (F.col("cy_i") - F.col("qy")) * (F.col("cy_i") - F.col("qy"))
-                ).alias("d"),
-                F.col("cid").alias("cid"),
-            ).alias("cand"),
-        )
-        # carry: the current top-k rides through the SAME groupBy as
-        # exploded candidate rows (annulus cell sets are disjoint across
-        # rounds — no duplicate cids); the outer join on a left-exploded
-        # empty array keeps zero-candidate queries alive with a null cand
-        carry = active.select(
+    def score(j: DataFrame) -> DataFrame:
+        d2 = (F.col("cx_i") - F.col("qx")) * (F.col("cx_i") - F.col("qx")) + (
+            F.col("cy_i") - F.col("qy")
+        ) * (F.col("cy_i") - F.col("qy"))
+        return j.select(
             "qid", "qx", "qy", "qcx", "qcy",
-            F.explode_outer("best").alias("cand"),
+            F.struct(d2.alias("d"), F.col("cid").alias("cid")).alias("cand"),
         )
-        merged = (
-            cand.unionByName(carry)
-            .groupBy("qid")
-            .agg(
-                # collect_list skips the null cand of zero-candidate
-                # queries; their group row survives via the carry row
-                F.slice(F.array_sort(F.collect_list("cand")), 1, k).alias("best"),
-                F.first("qx").alias("qx"),
-                F.first("qy").alias("qy"),
-                F.first("qcx").alias("qcx"),
-                F.first("qcy").alias("qcy"),
-            )
-        )
-        # resolved: k candidates found and the k-th distance is within the
-        # radius guaranteed fully covered by rings 0..hi
-        safe = F.lit((hi * cell_w) * (hi * cell_w))
-        kth = F.element_at("best", k)["d"]
-        # strict <: an unseen point could sit at exactly the covered radius
-        # with a smaller id (tiebreak) — only resolve when strictly inside.
-        # Once hi reaches grid_size the whole grid has been swept: stop.
-        is_done = ((F.size("best") >= k) & (kth < safe)) | F.lit(
-            hi >= grid.grid_size
-        )
-        merged = merged.localCheckpoint(eager=True)
-        done.append(merged.filter(is_done).select("qid", "best"))
-        active = merged.filter(~is_done)
-        if active.isEmpty():
-            active = None
-            break
-        lo, hi = hi + 1, min(2 * hi + 1, grid.grid_size)
 
-    if active is not None:
-        done.append(active.select("qid", "best"))  # corpus exhausted / sparse
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
+    def resolved(safe2):
+        # k candidates found and the k-th strictly inside the covered
+        # radius: an unseen point exactly at that radius could still win
+        # the id tiebreak
+        return (F.size("best") >= k) & (F.element_at("best", k)["d"] < safe2)
+
+    out = annulus_rounds(
+        qp, cp, n_cp, grid, lambda n: round0_radius(density, k, n), score,
+        # the carried top-k rides as exploded candidate rows; explode_outer
+        # keeps a query with an empty top-k alive as one null cand, which
+        # collect_list skips
+        carry=F.explode_outer("best"),
+        merge=F.slice(F.array_sort(F.collect_list("cand")), 1, k),
+        resolved=resolved,
+    )
     ex = out.select("qid", F.posexplode("best").alias("pos", "b"))
     return ex.select(
         F.col("qid").alias(query_id),

@@ -7,7 +7,7 @@ pip.h:12-115); the natural third query over the same uniform grid is
 "which edge is closest" — the map-matching primitive (GPS point -> road
 segment). We reuse the PIP/kNN machinery: edges exploded to their covered
 cells (plans/cells.py, reference src/grid/uniform_grid.h:63-83) and the
-kNN Chebyshev ring expansion (operators/knn.py), resolving a query as
+Chebyshev ring expansion kNN runs too, resolving a query as
 soon as its current-best distance is strictly inside the ring-covered
 radius.
 
@@ -26,19 +26,19 @@ rationals n1/l1 != n2/l2 differ by >= 1/(l1*l2) >= 2^-118, so 118
 fractional bits separate all distinct distances; ties break by eid.
 floor(d2) itself fits int64 (d2 <= 2*2^58).
 
-Scale shape: like knn_points, each round is one equi-join of the active
-queries' candidate cells against the hash-partitioned (broadcast when
-small) edge-cell table; only unresolved queries survive; lineage is cut
-per round with localCheckpoint. Unlike knn's one-Chebyshev-ring-per-round
-loop, rounds here batch a geometrically GROWING annulus of rings
-[lo..hi] (hi doubles each round), and round 0 starts at a
+Scale shape: the rounds are the shared annulus loop
+(plans/cells.annulus_rounds, also behind knn_points). Each round is one
+equi-join of the active queries' candidate cells against the edge-cell
+table (broadcast when its stats bound is small, else persisted and
+sort-merge pinned); only unresolved queries survive; lineage is cut per
+round with localCheckpoint. Rounds batch a geometrically GROWING annulus
+of rings [lo..hi] (hi doubles each round), and round 0 starts at a
 density-derived radius r0 so that typical points meet enough edges to
 resolve immediately: driver-synchronized rounds are O(log gsize) worst
 case and 1-2 in the dense common case, instead of O(resolution radius).
 The extra cells a near-resolving point explodes are bounded by the
 constant (2*r0+1)^2 and are join-side work, which is ~free next to the
-per-round job + checkpoint constant this trades away (round-4 VERDICT
-flagged 8+ rounds x ~1.3 s fixed cost on the 200k-point bench).
+per-round job + checkpoint constant this trades away.
 """
 
 from __future__ import annotations
@@ -46,7 +46,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import explode_edges_to_cells, layer_split
+from rayjoin_spark.plans.cells import (
+    annulus_rounds,
+    explode_edges_to_cells,
+    layer_split,
+    round0_radius,
+)
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 #: 2^59 as a decimal literal for the fractional limb shifts
@@ -68,8 +73,18 @@ _C2_SQL = (
 _LEN2D_SQL = "CAST((x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1) AS decimal(38,0))"
 
 
-def _key_struct():
-    """The exact distance key as one column expression (see module doc)."""
+def _distance_keys():
+    """(d2d, key) of a (query, segment) row over qx, qy, x1, y1, x2, y2.
+
+    key is the exact distance key as one struct (see module doc). d2d is
+    a cheap approximate squared distance in DOUBLE, used only to shrink
+    the candidate set before the exact key: dot/len2/cross are exact
+    int64 (|cross| <= 2^59, no overflow); the only rounding is the final
+    double convert/multiply/divide, so its relative error is < 5*2^-53 <
+    2^-50. The band filter in nearest_edge keeps any candidate whose true
+    d2 could still be the minimum (margin 2^-40 rel + 1.0 abs, orders of
+    magnitude wider than the bound), so the exact key still decides every
+    argmin; the double pass can only discard provable non-winners."""
     dx = F.col("x2") - F.col("x1")
     dy = F.col("y2") - F.col("y1")
     wx = F.col("qx") - F.col("x1")
@@ -78,10 +93,12 @@ def _key_struct():
     vy = F.col("qy") - F.col("y2")
     dot = dx * wx + dy * wy
     len2 = dx * dx + dy * dy
-    d2a = wx * wx + wy * wy
-    d2b = vx * vx + vy * vy
     endpoint = (len2 == 0) | (dot <= 0) | (dot >= len2)
-    d2_end = F.when((len2 == 0) | (dot <= 0), d2a).otherwise(d2b)
+    d2_end = F.when((len2 == 0) | (dot <= 0), wx * wx + wy * wy).otherwise(vx * vx + vy * vy)
+    crossd = (dx * wy - dy * wx).cast("double")
+    d2d = F.when(endpoint, d2_end.cast("double")).otherwise(
+        crossd * crossd / len2.cast("double")
+    )
 
     def limb(sql: str):
         return F.expr(sql.replace("len2d", _LEN2D_SQL).replace("c2", _C2_SQL)).cast(
@@ -89,41 +106,13 @@ def _key_struct():
         )
 
     zero = F.lit(0).cast("bigint")
-    return F.struct(
+    key = F.struct(
         F.when(endpoint, d2_end).otherwise(limb(_D2F_SQL)).alias("d2f"),
         F.when(endpoint, zero).otherwise(limb(_LO1_SQL)).alias("lo1"),
         F.when(endpoint, zero).otherwise(limb(_LO2_SQL)).alias("lo2"),
         F.col("eid").alias("eid"),
     )
-
-
-def _d2_double():
-    """Cheap approximate squared distance in DOUBLE, used only to shrink
-    the candidate set before the exact limb key. dot/len2/cross are exact
-    int64 (|cross| <= 2^59, no overflow); the only rounding is the final
-    double convert/multiply/divide, so the result's relative error is
-    < 5*2^-53 < 2^-50. Any candidate whose true d2 could still be the
-    minimum survives the band filter in nearest_edge (margin 2^-40 rel
-    + 1.0 abs — orders of magnitude wider than the bound), so the exact
-    key still decides every argmin; this pass can only discard provable
-    non-winners."""
-    dx = F.col("x2") - F.col("x1")
-    dy = F.col("y2") - F.col("y1")
-    wx = F.col("qx") - F.col("x1")
-    wy = F.col("qy") - F.col("y1")
-    vx = F.col("qx") - F.col("x2")
-    vy = F.col("qy") - F.col("y2")
-    dot = dx * wx + dy * wy
-    len2 = dx * dx + dy * dy
-    d2a = wx * wx + wy * wy
-    d2b = vx * vx + vy * vy
-    endpoint = (len2 == 0) | (dot <= 0) | (dot >= len2)
-    d2_end = F.when((len2 == 0) | (dot <= 0), d2a).otherwise(d2b)
-    cross = dx * wy - dy * wx
-    crossd = cross.cast("double")
-    return F.when(endpoint, d2_end.cast("double")).otherwise(
-        crossd * crossd / len2.cast("double")
-    )
+    return d2d, key
 
 
 def nearest_edge(
@@ -132,8 +121,6 @@ def nearest_edge(
     scaling: Scaling,
     grid: GridSpec | None = None,
     query_id: str = "point_id",
-    broadcast_max: int = 2_000_000,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """Nearest segment per query point.
 
@@ -143,154 +130,62 @@ def nearest_edge(
     is decided on the full 118-fractional-bit key, ties by smallest eid.
     """
     grid = grid or GridSpec(64)
-    if max_rounds is None:
-        # hi doubles per round, so this is a generous hard cap
-        max_rounds = 64
-    cell_w = int(1.0 / grid.cell_scale)
-
     # long-edge pre-split, the same layer_split decision as lsi_join /
     # PipIndex: a long diagonal segment at a fine grid would otherwise
     # explode its bbox QUADRATICALLY (plans/cells.py module doc).
     # dropDuplicates below absorbs the fragment-seam duplicate (cell, eid)
-    # rows.
+    # rows. est_rows bounds the index rows for annulus_rounds' broadcast rule
+    # without a count job.
     k, est_rows = layer_split(edges, grid)
-
-    # round-0 radius: shared circle-Poisson + candidate-volume-cap rule
-    # (plans/cells.round0_radius with k=1 — the nearest query resolves on
-    # its FIRST in-circle edge; applied after the point count below)
-    density = max(est_rows, 1) / float(grid.grid_size * grid.grid_size)
-
-    ec = explode_edges_to_cells(edges, grid, k).select(
-        F.col("cx").alias("ecx"),
-        F.col("cy").alias("ecy"),
-        "eid",
-        "x1",
-        "y1",
-        "x2",
-        "y2",
+    ec = explode_edges_to_cells(edges, grid, k).selectExpr(
+        "cx AS icx", "cy AS icy", "eid", "x1", "y1", "x2", "y2"
     )
     if k:
         # only fragment pre-splitting can duplicate a (cell, eid) row; the
         # plain bbox explode is already distinct — skip the shuffle then
-        ec = ec.dropDuplicates(["ecx", "ecy", "eid"])
-    persisted = None
-    if est_rows <= broadcast_max:
-        # the stats upper bound decides broadcast without a count job; the
-        # explode is cheap enough to recompute per-round broadcast, so no
-        # persist/materialize jobs either
-        ec = F.broadcast(ec)
-    else:
-        ec = ec.persist()
-        persisted = ec
+        ec = ec.dropDuplicates(["icx", "icy", "eid"])
 
-    active = (
-        points.select(
-            F.col(query_id).alias("qid"),
-            scaling.scale_x(F.col("x")).alias("qx"),
-            scaling.scale_y(F.col("y")).alias("qy"),
-        )
-        .withColumn("qcx", grid.cell_of(F.col("qx")))
-        .withColumn("qcy", grid.cell_of(F.col("qy")))
-        .withColumn(
-            "best",
-            F.lit(None).cast(
-                "struct<d2f:bigint,lo1:bigint,lo2:bigint,eid:bigint>"
-            ),
-        )
-        .localCheckpoint(eager=True)
+    qp = points.select(
+        F.col(query_id).alias("qid"),
+        scaling.scale_x(F.col("x")).alias("qx"),
+        scaling.scale_y(F.col("y")).alias("qy"),
+        F.lit(None).cast("struct<d2f:bigint,lo1:bigint,lo2:bigint,eid:bigint>").alias("best"),
     )
-    # the count is a cheap scan of the checkpoint just materialized
-    from rayjoin_spark.plans.cells import round0_radius
+    # round-0 radius: shared circle-Poisson + candidate-volume-cap rule
+    # with k=1 (the query resolves on its FIRST in-circle edge)
+    density = max(est_rows, 1) / float(grid.grid_size * grid.grid_size)
+    d2d, key = _distance_keys()
 
-    r0 = round0_radius(density, 1, active.count(), r_max=4)
-    done = []
-    lo, hi = 0, r0
-    for _ in range(max_rounds):
-        # annulus of Chebyshev rings [lo..hi]: two tiny sequence explodes
-        # (constant-size plan for any hi, unlike a literal offset array)
-        probes = (
-            active.withColumn("_dx", F.explode(F.sequence(F.lit(-hi), F.lit(hi))))
-            .withColumn("_dy", F.explode(F.sequence(F.lit(-hi), F.lit(hi))))
-            .filter(F.greatest(F.abs("_dx"), F.abs("_dy")) >= F.lit(lo))
-            .select(
-                "qid",
-                "qx",
-                "qy",
-                "qcx",
-                "qcy",
-                (F.col("qcx") + F.col("_dx")).alias("cx"),
-                (F.col("qcy") + F.col("_dy")).alias("cy"),
-            )
-            .filter(
-                (F.col("cx") >= 0)
-                & (F.col("cx") < grid.grid_size)
-                & (F.col("cy") >= 0)
-                & (F.col("cy") < grid.grid_size)
-            )
-        )
+    def score(j: DataFrame) -> DataFrame:
         # two-phase argmin: the exact limb key costs decimal(38,0) math
         # (Java BigDecimal, ~10x slower than the join itself), so first
-        # find each point's approximate minimum in double (error-bounded,
-        # see _d2_double) and keep only the tie band around it — the
-        # exact key then runs on ~1-2 rows per point instead of every
-        # candidate. Both agg and join-back hash on qid, so the slim
-        # frame's exchange is reused (ReuseExchange), not recomputed;
-        # AQE broadcast-converts the per-point-min side when small.
-        slim = probes.join(
-            ec, (F.col("cx") == F.col("ecx")) & (F.col("cy") == F.col("ecy")), "inner"
-        ).select(
-            "qid", "qx", "qy", "qcx", "qcy",
-            "eid", "x1", "y1", "x2", "y2",
-            _d2_double().alias("_d2d"),
+        # find each point's approximate minimum in double and keep only
+        # the tie band around it — the exact key then runs on ~1-2 rows
+        # per point instead of every candidate. Both agg and join-back
+        # hash on qid, so the slim frame's exchange is reused
+        # (ReuseExchange), not recomputed; AQE broadcast-converts the
+        # per-point-min side when small.
+        slim = j.select(
+            "qid", "qx", "qy", "qcx", "qcy", "eid", "x1", "y1", "x2", "y2",
+            d2d.alias("_d2d"),
         )
         approx_min = slim.groupBy("qid").agg(F.min("_d2d").alias("_m"))
         band = slim.join(approx_min, "qid").filter(
             F.col("_d2d") <= F.col("_m") * F.lit(1.0 + 2.0**-40) + F.lit(1.0)
         )
-        cand = band.select(
-            "qid", "qx", "qy", "qcx", "qcy", _key_struct().alias("cand")
-        )
-        # carry each active point's current best through the SAME groupBy
-        # as one extra candidate row: min() merges old and new best and —
-        # because the carry row is always present — every active qid
-        # survives the agg even with zero candidates this round. This
-        # replaces the former new_best-vs-active join-back (an
-        # all-points-sized shuffle join per round).
-        carry = active.select(
-            "qid", "qx", "qy", "qcx", "qcy", F.col("best").alias("cand")
-        )
-        merged = (
-            cand.unionByName(carry)
-            .groupBy("qid")
-            .agg(
-                F.min("cand").alias("best"),  # min skips nulls
-                F.first("qx").alias("qx"),
-                F.first("qy").alias("qy"),
-                F.first("qcx").alias("qcx"),
-                F.first("qcy").alias("qcy"),
-            )
-        )
-        # resolved when floor(d2) < (hi*cell_w)^2: d2 < floor+1 <= safe2,
-        # and any unseen edge lies entirely beyond the covered radius.
-        # Once hi reaches grid_size the whole grid is swept: stop.
-        safe2 = F.lit((hi * cell_w) * (hi * cell_w))
-        is_done = (F.col("best").isNotNull() & (F.col("best.d2f") < safe2)) | F.lit(
-            hi >= grid.grid_size
-        )
-        merged = merged.localCheckpoint(eager=True)
-        done.append(merged.filter(is_done).select("qid", "best"))
-        active = merged.filter(~is_done)
-        if active.isEmpty():
-            active = None
-            break
-        lo, hi = hi + 1, min(2 * hi + 1, grid.grid_size)
-    if active is not None:
-        done.append(active.select("qid", "best"))
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    if persisted is not None:
-        persisted.unpersist()
+        return band.select("qid", "qx", "qy", "qcx", "qcy", key.alias("cand"))
+
+    def resolved(safe2):
+        # floor(d2) < safe2 gives d2 < floor + 1 <= safe2: any unseen edge
+        # lies entirely beyond the covered radius
+        return F.col("best").isNotNull() & (F.col("best.d2f") < safe2)
+
+    out = annulus_rounds(
+        qp, ec, est_rows, grid, lambda n: round0_radius(density, 1, n, r_max=4), score,
+        carry=F.col("best"),
+        merge=F.min("cand"),  # min skips the null best of a fresh query
+        resolved=resolved,
+    )
     return out.filter(F.col("best").isNotNull()).select(
         F.col("qid").alias(query_id),
         F.col("best.eid").alias("eid"),

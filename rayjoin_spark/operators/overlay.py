@@ -43,10 +43,10 @@ the LSI SoS predicate). The sign convention: build_edges normalizes
 normal (y1-y2, x2-x1) points left of the chain direction — hence the
 (x1 <= x2) correction. This is bit-exact integer arithmetic inside
 whole-stage codegen, equals the reference's rational midpoint PIP on any
-consistently-labelled planar input, and never computes a midpoint. The
-legacy double-midpoint path (compute midpoint in double, re-snap, PIP)
-is kept as midpoint_mode='double' so tests can demonstrate the rounding
-failure the exact path closes.
+consistently-labelled planar input, and never computes a midpoint (a
+midpoint computed in double and re-snapped can land on the wrong side of
+a nearby edge; tests/test_overlay.py checks the exact faces against a
+Fraction-midpoint oracle on such an adversarial pair).
 """
 
 from __future__ import annotations
@@ -139,7 +139,6 @@ def overlay(
     scaling: Scaling,
     grid: GridSpec | None = None,
     eid_stride: int = EID_STRIDE_DEFAULT,
-    midpoint_mode: str = "exact",
     prebuilt_edges: tuple[DataFrame, DataFrame] | None = None,
     prebuilt_xs: DataFrame | None = None,
     timings: dict | None = None,
@@ -222,59 +221,28 @@ def overlay(
         vert = pts.join(vert, "point_id").select("chain_id", "seq", "x", "y", "vface")
 
         # --- phase 3: order xsects along edges; face entered after each
-        # crossing (see module docstring: exact int64 side test by default,
-        # legacy double-midpoint PIP behind midpoint_mode='double') ---
-        ex = _xsects_along_edges(xs, edges, side)
-        if midpoint_mode == "exact":
-            o = other_edges.select(
-                F.col("eid").alias("other_eid"),
-                F.col("a").alias("o_a"),
-                F.col("b").alias("o_b"),
-                F.col("x1").alias("o_x1"),
-                F.col("x2").alias("o_x2"),
-                F.col("left_polygon_id").alias("o_left"),
-                F.col("right_polygon_id").alias("o_right"),
+        # crossing by the exact int64 side test (see module docstring) ---
+        o = other_edges.select(
+            F.col("eid").alias("other_eid"),
+            F.col("a").alias("o_a"),
+            F.col("b").alias("o_b"),
+            F.col("x1").alias("o_x1"),
+            F.col("x2").alias("o_x2"),
+            F.col("left_polygon_id").alias("o_left"),
+            F.col("right_polygon_id").alias("o_right"),
+        )
+        s_dot = F.col("o_a") * F.col("dx") + F.col("o_b") * F.col("dy")
+        entered_left = (s_dot > 0) == (F.col("o_x1") <= F.col("o_x2"))
+        ex = (
+            _xsects_along_edges(xs, edges, side)
+            .join(o, "other_eid")
+            .withColumn(
+                "midface",
+                F.when(entered_left, F.col("o_left")).otherwise(F.col("o_right")),
             )
-            s_dot = F.col("o_a") * F.col("dx") + F.col("o_b") * F.col("dy")
-            entered_left = (s_dot > 0) == (F.col("o_x1") <= F.col("o_x2"))
-            ex = (
-                ex.join(o, "other_eid")
-                .withColumn(
-                    "midface",
-                    F.when(entered_left, F.col("o_left")).otherwise(F.col("o_right")),
-                )
-                .drop("o_a", "o_b", "o_x1", "o_x2", "o_left", "o_right")
-            )
-        else:
-            ex = ex.persist()
-            nxt_w = Window.partitionBy("eid").orderBy("xidx")
-            mids = (
-                ex.withColumn("nx", F.lead("xsect_xd").over(nxt_w))
-                .withColumn("ny", F.lead("xsect_yd").over(nxt_w))
-                .filter(F.col("nx").isNotNull())
-                .select(
-                    F.struct("eid", "xidx").alias("point_id"),
-                    ((F.col("xsect_xd") + F.col("nx")) / 2).alias("mx"),
-                    ((F.col("xsect_yd") + F.col("ny")) / 2).alias("my"),
-                )
-            )
-            # midpoints are already in the snapped-int domain (xsect_xd is
-            # the rational point as double); unscale so pip_locate re-snaps
-            mid_q = mids.select(
-                "point_id",
-                scaling.unscale_x(F.col("mx")).alias("x"),
-                scaling.unscale_y(F.col("my")).alias("y"),
-            )
-            midf = pip_locate(
-                mid_q, other_edges, scaling, grid, query_map_id=im, index=other_idx
-            ).select(
-                F.col("point_id.eid").alias("eid"),
-                F.col("point_id.xidx").alias("xidx"),
-                F.col("face_id").alias("midface"),
-            )
-            ex = ex.join(midf, ["eid", "xidx"], "left")
-        ex = ex.drop("dx", "dy")
-        # localCheckpoint (NOT persist) in BOTH modes — two reasons:
+            .drop("o_a", "o_b", "o_x1", "o_x2", "o_left", "o_right", "dx", "dy")
+        )
+        # localCheckpoint (NOT persist) — two reasons:
         # (1) the timings path must not change the physical plan under
         #     measurement; (2) ex/vert are RESULT-sized frames referenced
         #     from the ~20 joined subtrees of the writer below, and Spark

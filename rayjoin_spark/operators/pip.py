@@ -8,25 +8,18 @@ intersection with the upward vertical ray has the smallest y; ties (shared
 vertices) break by slope; the hit edge's face resolves via p1.x < p2.x
 (src/map/map.h:79-87); a miss is the exterior face 0 (src/config.h:8).
 
-Physical plan (all JVM-side, three strategies):
-
-* ``auto`` (default): ONE banded round — each point equi-joins edge-cells
-  on (cx, cy) over the first `band0` non-empty cells of its grid column at
-  or above it, argmin with the reference's acceptance guard — then the few
-  unresolved points re-join over their ENTIRE remaining column (where the
-  global argmin needs no guard). Exactly one intermediate Spark job per
-  call (an eager checkpoint of the small accepted set), vs one per walk
-  round. Sound because any edge whose acceptance fails has its ray
-  crossing registered in a cell above the searched band (the bbox
-  rectangle explode covers the crossing cell), so the completion pass
-  re-finds it.
-* ``single``: whole-column join for every point, no guard, ZERO
-  intermediate jobs. Right when columns are short (lattices, small maps).
-* ``walk``: the reference's cell walk as a driver loop over geometrically
-  growing bands (4, 8, ... 64 cells/round). O(log column) join rounds;
-  use when columns are so dense that whole-column candidate generation
-  would blow up (the 100 TB escape hatch — per-round work is bounded by
-  the band, at the price of driver-synchronized rounds).
+Physical plan (all JVM-side): ONE guarded band pass — each point
+equi-joins edge-cells on (cx, cy) over the first `BAND0` non-empty cells
+of its grid column at or above it, argmin with the reference's
+acceptance guard — then the few unresolved points re-join over their
+ENTIRE remaining column (where the global argmin needs no guard). No
+round loop and no eager checkpoint: the accepted set is persisted and
+read by both the completion's anti-join and the final union. Sound
+because any edge whose acceptance fails has its ray crossing registered
+in a cell above the searched band (the bbox rectangle explode covers the
+crossing cell), so the completion pass re-finds it. This replaces the
+reference's cell-by-cell walk (src/app/pip_grid.h:37-70) with two
+set-at-a-time passes.
 
 * exact comparisons everywhere: sign tests are int64; the argmin key is
   floor(n * 2^62 / b) as a lexicographic pair of int64 limbs — an exact
@@ -263,6 +256,10 @@ _FACE_SQL = "CASE WHEN x1 < x2 THEN right_polygon_id ELSE left_polygon_id END"
 _HIT_COLS = ("point_id", "eid AS closest_eid", f"{_FACE_SQL} AS face_id")
 
 
+#: non-empty cells of a point's column searched by the guarded band pass
+BAND0 = 8
+
+
 def _accept_sql(grid: GridSpec) -> str:
     """Acceptance guard (reference src/algo/pip.h:98-114, band
     generalization): the band argmin is final iff the edge's high end or
@@ -280,157 +277,61 @@ def pip_locate(
     grid: GridSpec | None = None,
     query_map_id: int = 1,
     point_id: str = "point_id",
-    max_rounds: int | None = None,
-    skip_empty_cells: bool = True,
-    mode: str = "auto",
-    band0: int = 8,
     index: PipIndex | None = None,
     caches: list | None = None,
 ) -> DataFrame:
     """Locate each query point in the base layer.
 
     Returns (point_id, closest_eid, face_id): closest_eid is NULL and
-    face_id = 0 (exterior) for misses. See module docstring for the three
-    physical strategies (mode = 'auto' | 'single' | 'walk').
+    face_id = 0 (exterior) for misses. See module docstring for the
+    physical plan (guarded band pass + whole-column completion).
 
-    ``caches``: optional list — every frame this call persists (auto
-    mode's stepped/accepted) and any implicitly-built PipIndex are
-    appended, so long-running sessions can ``.unpersist()`` them after
-    materializing the result; repeated un-released locates otherwise
-    accumulate storage memory until eviction churn degrades the caches
-    that are still live (a reusable `index=` skips the implicit build
-    entirely — the preferred repeated-locate pattern).
+    ``caches``: optional list — every frame this call persists (stepped,
+    accepted) and any implicitly-built PipIndex are appended, so
+    long-running sessions can ``.unpersist()`` them after materializing
+    the result; repeated un-released locates otherwise accumulate storage
+    memory until eviction churn degrades the caches that are still live
+    (a reusable `index=` skips the implicit build entirely — the
+    preferred repeated-locate pattern).
     """
     grid = grid or (index.grid if index is not None else GridSpec())
-    if not skip_empty_cells:
-        mode = "walk"
     if index is None:
         index = PipIndex(base_edges, grid)
         if caches is not None:
             caches.append(index)
 
     pts = prepare_query_points(points, scaling, grid, point_id=point_id)
-
-    if mode == "walk":
-        hits = _pip_walk(pts, index, query_map_id, max_rounds, skip_empty_cells, grid)
-    else:
-        # attach the remaining column (non-empty cells at/above the point)
-        stepped = pts.join(index.skipmap_joinable(), F.expr("pcx = cx"), "left").selectExpr(
-            "point_id", "px", "py", "pcx", "pcy", "filter(cys, c -> c >= pcy) AS cands"
-        )
-        if mode == "auto":
-            # both the banded pass and the completion pass consume stepped;
-            # uncached, the completion recomputes the skip-map join + the
-            # per-point array filter over the whole point set (same-session
-            # A/B at gsize 15000 / 1M points: ~15-20% of the locate).
-            # persist (not checkpoint): deterministic, partition-parallel,
-            # and plan-canonicalized so repeat locates reuse it.
-            stepped = stepped.persist()
-            if caches is not None:
-                caches.append(stepped)
-        if mode == "single":
-            src = stepped.filter("size(cands) > 0")
-            hits = _argmin_in_cells(src, index, query_map_id, "cands", False)
-            hits = hits.selectExpr(*_HIT_COLS)
-        else:  # auto: one guarded band round + whole-column completion
-            band = f"slice(cands, 1, {band0})"
-            banded = stepped.filter("size(cands) > 0").selectExpr(
-                "*", f"{band} AS band", f"element_at({band}, -1) AS band_top"
-            )
-            bestA = _argmin_in_cells(banded, index, query_map_id, "band", True)
-            # persist (not an eager checkpoint): both consumers below —
-            # the anti-join and the final union — reuse the one cached
-            # computation with NO intermediate job and no serial disk
-            # write; at cluster scale the band pass stays a fully
-            # parallel stage
-            accepted = bestA.filter(_accept_sql(grid)).selectExpr(*_HIT_COLS).persist()
-            if caches is not None:
-                caches.append(accepted)
-            # completion: unresolved points join their whole remaining
-            # column — the global argmin there needs no guard (a rejected
-            # band argmin re-registers at its crossing cell above the band)
-            rest = stepped.join(accepted.selectExpr("point_id"), "point_id", "left_anti")
-            rest = rest.filter("size(cands) > 0")
-            bestB = _argmin_in_cells(rest, index, query_map_id, "cands", False)
-            hits = accepted.unionByName(bestB.selectExpr(*_HIT_COLS))
+    # attach the remaining column (non-empty cells at/above the point).
+    # Both the banded pass and the completion pass consume stepped;
+    # uncached, the completion recomputes the skip-map join + the
+    # per-point array filter over the whole point set (same-session A/B at
+    # gsize 15000 / 1M points: ~15-20% of the locate). persist (not
+    # checkpoint): deterministic, partition-parallel, and
+    # plan-canonicalized so repeat locates reuse it.
+    stepped = pts.join(index.skipmap_joinable(), F.expr("pcx = cx"), "left").selectExpr(
+        "point_id", "px", "py", "pcx", "pcy", "filter(cys, c -> c >= pcy) AS cands"
+    ).persist()
+    if caches is not None:
+        caches.append(stepped)
+    band = f"slice(cands, 1, {BAND0})"
+    banded = stepped.filter("size(cands) > 0").selectExpr(
+        "*", f"{band} AS band", f"element_at({band}, -1) AS band_top"
+    )
+    bestA = _argmin_in_cells(banded, index, query_map_id, "band", True)
+    # persist (not an eager checkpoint): both consumers below — the
+    # anti-join and the final union — reuse the one cached computation
+    # with NO intermediate job and no serial disk write; at cluster scale
+    # the band pass stays a fully parallel stage
+    accepted = bestA.filter(_accept_sql(grid)).selectExpr(*_HIT_COLS).persist()
+    if caches is not None:
+        caches.append(accepted)
+    # completion: unresolved points join their whole remaining column —
+    # the global argmin there needs no guard (a rejected band argmin
+    # re-registers at its crossing cell above the band)
+    rest = stepped.join(accepted.selectExpr("point_id"), "point_id", "left_anti")
+    rest = rest.filter("size(cands) > 0")
+    bestB = _argmin_in_cells(rest, index, query_map_id, "cands", False)
+    hits = accepted.unionByName(bestB.selectExpr(*_HIT_COLS))
 
     out = pts.selectExpr("point_id").join(hits, "point_id", "left")
     return out.selectExpr("point_id", "closest_eid", "coalesce(face_id, 0) AS face_id")
-
-
-def _pip_walk(
-    pts: DataFrame,
-    index: PipIndex,
-    query_map_id: int,
-    max_rounds: int | None,
-    skip_empty_cells: bool,
-    grid: GridSpec,
-) -> DataFrame:
-    """The legacy driver-loop walk over geometrically growing bands; kept as
-    the escape hatch for layers whose grid columns are too dense for the
-    whole-column completion pass. Returns hit rows (point_id, closest_eid,
-    face_id)."""
-    col_cells = index.skipmap_joinable() if skip_empty_cells else None
-
-    active = pts.withColumn("cur_cy", F.col("pcy")).localCheckpoint(eager=True)
-    results = []
-    if max_rounds is None:
-        max_rounds = grid.grid_size + 1
-
-    band0, band_max = 4, 64
-    for rnd in range(max_rounds):
-        bsize = min(band0 << rnd, band_max)
-        if skip_empty_cells:
-            stepped = (
-                active.join(col_cells, F.col("pcx") == F.col("cx"), "left")
-                .withColumn(
-                    "band",
-                    F.slice(
-                        F.array_sort(F.filter("cys", lambda c: c >= F.col("cur_cy"))),
-                        1,
-                        bsize,
-                    ),
-                )
-                .withColumn("band", F.when(F.size("band") > 0, F.col("band")))
-                .select("point_id", "px", "py", "pcx", "pcy", "band")
-            )
-        else:
-            lo, hi = F.col("cur_cy"), F.least(
-                F.col("cur_cy") + bsize - 1, F.lit(grid.grid_size - 1)
-            )
-            stepped = active.withColumn(
-                "band",
-                F.when(F.col("cur_cy") < grid.grid_size, F.sequence(lo, hi)),
-            ).select("point_id", "px", "py", "pcx", "pcy", "band")
-        nxt = stepped.filter(F.col("band").isNotNull()).withColumn(
-            "band_top", F.element_at("band", -1)
-        )
-        if nxt.isEmpty():
-            break
-
-        # same explode/join/filter/argmin as the auto path — one shared
-        # implementation so an SoS or payload fix can never diverge
-        best = _argmin_in_cells(nxt, index, query_map_id, "band", True)
-        accepted = best.filter(_accept_sql(grid)).localCheckpoint(eager=True)
-        results.append(accepted.selectExpr(*_HIT_COLS))
-        # unresolved: no accepted best this round -> advance past the band;
-        # checkpointing the (small) next frontier keeps per-round IO
-        # proportional to what is left
-        active = (
-            nxt.join(accepted.select("point_id"), "point_id", "left_anti")
-            .withColumn("cur_cy", F.col("band_top") + 1)
-            .select("point_id", "px", "py", "pcx", "pcy", "cur_cy")
-            .localCheckpoint(eager=True)
-        )
-
-    if not results:
-        return (
-            pts.select("point_id")
-            .limit(0)
-            .withColumn("closest_eid", F.lit(None).cast("bigint"))
-            .withColumn("face_id", F.lit(None).cast("bigint"))
-        )
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out

@@ -10,7 +10,9 @@ internally — we never materialize it.
 
 Also provides the per-cell workload metrics the reference exposes as
 histograms (src/grid/uniform_grid.h:360-494), which drive explicit salting
-of hot cells at scale (see plans/skew.py).
+of hot cells at scale (see plans/skew.py), and the one Chebyshev-annulus
+round loop of the point queries (annulus_rounds, behind knn_points and
+nearest_edge).
 
 Long edges at fine grids: the bbox rectangle explode is QUADRATIC in the
 edge's cell span for diagonal edges (a unit lattice diagonal at gsize 15000
@@ -29,6 +31,7 @@ lsi.py does; PIP's min_by argmin is duplicate-insensitive).
 
 from __future__ import annotations
 
+import functools
 import weakref
 
 from pyspark.sql import DataFrame
@@ -234,3 +237,105 @@ def round0_radius(
     while r > 1 and n_queries * ((2 * r + 1) ** 2) * density > cand_cap:
         r -= 1
     return r
+
+
+#: index-side rule of annulus_rounds: an index of at most this many rows is
+#: broadcast (every round a narrow map-side join, no shuffle of the probe
+#: side); a bigger one is persisted and its cell join pinned to sort-merge,
+#: the pin PipIndex.joinable_cells and the LSI merge guard use, so AQE
+#: cannot broadcast-convert it from compressed shuffle stats
+ANNULUS_BROADCAST_ROWS = 2_000_000
+
+_QUERY_COLS = ("qid", "qx", "qy", "qcx", "qcy")
+
+
+def annulus_rounds(
+    queries: DataFrame,
+    index: DataFrame,
+    index_rows: int,
+    grid: GridSpec,
+    radius0,
+    score,
+    carry,
+    merge,
+    resolved,
+) -> DataFrame:
+    """The batched Chebyshev-annulus round loop of the point queries
+    (operators/knn.py, operators/nearest.py).
+
+    ``queries`` is (qid, qx, qy, best): snapped ints and each query's
+    empty best. ``index`` is the cell-keyed side with its cell in
+    (icx, icy) and at most ``index_rows`` rows. ``radius0(n_queries)``
+    gives the round-0 radius (round0_radius with the caller's k). Round i
+    probes the rings [lo..hi] around each unresolved query's cell
+    (clipped to the grid), equi-joins them to the index on the cell, and
+    ``score`` maps the joined rows to (qid, qx, qy, qcx, qcy, cand). The
+    ``carry`` column re-emits each query's current best as cand rows, and
+    the ``merge`` aggregate folds carry and new candidates into the next
+    best in ONE groupBy; the always-present carry row keeps a query with
+    no candidates alive. Annulus cell sets are disjoint across rounds, so
+    a candidate never meets its own carry. A query is done once
+    ``resolved(safe2)`` holds, safe2 = (hi * cell width)^2 being the
+    squared radius that rings 0..hi fully cover, or once hi reaches the
+    grid size. Each round is checkpointed, so the returned union of done
+    (qid, best) rows no longer reads the index.
+    """
+    gsize = grid.grid_size
+    # guaranteed minimum int-width of a cell (floor of 1/cell_scale)
+    cell_w = int(1.0 / grid.cell_scale)
+    active = queries.selectExpr(
+        "qid", "qx", "qy",
+        f"{grid.cell_of_sql('qx')} AS qcx", f"{grid.cell_of_sql('qy')} AS qcy", "best",
+    ).localCheckpoint(eager=True)
+    # the count is a cheap scan of the checkpoint just materialized
+    r0 = radius0(active.count())
+    persisted = None
+    if index_rows <= ANNULUS_BROADCAST_ROWS:
+        index = F.broadcast(index)
+    else:
+        persisted = index.persist()
+        index = persisted.hint("merge")
+    done = []
+    lo, hi = 0, r0
+    try:
+        # hi at least doubles each round and a round with hi >= gsize
+        # resolves every query, so the loop ends within
+        # ceil(log2(gsize)) + 1 rounds
+        while True:
+            # annulus of rings [lo..hi]: two tiny sequence explodes
+            # (constant-size plan for any hi, unlike a literal offset array)
+            probes = (
+                active.withColumn("_dx", F.explode(F.sequence(F.lit(-hi), F.lit(hi))))
+                .withColumn("_dy", F.explode(F.sequence(F.lit(-hi), F.lit(hi))))
+                .filter(F.greatest(F.abs("_dx"), F.abs("_dy")) >= F.lit(lo))
+                .select(
+                    *_QUERY_COLS,
+                    (F.col("qcx") + F.col("_dx")).alias("cx"),
+                    (F.col("qcy") + F.col("_dy")).alias("cy"),
+                )
+                .filter(
+                    (F.col("cx") >= 0)
+                    & (F.col("cx") < gsize)
+                    & (F.col("cy") >= 0)
+                    & (F.col("cy") < gsize)
+                )
+            )
+            cand = score(probes.join(
+                index, (F.col("cx") == F.col("icx")) & (F.col("cy") == F.col("icy")), "inner"
+            ))
+            merged = (
+                cand.unionByName(active.select(*_QUERY_COLS, carry.alias("cand")))
+                .groupBy("qid")
+                .agg(merge.alias("best"), *(F.first(c).alias(c) for c in _QUERY_COLS[1:]))
+                .localCheckpoint(eager=True)
+            )
+            is_done = resolved(F.lit((hi * cell_w) * (hi * cell_w))) | F.lit(hi >= gsize)
+            done.append(merged.filter(is_done).select("qid", "best"))
+            active = merged.filter(~is_done)
+            if hi >= gsize or active.isEmpty():
+                break
+            lo, hi = hi + 1, min(2 * hi + 1, gsize)
+    finally:
+        if persisted is not None:
+            persisted.unpersist()
+    return functools.reduce(DataFrame.unionByName, done)

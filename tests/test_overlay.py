@@ -101,20 +101,13 @@ def _adversarial_maps(spark):
     return chains_a, points_a, chains_b, points_b, scaling
 
 
-def _chain_tuples(oc):
-    return sorted(
-        (r["n_points"], r["left_face"], r["right_face"]) for r in oc.collect()
-    )
-
-
 def test_overlay_exact_midface_adversarial(spark):
-    """Exact path matches the Fraction-midpoint oracle; the legacy double
-    path demonstrably assigns a different (wrong) face."""
+    """The exact side test matches the Fraction-midpoint oracle on a pair
+    where a double-rounded midpoint would land in the wrong face."""
     ca, pa, cb, pb, scaling = _adversarial_maps(spark)
     grid = GridSpec(1024)
 
     oc_exact, op_exact = overlay(ca, pa, cb, pb, scaling, grid)
-    oc_dbl, _ = overlay(ca, pa, cb, pb, scaling, grid, midpoint_mode="double")
 
     c_py = [
         {r["chain_id"]: (r["left_polygon_id"], r["right_polygon_id"]) for r in c.collect()}
@@ -141,8 +134,6 @@ def test_overlay_exact_midface_adversarial(spark):
         for r in want_chains
     )
     assert got == want
-    # the double path disagrees — the exactness hole this fixture pins down
-    assert _chain_tuples(oc_dbl) != _chain_tuples(oc_exact)
 
 
 def test_overlay_multipoint_matches_duckdb_oracle(spark):

@@ -73,11 +73,6 @@ def test_pip_sharded_skipmap_parity(spark):
     _check(spark, scaling, ea, ea_py, pts, 64, index=sharded_idx)
 
 
-def test_pip_no_skip_walk(spark):
-    scaling, ea, ea_py, pts = _setup(spark, 3, 60)
-    _check(spark, scaling, ea, ea_py, pts, 16, skip_empty_cells=False)
-
-
 def test_pip_query_map_id_zero(spark):
     scaling, ea, ea_py, pts = _setup(spark, 3, 60)
     got = {
