@@ -2811,7 +2811,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lsi_join_finegrid": q_lsi_finegrid,
         "pip_locate": q_pip,
         "pip_locate_finegrid": q_pip_finegrid,
-        "knn_cellring": q_knn,
+        "lsi_join_salted": q_lsi_salted,
         "xsect_density": q_xsect_density,
         "burst_detect": q_burst_detect,
         "weighted_sample": q_weighted_sample,
@@ -2864,7 +2864,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cell_workload_hist": q_cell_workload,
         "tile_counts": q_tiles,
         "raster_vectorize": q_raster_vectorize,
-        "lsi_join_salted": q_lsi_salted,
+        "knn_cellring": q_knn,
         "token_count": q_token_count,
         "bpe_token_count": q_bpe_tokens,
         "quality_score": q_quality,

@@ -420,18 +420,16 @@ def _scaling_queries(spark, only: str | None = None):
     gsize_big = int(os.environ.get("SPARK_GRAFT_SCALING_GSIZE", "64"))
 
     def q_lsi_big():
-        # coarse grid -> fat cells -> candidate testing dominates (the
-        # compute regime a skewed real layer pair puts you in). The
-        # engine's plan for this shape is the SKEW-AWARE one: per-cell
-        # workload metrics flag cells above 1M candidate pairs and the
-        # join splits each into ceil(workload / 250k) 2-D salt buckets
-        # (capped at 32; p x q factoring, plans/skew.py) — workload-
-        # PROPORTIONAL bucket granularity at ~2*sqrt(ns) replication.
-        # Without salting the ~1.6k joint cells are indivisible
-        # multi-million-pair tasks and efficiency rides on hash-packing
-        # luck (measured 0.56-0.84 run-to-run); fine buckets make the
-        # balance structural at ~1.15x wall vs naive at N=2 (same-batch
-        # A/B) — see the diagnosis row / BENCH.md.
+        # the skew-aware LSI plan over the lattice pair. The caller's gsize
+        # 64 cells are ~m/64 lattice units wide, but the cell join refines
+        # them (plans/cells.join_grid, up to 64x) to about one unit per
+        # cell, a few edges per cell and side; no cell then reaches the
+        # 1M-pair hot threshold, so the salted join runs the plain cell
+        # join plus its per-cell workload agg (plans/skew.py hot_cells).
+        # Explode, shuffle and the exact predicate do the work. Salting
+        # still splits a cell into ceil(workload / 250k) 2-D buckets
+        # (capped at 32) when a skewed layer pair stays hot at the join
+        # grid.
         from rayjoin_spark.plans.skew import lsi_join_salted
 
         return lsi_join_salted(
@@ -441,8 +439,9 @@ def _scaling_queries(spark, only: str | None = None):
         )
 
     def q_lsi_big_unsalted():
-        # DIAGNOSIS row (context, not a workload row): the naive plan on
-        # the same input, demonstrating the fat-key imbalance
+        # DIAGNOSIS row (context, not a workload row): the plain plan on
+        # the same input; it shows what the hot-cell check costs when the
+        # join grid leaves no cell hot
         return lsi_join(ea, eb, GridSpec(gsize_big))
 
     pip_seed = {"n": 0}
@@ -747,18 +746,18 @@ def main():
             "",
             f"Workloads: deterministic synthetic, sized compute-dominated "
             f"(lattice LSI m={os.environ.get('SPARK_GRAFT_SCALING_M', '1536')}/"
-            f"gsize={os.environ.get('SPARK_GRAFT_SCALING_GSIZE', '64')} — coarse grid, "
-            f"candidate sign-testing dominates; PIP "
+            f"gsize={os.environ.get('SPARK_GRAFT_SCALING_GSIZE', '64')} — a coarse caller "
+            f"grid the cell join refines (plans/cells.join_grid); PIP "
             f"{os.environ.get('SPARK_GRAFT_SCALING_NPTS', '4000000')} points; "
             f"400k-page MinHash); cores N={n_small} vs 4N={4 * n_small} "
             "(local mode, same machine, same plans, same input).",
             "",
             "Methodology: one OS process per (query, core-count) — sequential "
             "sessions share JVM JIT state; each process JIT-warms once then "
-            f"takes the min of {reps} measurements (the sandbox is a shared "
-            "host with ~2-4 cores of co-tenant noise; 32 logical cores are "
-            "~16 physical, so N=2 vs 8 keeps both levels within physical "
-            "capacity — the regime that transfers to N vs 4N executors).",
+            f"takes the min of {reps} measurements on a host with "
+            f"{os.cpu_count()} logical cores (a shared host has co-tenant "
+            "noise; 4N should stay within its physical cores — the regime "
+            "that transfers to N vs 4N executors).",
             "",
             "Scaling efficiency = T_N / (4 * T_4N); 1.0 = perfect linear. "
             "Throughput = output rows/sec (the north-rule metric: joined "
@@ -795,33 +794,25 @@ def main():
         if "lsi_big_unsalted" in r_small["times"]:
             lines += [
                 "",
-                "## Diagnosis: why the LSI row needs the skew-aware plan",
+                "## Diagnosis: salted vs plain LSI row",
                 "",
                 "The lsi_big row above runs the engine's skew-aware plan: the "
                 "per-cell workload metrics table (plans/skew.py `hot_cells`, "
                 "the analog of the reference's workload histograms, "
                 "src/grid/uniform_grid.h:444-494) flags cells above 1M "
                 "candidate pairs and splits each into ceil(workload/250k) "
-                "2-D salt buckets (p x q factoring, capped at 32: A-side "
-                "rows hash into p groups replicated q-fold, B-side into q "
-                "groups replicated p-fold — fine bucket granularity at "
-                "~2*sqrt(ns) replication instead of the classic 1-D "
-                "scheme's ns-fold). Without salting the same input "
-                "concentrates ~6G candidate tests in ~1.6k grid-cell join "
-                "keys — each an indivisible multi-million-pair loop inside "
-                "one task, so efficiency rides on whether the fat keys "
-                "happen to pack evenly into task waves: measured 0.56-0.84 "
-                "across repeated runs (straggler luck). Fine salt buckets "
-                "make the balance structural instead of lucky, at ~1.15x "
-                "naive wall in a same-batch A/B (1-D flat-16 cost 1.6x). "
+                "2-D salt buckets (p x q factoring, capped at 32). "
+                "plans/cells.join_grid refines the caller's grid to about one "
+                "lattice unit per cell, no cell is hot, and both rows run the "
+                "same cell join; the salted row also pays its hot-cell agg. "
                 "Same output rows (parity-tested in "
-                "tests/test_io_and_infra.py), different physical plan:",
+                "tests/test_io_and_infra.py):",
                 "",
                 "| plan | T_N (s) | T_4N (s) | efficiency |",
                 "|---|---|---|---|",
                 f"| lsi_big (salted, binding row) | {r_small['times']['lsi_big']} "
                 f"| {r_big['times']['lsi_big']} | {eff['lsi_big']} |",
-                f"| lsi_big_unsalted (naive) | {r_small['times']['lsi_big_unsalted']} "
+                f"| lsi_big_unsalted (plain) | {r_small['times']['lsi_big_unsalted']} "
                 f"| {r_big['times']['lsi_big_unsalted']} | {eff['lsi_big_unsalted']} |",
             ]
         lines += [

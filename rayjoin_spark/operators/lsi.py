@@ -10,6 +10,15 @@ of Simplicity (reference src/algo/lsi.h:27-103) and the grid-backed join
 
 Key deviations from the reference's physical plan (same results):
 
+* Join grid: the reference joins at the user's --grid_size (src/flags.cc:6).
+  Here the caller's grid is the COARSEST cell the join may use:
+  plans.cells.join_grid refines it by a power of two (at most 64x) while
+  the cells stay at least as wide as the layers' mean edge, because cells
+  much wider than the edges multiply candidate pairs quadratically in the
+  per-cell fan-out. Thin cells keep the caller's grid. Every consumer of
+  the cell-join core (lsi_join, lsi_candidates, lsi_join_salted, overlay,
+  faces) joins at the refined grid.
+
 * Candidate dedup: the reference tests every shared cell and keeps the
   pair only in the cell containing the exact intersection point
   (src/app/lsi_grid.h:64-67, needs int128 rationals per candidate). Since
@@ -35,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import explode_edges_to_cells, layer_split
+from rayjoin_spark.plans.cells import explode_edges_to_cells, join_grid, layer_split
 from rayjoin_spark.plans.scaling import GridSpec
 
 _EDGE_COLS = ["eid", "x1", "y1", "x2", "y2", "a", "b", "c", "ix1", "iy1"]
@@ -92,7 +101,8 @@ _LSI_PREDICATE_SQL = _lsi_predicate_sql()
 def _owned_pairs(
     edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec, join=None
 ) -> tuple[DataFrame, bool]:
-    """The one cell-join core: explode each side (long-edge split decided
+    """The one cell-join core: pick the join grid (plans.cells.join_grid
+    refines fat cells), explode each side at it (long-edge split decided
     per side by layer_split), suffix its columns, pin the join to
     sort-merge when the estimated exploded rows pass the broadcast guard,
     equi-join on the cell and keep each pair in its min shared cell.
@@ -101,6 +111,7 @@ def _owned_pairs(
     salted join of plans/skew.py). Returns (pairs, split): when either side
     is split a pair may survive ownership in several fragment cells, so
     consumers needing unique pairs dedup by (eid_a, eid_b)."""
+    grid = join_grid(edges_a, edges_b, grid)
     k_a, est_a = layer_split(edges_a, grid)
     k_b, est_b = layer_split(edges_b, grid)
     ca = _side(explode_edges_to_cells(edges_a, grid, k_a), "a")
@@ -114,6 +125,8 @@ def _owned_pairs(
 def lsi_candidates(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> DataFrame:
     """Candidate pairs sharing >=1 grid cell (before the exact test),
     deduped by min-shared-cell ownership — the cell-join core's output.
+    Their cx, cy (and ix1, iy1) are cells of the JOIN grid
+    (plans.cells.join_grid), which may be finer than ``grid``.
 
     The long-edge split keeps this generator (and the lsi_stats diagnostic
     built on it) LINEAR in an edge's cell span at fine grids. When a side
@@ -174,7 +187,9 @@ def with_xsect_point(pairs: DataFrame) -> DataFrame:
 def lsi_stats(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec | None = None) -> DataFrame:
     """Profiling counters analogous to the reference's debug atomics
     (n_tests / hit counts, src/app/lsi_grid.h:122-156): candidate pairs
-    after dedup, surviving pairs, and populated joint cells — one row."""
+    after dedup, surviving pairs, and populated joint cells — one row.
+    n_joint_cells counts cells of the join grid (plans.cells.join_grid),
+    which may be finer than ``grid``."""
     grid = grid or GridSpec()
     cand = lsi_candidates(edges_a, edges_b, grid)
     pairs = lsi_intersect_filter(cand)
@@ -211,16 +226,19 @@ def lsi_join(
     Parameters
     ----------
     edges_a, edges_b : outputs of plans.layers.build_edges (map0, map1)
-    grid : grid spec (cell size tunes candidate count vs join fan-out;
-        reference default 2048, experiments 15000 — src/flags.cc:6)
+    grid : the coarsest grid the join may use (reference default 2048,
+        experiments 15000 — src/flags.cc:6). plans.cells.join_grid refines
+        it by a power of two while the cells stay at least as wide as the
+        mean edge; a grid already that fine is kept. The rows do not depend
+        on it.
     with_points : also emit the exact intersection point columns
 
-    Each side's long-edge split comes from plans.cells.layer_split (one
-    cheap agg per DataFrame object and grid): a side whose longest edge
-    spans more than the fragment length explodes as parametric
-    fragments, and above BROADCAST_GUARD_ROWS estimated exploded rows the
-    join is hinted to sort-merge so AQE cannot broadcast-convert an
-    exploded side.
+    Each side's long-edge split comes from plans.cells.layer_split at the
+    join grid (one cheap agg per DataFrame object and grid): a side whose
+    longest edge spans more than the fragment length explodes as
+    parametric fragments, and above BROADCAST_GUARD_ROWS estimated
+    exploded rows the join is hinted to sort-merge so AQE cannot
+    broadcast-convert an exploded side.
     """
     out = _matched_pairs(edges_a, edges_b, grid or GridSpec())
     if with_points:

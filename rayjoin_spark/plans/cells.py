@@ -10,9 +10,10 @@ internally — we never materialize it.
 
 Also provides the per-cell workload metrics the reference exposes as
 histograms (src/grid/uniform_grid.h:360-494), which drive explicit salting
-of hot cells at scale (see plans/skew.py), and the one Chebyshev-annulus
-round loop of the point queries (annulus_rounds, behind knn_points and
-nearest_edge).
+of hot cells at scale (see plans/skew.py), the cell join's stats-driven
+decisions (layer_split: long-edge split; join_grid: the LSI join's
+refinement of fat cells), and the one Chebyshev-annulus round loop of the
+point queries (annulus_rounds, behind knn_points and nearest_edge).
 
 Long edges at fine grids: the bbox rectangle explode is QUADRATIC in the
 edge's cell span for diagonal edges (a unit lattice diagonal at gsize 15000
@@ -128,6 +129,10 @@ def _fragment_cell_bboxes(edges: DataFrame, grid: GridSpec, k: int) -> DataFrame
 #: never staler than the frame it belongs to; a fresh read gets fresh
 #: stats, and a dropped frame drops its entry.
 _STATS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+#: per-DataFrame mean edge extent avg(greatest(|x2-x1|, |y2-y1|)) in
+#: snapped units: grid-free, so it rides along the frame's first
+#: edge_cell_stats agg
+_EXTENT: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, int]:
@@ -138,7 +143,8 @@ def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, in
     upper-bound estimate under SPLIT_CELLS_DEFAULT fragmentation (each
     fragment bbox <= (k+3)^2 cells incl. the +-1 widen and DIV slack).
     Computed once per DataFrame object and grid (see _STATS); read
-    through layer_split.
+    through layer_split. The first call on a frame also records its mean
+    edge extent (_EXTENT), which join_grid reads.
     """
     per_grid = _STATS.setdefault(edges, {})
     if grid.grid_size in per_grid:
@@ -150,17 +156,22 @@ def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, in
     )
     row = (
         with_cell_bbox(edges, grid)
-        .selectExpr("ix2 - ix1 + 1 AS sx", "iy2 - iy1 + 1 AS sy")
+        .selectExpr(
+            "ix2 - ix1 + 1 AS sx", "iy2 - iy1 + 1 AS sy",
+            "greatest(abs(x2 - x1), abs(y2 - y1)) AS ext",
+        )
         .selectExpr(
             "count(*) AS n",
             "coalesce(max(greatest(sx, sy)), 0) AS mx",
             "coalesce(sum(sx * sy), 0) AS eu",
             f"coalesce(sum({frag_est}), 0) AS es",
+            "coalesce(avg(ext), 0D) AS ext",
         )
         .collect()[0]
     )
     out = (int(row["n"]), int(row["mx"]), int(row["eu"]), int(row["es"]))
     per_grid[grid.grid_size] = out
+    _EXTENT[edges] = float(row["ext"])
     return out
 
 
@@ -177,6 +188,36 @@ def layer_split(edges: DataFrame, grid: GridSpec) -> tuple[int | None, int]:
     if span > SPLIT_CELLS_DEFAULT:
         return SPLIT_CELLS_DEFAULT, est_split
     return None, est_unsplit
+
+
+#: cap on join_grid's refinement of the caller's grid
+JOIN_GRID_MAX_FACTOR = 64
+
+
+def join_grid(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> GridSpec:
+    """The grid an LSI cell join runs at: the caller's grid refined by the
+    largest power of two (at most JOIN_GRID_MAX_FACTOR) whose cells are
+    still at least as wide as the wider layer's mean edge extent
+    max(|x2-x1|, |y2-y1|).
+
+    A cell much wider than the edges costs candidate pairs, which grow
+    with the square of the per-cell fan-out; at one mean edge per cell
+    width an edge explodes to ~2 cells, and refining further only adds
+    explode rows (the fan-out table in BENCH.md: lsi_coarse at gsize 32
+    tests 27.6M candidates for 97,870 pairs, at 256 1.02M, while rows per
+    edge grow 1.09 -> 1.77 and the warm join stops getting faster).
+    Never coarser: thin cells keep the caller's grid and its long-edge
+    split. Grid size is physical, so the rows do not change. The extents
+    come with the frames' edge_cell_stats at the caller's grid (cached),
+    so a repeat decision starts no job.
+    """
+    for edges in (edges_a, edges_b):
+        edge_cell_stats(edges, grid)
+    extent = max(_EXTENT[edges_a], _EXTENT[edges_b])
+    f = 1
+    while f < JOIN_GRID_MAX_FACTOR and 1.0 / GridSpec(grid.grid_size * f * 2).cell_scale >= extent:
+        f *= 2
+    return grid if f == 1 else GridSpec(grid.grid_size * f)
 
 
 def cell_counts(edge_cells: DataFrame) -> DataFrame:

@@ -131,9 +131,10 @@ def lsi_join_salted(
 ):
     """LSI join with explicit hot-cell salting (same output as lsi_join).
 
-    Runs lsi_join's cell-join core (long-edge split, broadcast guard,
-    ownership, exact predicate, split dedup) with the plain cell join
-    swapped for salted_cell_join over the hot cells of the exploded sides.
+    Runs lsi_join's cell-join core (join grid, long-edge split, broadcast
+    guard, ownership, exact predicate, split dedup) with the plain cell
+    join swapped for salted_cell_join over the hot cells of the exploded
+    sides, which are cells of the join grid.
     ``target_pairs`` switches to workload-proportional salt counts (see
     salted_cell_join).
     """
