@@ -2808,11 +2808,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "overlay_points": q_overlay_points,
         "nearest_edge": q_nearest_edge,
         "lsi_join": q_lsi,
-        "lsi_join_finegrid": q_lsi_finegrid,
+        "geo_dist_join": q_geo_dist_join,
         "pip_locate": q_pip,
         "pip_locate_finegrid": q_pip_finegrid,
-        "lsi_join_salted": q_lsi_salted,
-        "xsect_density": q_xsect_density,
+        "knn_cellring": q_knn,
+        "closest_pair": q_closest_pair,
         "burst_detect": q_burst_detect,
         "weighted_sample": q_weighted_sample,
         "rect_join": q_rect_join,
@@ -2855,7 +2855,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quadkey_encode": q_quadkey,
         "mercator_tiles": q_mercator_tiles,
         "tile_bounds": q_tile_bounds,
-        "geo_dist_join": q_geo_dist_join,
+        "lsi_join_finegrid": q_lsi_finegrid,
         "event_asof": q_event_asof,
         "event_interval_join": q_event_interval_join,
         "boilerplate_frac": q_boilerplate,
@@ -2864,7 +2864,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cell_workload_hist": q_cell_workload,
         "tile_counts": q_tiles,
         "raster_vectorize": q_raster_vectorize,
-        "knn_cellring": q_knn,
+        "lsi_join_salted": q_lsi_salted,
         "token_count": q_token_count,
         "bpe_token_count": q_bpe_tokens,
         "quality_score": q_quality,
@@ -2903,7 +2903,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interval_merge": q_interval_merge,
         "reciprocity": q_reciprocity,
         "assortativity": q_assortativity,
-        "closest_pair": q_closest_pair,
+        "xsect_density": q_xsect_density,
         "local_moran": q_local_moran,
         "cell_morton": q_cell_morton,
         "event_rollup": q_event_rollup,

@@ -204,15 +204,16 @@ def _queries(spark, sf_dir):
         return geo_dist_join(q, pts, max_meters=250_000.0,
                              query_id="doc_id", corpus_id="doc_id")
 
-    overlay_phases: dict = {}
-
     # big-grid pair at the reference's own operating point gsize=15000
     # (ref expr/env.sh:12). Its continental inputs have edges spanning only
     # a few cells at that grid; mirror the ratio by subdividing the lattice
-    # (s=24 -> unit edges become ~6-cell sub-edges). Edge-cells beyond the
-    # broadcast cap (shuffled cell join, merge-hint guard) and a skip map
-    # beyond its cap (hash-sharded by cx) — the 100 TB physical paths, not
-    # the broadcast fast paths.
+    # (s=24 -> unit edges become ~6-cell sub-edges). pip_biggrid's index
+    # (m=96: 1.46M edge-cell rows, 1.24M skip-map entries) is under
+    # plans/cells.BROADCAST_ROWS, so both of its joins broadcast; its
+    # stats bound (3.1M) is over the cap, so the first locate pays the one
+    # exact-size job (PipIndex._sizes). The shuffled, sort-merge pinned
+    # side of every index-side join is covered by
+    # tests/test_broadcast_rule.py.
     mbig = int(os.environ.get("SPARK_GRAFT_BIGGRID_M", "96"))
     sbig = int(os.environ.get("SPARK_GRAFT_BIGGRID_SUBDIV", "24"))
     gbig = int(os.environ.get("SPARK_GRAFT_BIGGRID_GSIZE", "15000"))
@@ -286,16 +287,12 @@ def _queries(spark, sf_dir):
     q_lsi_biggrid.check = biggrid_check
 
     def q_overlay():
-        # composite overlay end-to-end on the bench lattice pair, with
-        # per-phase wall times (edges/lsi/pip0/pip1/writer sub-phases)
-        # mirroring the reference's phase logs (expr/draw/overlay/*.log)
+        # composite overlay end-to-end on the bench lattice pair (per-phase
+        # times: spatialbench/run.py --trace 1, overlay.*_s)
         from rayjoin_spark.operators.overlay import overlay
 
-        overlay_phases.clear()
-        oc, _ = overlay(ca, pa, cb, pb, scaling, GridSpec(256), timings=overlay_phases)
+        oc, _ = overlay(ca, pa, cb, pb, scaling, GridSpec(256))
         return oc
-
-    q_overlay.phases = overlay_phases
 
     def q_overlay_biggrid():
         # fine-grid overlay smoke: same pipeline at gsize 8192, where the
@@ -603,10 +600,6 @@ def run_suite(
     out.update(cold_times)
     if index_build:
         out["pip_index_build"] = index_build
-    ph = dict(getattr(qs.get("overlay_chains"), "phases", None) or {})
-    if ph and "overlay_chains" in times:
-        ph["output"] = round(max(times["overlay_chains"] - sum(ph.values()), 0.0), 3)
-        out["overlay_phases"] = ph
     check = getattr(qs.get("lsi_biggrid"), "check", None)
     if check is not None:
         out["biggrid_check"] = check()
@@ -721,6 +714,31 @@ def _suite_in_subprocess(cpus: int) -> dict:
     return {"times": times, "counts": counts, "total": round(sum(times.values()), 3)}
 
 
+#: markers around the part of BENCH.md that `--scaling` generates; the
+#: hand-kept sections outside them are left as they are
+SCALING_BEGIN = "<!-- bench.py --scaling: generated block, begin -->"
+SCALING_END = "<!-- bench.py --scaling: generated block, end -->"
+
+
+def _write_scaling_block(lines: list[str]) -> None:
+    """Replace the generated block of BENCH.md with ``lines``; with no
+    block yet, put it at the top and keep the rest of the file."""
+    path = os.path.join(os.path.dirname(__file__) or ".", "BENCH.md")
+    try:
+        with open(path) as f:
+            old = f.read()
+    except FileNotFoundError:
+        old = ""
+    block = "\n".join([SCALING_BEGIN, *lines, SCALING_END])
+    if SCALING_BEGIN in old and SCALING_END in old:
+        head, rest = old.split(SCALING_BEGIN, 1)
+        new = head + block + rest.split(SCALING_END, 1)[1]
+    else:
+        new = block + "\n\n" + old if old else block + "\n"
+    with open(path, "w") as f:
+        f.write(new)
+
+
 def main():
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     if "--suite-once" in sys.argv:
@@ -825,8 +843,7 @@ def main():
             "and exactness (int64 predicates vs the reference's 'Roundoff "
             "error should not cause it, I hope' double compare).",
         ]
-        with open(os.path.join(os.path.dirname(__file__) or ".", "BENCH.md"), "w") as f:
-            f.write("\n".join(lines) + "\n")
+        _write_scaling_block(lines)
         print(json.dumps({"metric": "scaling_efficiency", "value": total_eff,
                           "unit": "ratio", "queries": r_big["times"], "sf": sf}))
         return
@@ -848,7 +865,6 @@ def main():
         "ann_ivf_recall": r.get("ann_ivf_recall"),
         "overlay_chains_cold_s": r.get("overlay_chains_cold_s"),
         "overlay_biggrid_cold_s": r.get("overlay_biggrid_cold_s"),
-        "overlay_phases": r.get("overlay_phases"),
         "biggrid_check": r.get("biggrid_check"),
         "pip_index_build": r.get("pip_index_build"),
         "sf1_evidence": r.get("sf1_evidence"),

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import annulus_rounds, round0_radius
+from rayjoin_spark.plans.cells import annulus_rounds, index_side, round0_radius
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 
@@ -106,8 +106,6 @@ def dist_join(
     d_int: int = 1 << 22,
     query_id: str = "point_id",
     corpus_id: str = "corpus_id",
-    broadcast_max: int = 2_000_000,
-    caches: list | None = None,
 ) -> DataFrame:
     """Within-distance spatial join: all (query, corpus) pairs whose exact
     snapped-integer Euclidean distance is <= d_int. The classic spatial
@@ -122,12 +120,14 @@ def dist_join(
     Scale shape: each query probes the (2R+1)^2 cells that can contain a
     point within d_int (R = d_int // cell_w + 1, cell_w the guaranteed
     minimum cell int-width) — a *bounded* fan-out explode; candidates come
-    from a hash equi-join on (cx, cy) against the corpus cell table
-    (broadcast when small). A corpus point lives in exactly one cell and
-    probe cells are distinct per query, so no pair dedup is needed.
-    Pick grid so R stays small (fan-out ~ (d/cell)^2): the knob trades
-    explode width against per-cell candidate count, exactly like the
-    reference's LSI grid (src/grid/uniform_grid.h:44-86).
+    from an equi-join on (cx, cy) against the corpus cell table, which is
+    counted (one job, nothing cached) and joined through
+    plans/cells.index_side: broadcast when small, else sort-merge pinned.
+    A corpus point lives in exactly one cell and probe cells are distinct
+    per query, so no pair dedup is needed. Pick grid so R stays small
+    (fan-out ~ (d/cell)^2): the knob trades explode width against
+    per-cell candidate count, exactly like the reference's LSI grid
+    (src/grid/uniform_grid.h:44-86).
     """
     grid = grid or GridSpec(64)
     cell_w = int(1.0 / grid.cell_scale)
@@ -143,16 +143,7 @@ def dist_join(
         .withColumn("ccx", grid.cell_of(F.col("cx_i")))
         .withColumn("ccy", grid.cell_of(F.col("cy_i")))
     )
-    # persist BEFORE the size probe so the count populates the cache the
-    # join (broadcast or shuffled) then reads — one corpus scan, not two.
-    # `caches` (the pip_locate out-param pattern) hands the persisted
-    # frame to the caller for release — loop callers (closest_pair)
-    # otherwise leak one cached corpus copy per invocation.
-    cp = cp.persist()
-    if caches is not None:
-        caches.append(cp)
-    if broadcast_max and cp.count() <= broadcast_max:
-        cp = F.broadcast(cp)
+    cp = index_side(cp, cp.count())
     probes = (
         queries.select(
             F.col(query_id).alias("qid"),
@@ -211,7 +202,6 @@ def geo_dist_join(
     cell_udeg: int = 250_000,
     query_id: str = "point_id",
     corpus_id: str = "corpus_id",
-    broadcast_max: int = 2_000_000,
 ) -> DataFrame:
     """Geodesic within-distance join over WGS84 points (integer
     microdegree lon/lat columns ``lon_udeg``/``lat_udeg``): all
@@ -246,8 +236,9 @@ def geo_dist_join(
     boundary window per pair for libm/JVM divergence). Returns
     (query_id, corpus_id, dist_m).
 
-    Scale shape: one bounded explode + one hash equi-join on the cell
-    (corpus side broadcast under ``broadcast_max``) + codegen math.
+    Scale shape: one bounded explode + one equi-join on the cell (the
+    counted corpus side through plans/cells.index_side, as in dist_join;
+    nothing cached) + codegen math.
     ``cell_udeg`` is the fan-out knob, exactly like dist_join's grid.
     """
     import math
@@ -276,9 +267,7 @@ def geo_dist_join(
         cx_of("lon_udeg").alias("ccx"),
         cy_of("lat_udeg").alias("ccy"),
     )
-    cp = cp.persist()
-    if broadcast_max and cp.count() <= broadcast_max:
-        cp = F.broadcast(cp)
+    cp = index_side(cp, cp.count())
 
     # x-ring: EXACT spherical longitude reach at the worst parallel the
     # pair can touch — |query lat| plus the full latitude reach. From the
@@ -487,7 +476,8 @@ def closest_pair(
 
     Scale shape: each round is one dist_join (bounded explode + hash
     equi-join) + a map-side-combinable struct-min; rounds materialize
-    via localCheckpoint (house iterative pattern). Choose d0 near the
+    via localCheckpoint (house iterative pattern) and cache nothing, so
+    no round leaves a corpus copy behind. Choose d0 near the
     expected NN distance (domain_extent / sqrt(n)) so round one already
     lands non-empty and the probe fan-out (d0/cell)^2 stays small.
     """
@@ -504,17 +494,11 @@ def closest_pair(
     d = min(d0, d_cap)
     pairs = None
     for _ in range(max_rounds):
-        caches: list = []
         pairs = (
-            dist_join(
-                points, corpus, scaling, grid=grid, d_int=d,
-                query_id=point_id, caches=caches,
-            )
+            dist_join(points, corpus, scaling, grid=grid, d_int=d, query_id=point_id)
             .filter(F.col(point_id) < F.col("corpus_id"))
             .localCheckpoint(eager=True)
         )
-        for c in caches:  # checkpoint materialized; release per round
-            c.unpersist()
         if not pairs.isEmpty() or d >= d_cap:
             break
         d = min(d * growth, d_cap)

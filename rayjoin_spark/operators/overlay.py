@@ -51,13 +51,12 @@ Fraction-midpoint oracle on such an adversarial pair).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rayjoin_spark.operators.lsi import lsi_join
 from rayjoin_spark.operators.pip import PipIndex, pip_locate
+from rayjoin_spark.plans.cells import index_side
 from rayjoin_spark.plans.layers import build_edges, EID_STRIDE_DEFAULT
 from rayjoin_spark.plans.ranking import ordered_index
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
@@ -141,8 +140,6 @@ def overlay(
     eid_stride: int = EID_STRIDE_DEFAULT,
     prebuilt_edges: tuple[DataFrame, DataFrame] | None = None,
     prebuilt_xs: DataFrame | None = None,
-    timings: dict | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Full overlay; returns (out_chains, out_points):
 
@@ -153,29 +150,15 @@ def overlay(
     in the reference writer's canonical order (map0 chains first, then
     map1, fragments in walk order; face/point ids first-encounter).
 
-    Pass ``timings={}`` to record per-phase wall seconds (edges / lsi /
-    pip0 / pip1), mirroring the reference's phase logs
-    (expr/draw/overlay/*_grid.log) — each phase frame is persisted and
-    forced so downstream reuse doesn't double-count.
-
-    ``broadcast_max_rows`` caps the writer's two small-side joins (chain
-    topology, face dict): under the cap they broadcast, above it they
-    degrade to co-keyed shuffle joins — no uncapped input-sized broadcast
-    anywhere (PipIndex applies the same convention to its skip map).
+    The writer's two index-side joins (chain topology, face dict) go
+    through plans/cells.index_side like PIP's: broadcast under its cap,
+    sort-merge pinned above it — no uncapped input-sized broadcast
+    anywhere. Per-phase times come from outside the operator (the
+    benchmark's traced run re-runs the phases through their public
+    functions), so the operator runs no extra job for them.
     """
     grid = grid or GridSpec()
 
-    def _mark(name: str, *frames: DataFrame, since: float | None = None) -> None:
-        """Record a phase: forces `frames` and, when `since` is given,
-        charges the phase from that start time — ordered_index stages run
-        eager jobs (range sample + checkpoint + offsets collect) at
-        CONSTRUCTION, so timing only the count would hide them."""
-        if timings is None:
-            return
-        t0 = time.time() if since is None else since
-        for fr in frames:
-            fr.count()
-        timings[name] = round(time.time() - t0, 3)
     # prebuilt stage inputs let checkpointed_overlay feed resumed parquet
     # stages straight into the downstream phases (plans/checkpoint.py)
     if prebuilt_edges is not None:
@@ -184,15 +167,12 @@ def overlay(
         edges_a = build_edges(chains_a, points_a, scaling, eid_stride).persist()
         edges_b = build_edges(chains_b, points_b, scaling, eid_stride).persist()
 
-    _mark("edges", edges_a, edges_b)
-
     # --- phase 1: LSI with exact points (shared by both maps) ---
     xs = (
         prebuilt_xs
         if prebuilt_xs is not None
         else lsi_join(edges_a, edges_b, grid, with_points=True)
     ).persist()
-    _mark("lsi", xs)
 
     # PIP indexes over each layer, shared by both locates against it; they
     # reuse the long-edge stats the LSI join took of the same frames
@@ -242,20 +222,15 @@ def overlay(
             )
             .drop("o_a", "o_b", "o_x1", "o_x2", "o_left", "o_right", "dx", "dy")
         )
-        # localCheckpoint (NOT persist) — two reasons:
-        # (1) the timings path must not change the physical plan under
-        #     measurement; (2) ex/vert are RESULT-sized frames referenced
-        #     from the ~20 joined subtrees of the writer below, and Spark
-        #     re-ANALYZES each reference's full lineage per transformation
-        #     (persist does not truncate the analyzed plan) — with the
-        #     PIP/LSI trees attached that was ~14 s of pure driver CPU at
-        #     bench scale. Truncating here cuts every writer-side copy to
-        #     an RDD scan; materialization is executor-parallel.
-        t_pip = time.time()
+        # localCheckpoint (NOT persist): ex/vert are RESULT-sized frames
+        # referenced from the ~20 joined subtrees of the writer below, and
+        # Spark re-ANALYZES each reference's full lineage per
+        # transformation (persist does not truncate the analyzed plan) —
+        # with the PIP/LSI trees attached that was ~14 s of pure driver
+        # CPU at bench scale. Truncating here cuts every writer-side copy
+        # to an RDD scan; materialization is executor-parallel.
         vert = vert.localCheckpoint(eager=True)
         ex = ex.localCheckpoint(eager=True)
-        if timings is not None:
-            timings[f"pip{im}"] = round(time.time() - t_pip, 3)
 
         # --- phase 4: event stream -> fragments ---
         # xsect j on edge seq occupies positions (seq,1,j,0) [closes frag j]
@@ -364,13 +339,9 @@ def overlay(
         .unionByName(chains_b.withColumn("map_id", F.lit(1)))
         .select("map_id", "chain_id", "left_polygon_id", "right_polygon_id")
     )
-    # chain topology is input-chain-sized: broadcast only under the cap
-    # (same convention as PipIndex.broadcast_max_rows) — above it this is
-    # a plain shuffle join co-keyed with the events stream, never an
-    # uncapped >8 GiB broadcast at billion-chain scale
-    if ch.count() <= broadcast_max_rows:
-        ch = F.broadcast(ch)
-    events = events.join(ch, ["map_id", "chain_id"])
+    # chain topology is input-chain-sized: never an uncapped >8 GiB
+    # broadcast at billion-chain scale
+    events = events.join(index_side(ch, ch.count()), ["map_id", "chain_id"])
 
     # emit filter (reference output_chain.h:60-63): keep fragment iff
     # other != 0 and (left != 0 or right != 0)
@@ -397,10 +368,7 @@ def overlay(
     # Truncating here cuts each copy to an RDD scan. The frame is
     # OUTPUT-sized and the write is partition-parallel on executors — not
     # a serial scaling constant.
-    t_ck = time.time()
     events = events.localCheckpoint(eager=True)
-    if timings is not None:
-        timings["out_events"] = round(time.time() - t_ck, 3)
 
     # canonical fragment order + per-fragment point seq
     ord_w = Window.partitionBy("map_id", "chain_id", "frag").orderBy(
@@ -414,7 +382,6 @@ def overlay(
     # face/point first-encounter keys need no join back through the ranked
     # ids: out_chain_id IS the dense rank of (map_id, chain_id, frag), so
     # ordering by the walk key is ordering by out_chain_id.
-    t_fragids = time.time()
     # first/last point COORDS per fragment ride in the agg (walk order =
     # (p0..p3) order, the same order pseq numbers): the chains output then
     # resolves its endpoint point-ids with two FRAGMENT-level joins against
@@ -527,7 +494,6 @@ def overlay(
         F.col("fk2").alias("k2"),
         (F.col("_gid") - F.lit(base.get(1, 0)) + 1).alias("face_id"),
     )
-    _mark("out_dicts", fused, since=t_fragids)
     fd1 = face_dict.select(
         F.col("k1").alias("lk"), F.col("k2").alias("lv"), F.col("face_id").alias("left_face")
     )
@@ -535,12 +501,11 @@ def overlay(
         F.col("k1").alias("rk"), F.col("k2").alias("rv"), F.col("face_id").alias("right_face")
     )
     # face dict is output-face-sized (persisted above, count is cached)
-    if face_dict.count() <= broadcast_max_rows:
-        fd1, fd2 = F.broadcast(fd1), F.broadcast(fd2)
+    n_faces = face_dict.count()
     out_chains = (
         frag_ids
-        .join(fd1, ["lk", "lv"], "left")
-        .join(fd2, ["rk", "rv"], "left")
+        .join(index_side(fd1, n_faces), ["lk", "lv"], "left")
+        .join(index_side(fd2, n_faces), ["rk", "rv"], "left")
         .na.fill({"left_face": 0, "right_face": 0})
     )
 

@@ -34,14 +34,14 @@ set-at-a-time passes.
 * empty cells are skipped: a broadcast map cx -> sorted non-empty cys
   lets each point jump straight to its candidate cells.
 
-Scale note: each pass is an equi-join co-partitioned on (cx, cy). The
-column-skip map is gsize^2 ints worst case — while its total entry count
-fits `PipIndex.skipmap_max_entries` it is broadcast; beyond that it is
-automatically SHARDED across executors (plain hash join on cx), so dense
-layers at gsize >= 8k never funnel the map through the driver.
-`PipIndex` makes the exploded edge-cells and the skip map reusable
-across pip_locate calls over the same base layer (the overlay locates
-both vertex sets against both maps).
+Scale note: each pass is an equi-join on (cx, cy). The edge cells and
+the column-skip map (gsize^2 ints worst case) each join through the one
+index-side rule, plans/cells.index_side: broadcast while they fit
+`BROADCAST_ROWS`, else shuffled and sort-merge pinned (the skip map then
+SHARDS across executors by cx), so dense layers at gsize >= 8k never
+funnel an index through the driver. `PipIndex` makes the exploded
+edge-cells and the skip map reusable across pip_locate calls over the
+same base layer (the overlay locates both vertex sets against both maps).
 """
 
 from __future__ import annotations
@@ -49,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import explode_edges_to_cells, layer_split
+from rayjoin_spark.plans.cells import explode_edges_to_cells, index_side, layer_split
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 # Exact total-order key for xsect_y = n_/b (b > 0), where n_ = -a*px - c,
@@ -126,17 +126,15 @@ class PipIndex:
     held across queries: build once per layer, pass to every pip_locate over
     that layer (overlay does two locates per side).
 
-    When the exploded edge-cells table is small (<= broadcast_max_rows),
-    point-vs-cell joins broadcast it — every PIP pass becomes a narrow
-    map-side join with zero shuffle of the point side. Above the cap the
-    join shuffles on (cx, cy), the 100 TB path."""
+    Both tables join through plans/cells.index_side. While they fit its
+    cap, every PIP pass is a narrow map-side join with zero shuffle of
+    the point side; above it the joins shuffle on (cx, cy) sort-merge
+    pinned, the 100 TB path. The layer's stats bound decides without a
+    job while it is under the cap; only above it does the exact count
+    (_sizes, one job) decide."""
 
-    def __init__(self, base_edges: DataFrame, grid: GridSpec,
-                 broadcast_max_rows: int = 2_000_000,
-                 skipmap_max_entries: int = 4_000_000):
+    def __init__(self, base_edges: DataFrame, grid: GridSpec):
         self.grid = grid
-        self._bcast_max = broadcast_max_rows
-        self._skipmap_max = skipmap_max_entries
         self._joinable = None
         self._skipmap = None
         self._n_rows = None
@@ -147,8 +145,7 @@ class PipIndex:
         # Decided on the UNFILTERED layer, so an lsi_join over the same
         # frame shares the stats agg; est_rows then over-counts the
         # vertical edges dropped below, which keeps it an upper bound on
-        # edge-cell rows — the broadcast decisions below skip the
-        # exact-size job when the bound is already under the cap.
+        # edge-cell rows and skip-map entries alike.
         k, self._est_rows = layer_split(base_edges, grid)
         # vertical edges can never qualify: the SoS x-interval (x_min, x_max]
         # / [x_min, x_max) is empty when x1 == x2 (reference
@@ -187,39 +184,21 @@ class PipIndex:
         return self._n_rows, self._n_cells
 
     def joinable_cells(self):
-        """edge_cells, broadcast-wrapped when small. The stats upper bound
-        decides without a job when it is under the cap; only the big regime
-        (bound above cap) pays the exact-size agg — where its one job is
-        noise next to the query itself."""
+        """edge_cells, ready for the point-vs-cells join (index_side)."""
         if self._joinable is None:
-            if self._bcast_max and self._est_rows <= self._bcast_max:
-                n_rows = self._est_rows
-            else:
-                n_rows, _ = self._sizes()
-            if self._bcast_max and n_rows <= self._bcast_max:
-                self._joinable = F.broadcast(self.edge_cells)
-            else:
-                # explode-aware broadcast guard: pin the point-vs-cells
-                # join to sort-merge so AQE cannot broadcast-convert the
-                # exploded side from compressed shuffle stats (its
-                # deserialized size blows the 8 GiB cap at fine grids)
-                self._joinable = self.edge_cells.hint("merge")
+            self._joinable = index_side(
+                self.edge_cells, self._est_rows, lambda: self._sizes()[0]
+            )
         return self._joinable
 
     def skipmap_joinable(self):
-        """col_cells for the point-side join: broadcast while the total
-        entry count (<= gsize^2) fits, else a plain frame — the join then
-        SHARDS the skip map across executors by cx (hash shuffle), the
-        gsize>=8k dense-layer path the module docstring promises."""
+        """col_cells, ready for the point-side join (index_side) on its
+        total entry count (<= gsize^2); merge-pinned, the join shards the
+        map across executors by cx."""
         if self._skipmap is None:
-            if self._skipmap_max and self._est_rows <= self._skipmap_max:
-                n_cells = self._est_rows  # n_cells <= n_rows <= bound
-            else:
-                _, n_cells = self._sizes()
-            if self._skipmap_max and n_cells <= self._skipmap_max:
-                self._skipmap = F.broadcast(self.col_cells)
-            else:
-                self._skipmap = self.col_cells
+            self._skipmap = index_side(
+                self.col_cells, self._est_rows, lambda: self._sizes()[1]
+            )
         return self._skipmap
 
     def unpersist(self) -> None:

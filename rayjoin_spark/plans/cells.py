@@ -12,8 +12,9 @@ Also provides the per-cell workload metrics the reference exposes as
 histograms (src/grid/uniform_grid.h:360-494), which drive explicit salting
 of hot cells at scale (see plans/skew.py), the cell join's stats-driven
 decisions (layer_split: long-edge split; join_grid: the LSI join's
-refinement of fat cells), and the one Chebyshev-annulus round loop of the
-point queries (annulus_rounds, behind knn_points and nearest_edge).
+refinement of fat cells; index_side: broadcast or sort-merge for every
+index-side join), and the one Chebyshev-annulus round loop of the point
+queries (annulus_rounds, behind knn_points and nearest_edge).
 
 Long edges at fine grids: the bbox rectangle explode is QUADRATIC in the
 edge's cell span for diagonal edges (a unit lattice diagonal at gsize 15000
@@ -220,6 +221,35 @@ def join_grid(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> GridSpe
     return grid if f == 1 else GridSpec(grid.grid_size * f)
 
 
+#: the build-side cap of every index-side join: an index of at most this
+#: many rows is broadcast, a bigger one is shuffled and sort-merge pinned
+BROADCAST_ROWS = 2_000_000
+
+
+def index_side(frame: DataFrame, rows: int, exact=None) -> DataFrame:
+    """The index side of a point/probe-vs-index join, ready to join:
+    ``F.broadcast(frame)`` when ``rows`` is at most BROADCAST_ROWS, else
+    ``frame.hint("merge")``. Every index-side join decides here: the PIP
+    edge cells and skip map, the annulus rounds' index, the distance
+    joins' corpus and the overlay writer's chain topology and face dict.
+
+    ``rows`` is the side's row count, exact or an upper bound. When a
+    bound is over the cap, ``exact()`` (if given) supplies the exact
+    count, so a caller pays its count job only then.
+
+    Why the pin: a big side left to the planner can be broadcast-converted
+    by AQE from its compressed shuffle statistics, and an exploded cell
+    table deserializes far bigger than those (past the 8 GiB broadcast
+    limit at fine grids). AQE re-plans within the join hint, so the merge
+    hint keeps such a side shuffled.
+    """
+    if rows > BROADCAST_ROWS and exact is not None:
+        rows = exact()
+    if rows <= BROADCAST_ROWS:
+        return F.broadcast(frame)
+    return frame.hint("merge")
+
+
 def cell_counts(edge_cells: DataFrame) -> DataFrame:
     """Edges per cell — the reference's grid histogram input
     (src/grid/uniform_grid.h:169-199)."""
@@ -280,13 +310,6 @@ def round0_radius(
     return r
 
 
-#: index-side rule of annulus_rounds: an index of at most this many rows is
-#: broadcast (every round a narrow map-side join, no shuffle of the probe
-#: side); a bigger one is persisted and its cell join pinned to sort-merge,
-#: the pin PipIndex.joinable_cells and the LSI merge guard use, so AQE
-#: cannot broadcast-convert it from compressed shuffle stats
-ANNULUS_BROADCAST_ROWS = 2_000_000
-
 _QUERY_COLS = ("qid", "qx", "qy", "qcx", "qcy")
 
 
@@ -306,7 +329,9 @@ def annulus_rounds(
 
     ``queries`` is (qid, qx, qy, best): snapped ints and each query's
     empty best. ``index`` is the cell-keyed side with its cell in
-    (icx, icy) and at most ``index_rows`` rows. ``radius0(n_queries)``
+    (icx, icy) and at most ``index_rows`` rows; index_side decides its
+    join, and a merge-side index is persisted for the rounds and released
+    on return. ``radius0(n_queries)``
     gives the round-0 radius (round0_radius with the caller's k). Round i
     probes the rings [lo..hi] around each unresolved query's cell
     (clipped to the grid), equi-joins them to the index on the cell, and
@@ -330,12 +355,8 @@ def annulus_rounds(
     ).localCheckpoint(eager=True)
     # the count is a cheap scan of the checkpoint just materialized
     r0 = radius0(active.count())
-    persisted = None
-    if index_rows <= ANNULUS_BROADCAST_ROWS:
-        index = F.broadcast(index)
-    else:
-        persisted = index.persist()
-        index = persisted.hint("merge")
+    persisted = index.persist() if index_rows > BROADCAST_ROWS else None
+    index = index_side(index if persisted is None else persisted, index_rows)
     done = []
     lo, hi = 0, r0
     try:

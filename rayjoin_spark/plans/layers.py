@@ -8,8 +8,9 @@ as pure DataFrame column arithmetic:
 * the CSR walk becomes a `lead()` window over (chain_id, seq) — a narrow
   per-chain operation, shuffled once by chain_id;
 * the line equation (reference src/map/map.h:26-38) is three int64 columns;
-* left/right polygon ids ride along from the chains table via an equi-join
-  (broadcast when the chain table is small).
+* left/right polygon ids ride along from the chains table via a broadcast
+  equi-join (uncapped: a row count to size it would add a job to every
+  layer build).
 
 Edge ids are `chain_id * eid_stride + seq` — deterministic and
 collision-free without a global row_number (which would serialize on a
@@ -38,7 +39,6 @@ def build_edges(
     points: DataFrame,
     scaling: Scaling,
     eid_stride: int = EID_STRIDE_DEFAULT,
-    broadcast_chains: bool = True,
 ) -> DataFrame:
     """chains(chain_id,left_polygon_id,right_polygon_id) + points(chain_id,seq,x,y)
     -> edges(eid, x1,y1,x2,y2, a,b,c, left_polygon_id, right_polygon_id).
@@ -79,9 +79,7 @@ def build_edges(
         .selectExpr("*", "-x1 * a - y1 * b AS c")
         .filter("a != 0 OR b != 0")
     )
-    ch = chains.selectExpr("chain_id", "left_polygon_id", "right_polygon_id")
-    if broadcast_chains:
-        ch = F.broadcast(ch)
+    ch = F.broadcast(chains.selectExpr("chain_id", "left_polygon_id", "right_polygon_id"))
     return e.join(ch, "chain_id").selectExpr(
         "eid",
         "chain_id",

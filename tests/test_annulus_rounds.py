@@ -70,7 +70,7 @@ def test_large_index_pins_sort_merge(spark, monkeypatch, op):
     """Above the row bound the index is persisted and every round's cell
     join runs as a sort-merge join, never a (possibly AQE-converted)
     broadcast."""
-    monkeypatch.setattr(cells, "ANNULUS_BROADCAST_ROWS", 0)
+    monkeypatch.setattr(cells, "BROADCAST_ROWS", 0)
     first = _next_execution(spark)
     assert op(spark).collect()
     joins = _cell_joins_since(spark, first)
@@ -83,7 +83,7 @@ def test_rounds_leave_nothing_cached(spark, monkeypatch, op, bound):
     """The output reads only checkpointed rounds, so whatever the loop
     persisted is released before it returns."""
     if bound is not None:
-        monkeypatch.setattr(cells, "ANNULUS_BROADCAST_ROWS", bound)
+        monkeypatch.setattr(cells, "BROADCAST_ROWS", bound)
     spark.catalog.clearCache()
     assert op(spark).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

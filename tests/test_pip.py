@@ -1,5 +1,7 @@
 """PIP locate vs the exact Python oracle."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,24 +53,31 @@ def test_pip_matches_oracle(spark, gsize):
     assert 0 < n_hits < 200  # both hits and misses exercised
 
 
-def test_pip_sharded_skipmap_parity(spark):
+def test_pip_sharded_skipmap_parity(spark, monkeypatch):
     """Big-grid path: when the column skip-map exceeds the broadcast cap
-    it is hash-join sharded by cx instead — results must be identical,
-    and the executed plan must not broadcast the map."""
+    it is sharded by cx in a sort-merge join instead — results must be
+    identical, and the executed plan must not broadcast the map."""
     from rayjoin_spark.operators.pip import PipIndex
+    from rayjoin_spark.plans import cells
 
     scaling, ea, ea_py, pts = _setup(spark, 4, 150)
     grid = GridSpec(64)
-    sharded_idx = PipIndex(ea, grid, skipmap_max_entries=1)  # force shard
-    got_sharded = {
-        r["point_id"]: (r["closest_eid"], r["face_id"])
-        for r in pip_locate(pts, ea, scaling, grid, index=sharded_idx).collect()
-    }
     got_bcast = {
         r["point_id"]: (r["closest_eid"], r["face_id"])
         for r in pip_locate(pts, ea, scaling, grid).collect()
     }
+    monkeypatch.setattr(cells, "BROADCAST_ROWS", 0)  # force shard
+    # a cached frame matches its plan regardless of join hints: drop the
+    # broadcast run's caches so the sharded run plans its own joins
+    spark.catalog.clearCache()
+    sharded_idx = PipIndex(ea, grid)
+    located = pip_locate(pts, ea, scaling, grid, index=sharded_idx)
+    got_sharded = {r["point_id"]: (r["closest_eid"], r["face_id"]) for r in located.collect()}
     assert got_sharded == got_bcast and len(got_sharded) == 150
+    # the skip-map join (keys pcx = cx alone) is not a broadcast join
+    plan = located._jdf.queryExecution().executedPlan().toString()
+    skip_joins = re.findall(r"(\w+Join) \[pcx#\d+L?\], \[cx#\d+L?\]", plan)
+    assert skip_joins and "BroadcastHashJoin" not in skip_joins, skip_joins
     # the oracle agrees too
     _check(spark, scaling, ea, ea_py, pts, 64, index=sharded_idx)
 
