@@ -1830,13 +1830,14 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lsi_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same join, explicit hot-cell salting path (threshold 0 = salt all
-    joint cells, exercising the scatter/replicate plan end-to-end).
+    joint cells, each into min(32, workload) buckets, exercising the
+    scatter/replicate plan end-to-end).
     Oracle: identical to lsi_join — salting must not change the rows."""
     from rayjoin_spark.plans.skew import lsi_join_salted
 
     ea = derived.edges_a(spark, sf_dir)
     eb = derived.edges_b(spark, sf_dir)
-    return lsi_join_salted(ea, eb, DERIVED_GRID, hot_threshold=0, n_salts=4)
+    return lsi_join_salted(ea, eb, DERIVED_GRID, hot_threshold=0)
 
 
 def q_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2795,7 +2796,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "length_quantiles": q_length_quantiles,
         "page_metadata": q_page_metadata,
         "canonical_dedup": q_canonical_dedup,
-        "script_profile": q_script_profile,
+        "lsi_join_salted": q_lsi_salted,
         "heavy_hitters": q_heavy_hitters,
         "cells_compact": q_cells_compact,
         "range_report": q_range_report,
@@ -2864,7 +2865,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cell_workload_hist": q_cell_workload,
         "tile_counts": q_tiles,
         "raster_vectorize": q_raster_vectorize,
-        "lsi_join_salted": q_lsi_salted,
+        "script_profile": q_script_profile,
         "token_count": q_token_count,
         "bpe_token_count": q_bpe_tokens,
         "quality_score": q_quality,

@@ -423,17 +423,12 @@ def _scaling_queries(spark, only: str | None = None):
         # cell, a few edges per cell and side; no cell then reaches the
         # 1M-pair hot threshold, so the salted join runs the plain cell
         # join plus its per-cell workload agg (plans/skew.py hot_cells).
-        # Explode, shuffle and the exact predicate do the work. Salting
-        # still splits a cell into ceil(workload / 250k) 2-D buckets
-        # (capped at 32) when a skewed layer pair stays hot at the join
-        # grid.
+        # Explode, shuffle and the exact predicate do the work. A cell
+        # that stays hot at the join grid splits into 2-D buckets sized
+        # from the threshold alone: ceil(workload / 250k), at most 32.
         from rayjoin_spark.plans.skew import lsi_join_salted
 
-        return lsi_join_salted(
-            ea, eb, GridSpec(gsize_big), hot_threshold=1_000_000,
-            n_salts=int(os.environ.get("SPARK_GRAFT_SALT_CAP", "32")),
-            target_pairs=int(os.environ.get("SPARK_GRAFT_SALT_TARGET", "250000")),
-        )
+        return lsi_join_salted(ea, eb, GridSpec(gsize_big), hot_threshold=1_000_000)
 
     def q_lsi_big_unsalted():
         # DIAGNOSIS row (context, not a workload row): the plain plan on
@@ -819,7 +814,10 @@ def main():
                 "the analog of the reference's workload histograms, "
                 "src/grid/uniform_grid.h:444-494) flags cells above 1M "
                 "candidate pairs and splits each into ceil(workload/250k) "
-                "2-D salt buckets (p x q factoring, capped at 32). "
+                "2-D salt buckets (p x q factoring, capped at 32); the bucket "
+                "size is a quarter of the threshold and the cap is "
+                "`plans/skew.SALT_MAX`, so the threshold is the row's only "
+                "salting option. "
                 "plans/cells.join_grid refines the caller's grid to about one "
                 "lattice unit per cell, no cell is hot, and both rows run the "
                 "same cell join; the salted row also pays its hot-cell agg. "

@@ -327,7 +327,8 @@ def neardup_components(
     round r cost O(r) — and convergence is an exact changed-count == 0
     test. Near-dup components are overwhelmingly tiny cliques, so
     real-data convergence is 2-3 rounds; the jump bounds the adversarial
-    long-chain case.
+    long-chain case. Raises RuntimeError when max_rounds pass without
+    the fixpoint (labels would be half-propagated).
     """
     sym = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -366,6 +367,8 @@ def neardup_components(
         labels = jumped.select("id", F.col("new_label").alias("label"))
         if changed == 0:
             break
+    else:
+        raise RuntimeError(f"neardup_components: no fixpoint within {max_rounds} rounds")
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return labels.join(sizes, "label").select(
         F.col("id").alias(id_col),

@@ -456,7 +456,6 @@ def closest_pair(
     grid: GridSpec | None = None,
     d0: int = 1 << 22,
     growth: int = 8,
-    max_rounds: int = 6,
     point_id: str = "point_id",
 ) -> DataFrame:
     """Global closest pair of points — exact, via radius-widening rounds
@@ -468,11 +467,14 @@ def closest_pair(
     distance <= d. If that set is non-empty, the global closest pair is
     in it (its distance is <= any member's), so one non-empty round is
     sufficient — the widening loop (d *= growth) only runs while the set
-    is EMPTY. Ties break on (dist2, id_a, id_b) via a lexicographic
-    struct-min, so the answer is bit-stable on any engine/partitioning.
+    is EMPTY and d is below the whole-domain cap, so it ends by
+    construction within ceil(log_growth(2^31 / d0)) + 1 rounds, and any
+    two points meet by the cap round. Ties break on (dist2, id_a, id_b)
+    via a lexicographic struct-min, so the answer is bit-stable on any
+    engine/partitioning.
 
     Returns one row (point_a, point_b, dist2) with point_a < point_b, or
-    zero rows for < 2 distinct input points within the final radius.
+    zero rows for fewer than 2 input points.
 
     Scale shape: each round is one dist_join (bounded explode + hash
     equi-join) + a map-side-combinable struct-min; rounds materialize
@@ -481,8 +483,8 @@ def closest_pair(
     expected NN distance (domain_extent / sqrt(n)) so round one already
     lands non-empty and the probe fan-out (d0/cell)^2 stays small.
     """
-    if max_rounds < 1:
-        raise ValueError("closest_pair: max_rounds must be >= 1")
+    if d0 < 1 or growth < 2:
+        raise ValueError("closest_pair: d0 must be >= 1 and growth >= 2")
     corpus = points.select(
         F.col(point_id).alias("corpus_id"), F.col("x"), F.col("y")
     )
@@ -492,14 +494,13 @@ def closest_pair(
     # would overflow dist_join's int64 d^2 literal)
     d_cap = 1 << 31
     d = min(d0, d_cap)
-    pairs = None
-    for _ in range(max_rounds):
+    while True:
         pairs = (
             dist_join(points, corpus, scaling, grid=grid, d_int=d, query_id=point_id)
             .filter(F.col(point_id) < F.col("corpus_id"))
             .localCheckpoint(eager=True)
         )
-        if not pairs.isEmpty() or d >= d_cap:
+        if d >= d_cap or not pairs.isEmpty():
             break
         d = min(d * growth, d_cap)
     best = pairs.agg(

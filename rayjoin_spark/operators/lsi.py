@@ -42,18 +42,12 @@ edge; map-1 endpoints against a map-0 edge fall back to (+a, +b)
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from rayjoin_spark.plans import cells
 from rayjoin_spark.plans.cells import explode_edges_to_cells, join_grid, layer_split
 from rayjoin_spark.plans.scaling import GridSpec
 
 _EDGE_COLS = ["eid", "x1", "y1", "x2", "y2", "a", "b", "c", "ix1", "iy1"]
-
-#: above this estimated exploded-cell row count the cell join is pinned to
-#: sort-merge — AQE must not broadcast-convert an exploded side from its
-#: (deceptively small) compressed shuffle stats and then die at the 8 GiB
-#: deserialized cap (observed at gsize 15000 over long-edge inputs)
-BROADCAST_GUARD_ROWS = 4_000_000
 
 
 def _side(edge_cells: DataFrame, suffix: str) -> DataFrame:
@@ -104,8 +98,15 @@ def _owned_pairs(
     """The one cell-join core: pick the join grid (plans.cells.join_grid
     refines fat cells), explode each side at it (long-edge split decided
     per side by layer_split), suffix its columns, pin the join to
-    sort-merge when the estimated exploded rows pass the broadcast guard,
-    equi-join on the cell and keep each pair in its min shared cell.
+    sort-merge when even the smaller side's estimated exploded rows pass
+    plans.cells.BROADCAST_ROWS, equi-join on the cell and keep each pair
+    in its min shared cell.
+
+    The pin is index_side's rule for the side AQE would broadcast: a side
+    of at most BROADCAST_ROWS rows is safe to broadcast, and a bigger one
+    must not be broadcast-converted from its (deceptively small)
+    compressed shuffle stats and then die at the 8 GiB deserialized cap
+    (observed at gsize 15000 over long-edge inputs).
 
     ``join(cells_a, cells_b)`` replaces the plain (cx, cy) inner join (the
     salted join of plans/skew.py). Returns (pairs, split): when either side
@@ -116,7 +117,7 @@ def _owned_pairs(
     k_b, est_b = layer_split(edges_b, grid)
     ca = _side(explode_edges_to_cells(edges_a, grid, k_a), "a")
     cb = _side(explode_edges_to_cells(edges_b, grid, k_b), "b")
-    if est_a + est_b > BROADCAST_GUARD_ROWS:
+    if min(est_a, est_b) > cells.BROADCAST_ROWS:
         ca, cb = ca.hint("merge"), cb.hint("merge")
     j = join(ca, cb) if join else ca.join(cb, ["cx", "cy"], "inner")
     return j.filter(_OWNER_SQL), bool(k_a or k_b)
@@ -128,11 +129,10 @@ def lsi_candidates(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> Da
     Their cx, cy (and ix1, iy1) are cells of the JOIN grid
     (plans.cells.join_grid), which may be finer than ``grid``.
 
-    The long-edge split keeps this generator (and the lsi_stats diagnostic
-    built on it) LINEAR in an edge's cell span at fine grids. When a side
-    is split a pair may survive ownership in several fragment cells;
-    consumers needing unique pairs dedup by (eid_a, eid_b) (lsi_stats
-    counts distinct pairs explicitly)."""
+    The long-edge split keeps this generator LINEAR in an edge's cell
+    span at fine grids. When a side is split a pair may survive ownership
+    in several fragment cells; consumers needing unique pairs dedup by
+    (eid_a, eid_b)."""
     return _owned_pairs(edges_a, edges_b, grid)[0]
 
 
@@ -184,26 +184,6 @@ def with_xsect_point(pairs: DataFrame) -> DataFrame:
     )
 
 
-def lsi_stats(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec | None = None) -> DataFrame:
-    """Profiling counters analogous to the reference's debug atomics
-    (n_tests / hit counts, src/app/lsi_grid.h:122-156): candidate pairs
-    after dedup, surviving pairs, and populated joint cells — one row.
-    n_joint_cells counts cells of the join grid (plans.cells.join_grid),
-    which may be finer than ``grid``."""
-    grid = grid or GridSpec()
-    cand = lsi_candidates(edges_a, edges_b, grid)
-    pairs = lsi_intersect_filter(cand)
-    # distinct-pair counts: identical to count(*) when unsplit (ownership
-    # picks one cell per pair) and correct at fragment seams when the
-    # long-edge split armed itself inside lsi_candidates
-    return cand.agg(
-        F.count_distinct("eid_a", "eid_b").alias("n_candidates"),
-        F.count_distinct("cx", "cy").alias("n_joint_cells"),
-    ).crossJoin(
-        pairs.agg(F.count_distinct("eid_a", "eid_b").alias("n_pairs"))
-    )
-
-
 def _matched_pairs(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec, join=None) -> DataFrame:
     """Unique exactly-intersecting pairs: the core's owned candidates
     through the SoS predicate, deduped by (eid_a, eid_b) only when a side
@@ -236,9 +216,9 @@ def lsi_join(
     Each side's long-edge split comes from plans.cells.layer_split at the
     join grid (one cheap agg per DataFrame object and grid): a side whose
     longest edge spans more than the fragment length explodes as
-    parametric fragments, and above BROADCAST_GUARD_ROWS estimated
-    exploded rows the join is hinted to sort-merge so AQE cannot
-    broadcast-convert an exploded side.
+    parametric fragments, and when the smaller side's estimated exploded
+    rows pass plans.cells.BROADCAST_ROWS the join is hinted to sort-merge
+    so AQE cannot broadcast-convert an exploded side.
     """
     out = _matched_pairs(edges_a, edges_b, grid or GridSpec())
     if with_points:

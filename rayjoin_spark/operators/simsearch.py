@@ -67,46 +67,6 @@ def topk_dot(
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Exact top-k by cosine; float path (engine API, not oracle-checked)."""
-    dot = F.aggregate(
-        F.zip_with("cv", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("cn", norm(F.col("cv")))
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    j = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("corpus_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            (dot / (F.col("cn") * F.col("qn"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
-
-
 def _cosine_keep(min_cosine: float):
     """Exact integer cosine threshold over pair columns (dot, n_a, n_b):
     cos(a,b) >= t  <=>  dot >= 0 AND dot^2 * 10^4 >= round(t^2*10^4) *

@@ -8,12 +8,16 @@ fires, but BASELINE mandates explicit salting driven by the metrics
 table).
 
 Salting scheme for an inner equi-join A ⋈ B on (cx, cy) — TWO-DIMENSIONAL
-(grid) salting:
-  * a hot cell (workload above `threshold`) is split into p x q buckets
-    (p*q = its salt count);
-  * A-side rows scatter into p groups (i = pmod(hash(eid_a), p)) and are
-    replicated across the q B-groups; B-side rows scatter into q groups
-    (j = pmod(hash(eid_b), q)) and are replicated across the p A-groups;
+(grid) salting, sized by one rule:
+  * a cell is hot when its workload ne_a*ne_b exceeds ``hot_threshold``;
+    it gets ns = min(SALT_MAX, ceil(workload / max(hot_threshold // 4, 1)))
+    buckets: each holds about a quarter of the threshold's work (a cell
+    just over it splits 5 ways) until a monster cell hits SALT_MAX;
+  * ns is factored p x q with p = ceil(sqrt(ns)), q = ceil(ns / p);
+  * A-side rows scatter into p groups (i = pmod(xxhash64(eid_a), p)) and
+    are replicated across the q B-groups; B-side rows scatter into q
+    groups (j = pmod(xxhash64(eid_b), q)) and are replicated across the p
+    A-groups;
   * join key becomes (cx, cy, i, j). Row multiset of the join output is
     unchanged — pair (a, b) meets in exactly one bucket, (i_a, j_b).
 
@@ -35,6 +39,9 @@ from pyspark.sql import functions as F
 
 from rayjoin_spark.plans.cells import cell_workload
 
+#: most salt buckets one hot cell splits into
+SALT_MAX = 32
+
 
 def hot_cells(
     edge_cells_a: DataFrame, edge_cells_b: DataFrame, threshold: int = 1_000_000
@@ -47,103 +54,58 @@ def hot_cells(
     )
 
 
-def salted_cell_join(
-    cells_a: DataFrame,
-    cells_b: DataFrame,
-    hot: DataFrame,
-    n_salts: int = 8,
-    scatter_key: str = "eid_a",
-    target_pairs: int | None = None,
-    scatter_key_b: str = "eid_b",
-) -> DataFrame:
-    """Inner join on (cx, cy) with hot cells split over 2-D salt buckets.
+def salt_buckets(cells_a: DataFrame, cells_b: DataFrame, hot_threshold: int) -> DataFrame:
+    """(cx, cy, _p, _q) of each hot cell: its ns salt buckets factored
+    p x q (module docstring)."""
+    per_bucket = max(hot_threshold // 4, 1)
+    return hot_cells(cells_a, cells_b, hot_threshold).selectExpr(
+        "cx", "cy", f"CAST(least({SALT_MAX}, ceil(workload / {per_bucket})) AS INT) AS _ns"
+    ).selectExpr(
+        "cx", "cy",
+        "CAST(ceil(sqrt(_ns)) AS INT) AS _p",
+        "CAST(ceil(_ns / ceil(sqrt(_ns))) AS INT) AS _q",
+    )
+
+
+def _salt_side(cells: DataFrame, buckets: DataFrame, key: str, own: str, other: str) -> DataFrame:
+    """One side of the 2-D salted join. A row of a hot cell hashes ``key``
+    into one of the cell's ``own`` groups and is copied once per
+    ``other`` group; a row of a cold cell stays in group (0, 0). ``own``
+    and ``other`` are the salt columns "_si" (p groups) and "_sj" (q
+    groups)."""
+    n = {"_si": "_p", "_sj": "_q"}
+    return cells.join(buckets, ["cx", "cy"], "left").selectExpr(
+        *cells.columns,
+        f"CASE WHEN {n[own]} IS NULL THEN 0 ELSE pmod(xxhash64({key}), {n[own]}) END AS {own}",
+        f"explode(CASE WHEN {n[other]} IS NULL THEN array(0)"
+        f" ELSE sequence(0, {n[other]} - 1) END) AS {other}",
+    )
+
+
+def salted_cell_join(cells_a: DataFrame, cells_b: DataFrame, hot_threshold: int) -> DataFrame:
+    """Inner join on (cx, cy) with the hot cells split over 2-D salt
+    buckets (module docstring): same row multiset as a plain join.
 
     cells_a/cells_b must already carry side-suffixed columns (as produced
-    by operators.lsi._side). Returns the joined DataFrame, same row
-    multiset as a plain join.
-
-    Salt sizing: each hot cell gets ``ns`` buckets — a flat ``n_salts``
-    without ``target_pairs``, else workload-proportional
-    ceil(workload / target_pairs) capped at n_salts (a cell just over the
-    hot threshold splits a few ways, a monster cell splits n_salts ways).
-    ns is then factored as p x q with p = ceil(sqrt(ns)): A-side rows in
-    the cell are hashed into p groups and exploded q times, B-side rows
-    into q groups exploded p times — bucket workload ~ workload/(p*q)
-    <= target_pairs, at ~2*sqrt(ns)-fold replication instead of the 1-D
-    scheme's ns-fold (see module docstring for the measured rationale).
-    """
-    if target_pairs:
-        ns = F.least(
-            F.lit(n_salts),
-            F.ceil(F.col("workload") / F.lit(float(target_pairs))),
-        ).cast("int")
-    else:
-        ns = F.lit(n_salts)
-    p = F.ceil(F.sqrt(ns.cast("double"))).cast("int")
-    q = F.ceil(ns.cast("double") / p.cast("double")).cast("int")
-    h = F.broadcast(hot.select("cx", "cy", p.alias("_p"), q.alias("_q")))
-    a = (
-        cells_a.join(h, ["cx", "cy"], "left")
-        .withColumn(
-            "_si",
-            F.when(
-                F.col("_p").isNotNull(),
-                F.pmod(F.xxhash64(scatter_key), F.col("_p").cast("bigint")),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "_sjs",
-            F.when(
-                F.col("_q").isNotNull(), F.sequence(F.lit(0), F.col("_q") - 1)
-            ).otherwise(F.array(F.lit(0))),
-        )
-        .withColumn("_sj", F.explode("_sjs"))
-        .drop("_p", "_q", "_sjs")
-    )
-    b = (
-        cells_b.join(h, ["cx", "cy"], "left")
-        .withColumn(
-            "_sj",
-            F.when(
-                F.col("_q").isNotNull(),
-                F.pmod(F.xxhash64(scatter_key_b), F.col("_q").cast("bigint")),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "_sis",
-            F.when(
-                F.col("_p").isNotNull(), F.sequence(F.lit(0), F.col("_p") - 1)
-            ).otherwise(F.array(F.lit(0))),
-        )
-        .withColumn("_si", F.explode("_sis"))
-        .drop("_p", "_q", "_sis")
-    )
+    by operators.lsi._side): A rows hash by eid_a, B rows by eid_b."""
+    buckets = F.broadcast(salt_buckets(cells_a, cells_b, hot_threshold))
+    a = _salt_side(cells_a, buckets, "eid_a", "_si", "_sj")
+    b = _salt_side(cells_b, buckets, "eid_b", "_sj", "_si")
     return a.join(b, ["cx", "cy", "_si", "_sj"], "inner").drop("_si", "_sj")
 
 
-def lsi_join_salted(
-    edges_a,
-    edges_b,
-    grid,
-    hot_threshold: int = 1_000_000,
-    n_salts: int = 8,
-    target_pairs: int | None = None,
-):
+def lsi_join_salted(edges_a, edges_b, grid, hot_threshold: int = 1_000_000):
     """LSI join with explicit hot-cell salting (same output as lsi_join).
 
     Runs lsi_join's cell-join core (join grid, long-edge split, broadcast
     guard, ownership, exact predicate, split dedup) with the plain cell
     join swapped for salted_cell_join over the hot cells of the exploded
-    sides, which are cells of the join grid.
-    ``target_pairs`` switches to workload-proportional salt counts (see
-    salted_cell_join).
+    sides, which are cells of the join grid. ``hot_threshold`` is the one
+    option: it picks the hot cells and sizes their buckets.
     """
     from rayjoin_spark.operators.lsi import _matched_pairs
 
     def join(cells_a, cells_b):
-        return salted_cell_join(
-            cells_a, cells_b, hot_cells(cells_a, cells_b, hot_threshold),
-            n_salts=n_salts, target_pairs=target_pairs,
-        )
+        return salted_cell_join(cells_a, cells_b, hot_threshold)
 
     return _matched_pairs(edges_a, edges_b, grid, join).selectExpr("eid_a", "eid_b")

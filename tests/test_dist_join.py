@@ -1,5 +1,6 @@
 """dist_join semantics: exact within-distance pairs, grid-invariant."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from rayjoin_spark.operators.knn import dist_join
@@ -104,9 +105,7 @@ def test_closest_pair_exact_and_widening(spark):
     # far-apart scatter: the tiny d0 forces several widening rounds
     rows = [(1, 0.0, 0.0), (2, 90.0, 90.0), (3, 50.0, 10.0), (4, 52.0, 11.0)]
     pts = _pts(spark, rows, "point_id")
-    got = closest_pair(
-        pts, scaling, GridSpec(64), d0=1, growth=8, max_rounds=12
-    ).collect()
+    got = closest_pair(pts, scaling, GridSpec(64), d0=1, growth=8).collect()
     assert len(got) == 1
     r = got[0]
     assert (r["point_a"], r["point_b"]) == (3, 4)
@@ -138,7 +137,27 @@ def test_closest_pair_single_point_empty(spark):
 
     scaling = Scaling.from_bbox(0.0, 100.0, 0.0, 100.0)
     r = closest_pair(
-        _pts(spark, [(1, 5.0, 5.0)], "point_id"), scaling, GridSpec(64),
-        d0=1, max_rounds=2,
+        _pts(spark, [(1, 5.0, 5.0)], "point_id"), scaling, GridSpec(64), d0=1,
     )
     assert r.count() == 0
+
+
+def test_closest_pair_widens_to_the_cap(spark):
+    """Two points ~90 units apart from d0=1 at the default growth: the
+    widening runs until they meet (a round budget used to end it first
+    and return no rows)."""
+    from rayjoin_spark.operators.knn import closest_pair
+
+    scaling = Scaling.from_bbox(0.0, 100.0, 0.0, 100.0)
+    pts = _pts(spark, [(1, 5.0, 5.0), (2, 95.0, 5.0)], "point_id")
+    got = closest_pair(pts, scaling, GridSpec(64), d0=1).collect()
+    assert [(r["point_a"], r["point_b"]) for r in got] == [(1, 2)]
+
+
+def test_closest_pair_rejects_non_growing_radius(spark):
+    from rayjoin_spark.operators.knn import closest_pair
+
+    scaling = Scaling.from_bbox(0.0, 100.0, 0.0, 100.0)
+    pts = _pts(spark, [(1, 5.0, 5.0), (2, 95.0, 5.0)], "point_id")
+    with pytest.raises(ValueError):
+        closest_pair(pts, scaling, GridSpec(64), growth=1)

@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 from rayjoin_spark.operators.lsi import lsi_join
 from rayjoin_spark.plans.layers import build_edges
 from rayjoin_spark.plans.scaling import GridSpec, compute_scaling
-from rayjoin_spark.plans.skew import hot_cells, lsi_join_salted
+from rayjoin_spark.plans.cells import explode_edges_to_cells, join_grid
+from rayjoin_spark.plans.skew import hot_cells, lsi_join_salted, salt_buckets
 from rayjoin_spark.sources.cdb import read_cdb, write_cdb_text, cdb_to_parquet
 from rayjoin_spark.sources.datagen import lattice_chains, transformed_lattice, synthetic_pages
 from rayjoin_spark.sources.sampling import sample_map, sample_edges
@@ -75,17 +76,16 @@ def test_salted_lsi_row_parity(spark):
     ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
     grid = GridSpec(8)
     plain = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, grid).collect()}
-    # threshold 0 -> every joint cell is 'hot' -> everything salted
-    salted = lsi_join_salted(ea, eb, grid, hot_threshold=0, n_salts=4)
+    # threshold 0 -> every joint cell is 'hot' -> everything salted, each
+    # cell into min(SALT_MAX, workload) buckets: the split is real
+    jg = join_grid(ea, eb, grid)
+    buckets = salt_buckets(explode_edges_to_cells(ea, jg), explode_edges_to_cells(eb, jg), 0)
+    n_buckets = [r["_p"] * r["_q"] for r in buckets.collect()]
+    assert max(n_buckets) > 1
+    salted = lsi_join_salted(ea, eb, grid, hot_threshold=0)
     got = [(r["eid_a"], r["eid_b"]) for r in salted.collect()]
     assert len(got) == len(set(got))
     assert set(got) == plain
-    # workload-proportional salt counts (n_salts acts as the cap): tiny
-    # target so per-cell bucket counts genuinely vary across cells
-    prop = lsi_join_salted(ea, eb, grid, hot_threshold=0, n_salts=8, target_pairs=10)
-    got2 = [(r["eid_a"], r["eid_b"]) for r in prop.collect()]
-    assert len(got2) == len(set(got2))
-    assert set(got2) == plain
     # fine grid: the m=4 pair's edges span hundreds of cells at gsize
     # 2048, so the core's long-edge split (and its dedup) fires here too
     ca, pa = lattice_chains(spark, 4)
@@ -94,7 +94,7 @@ def test_salted_lsi_row_parity(spark):
     ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
     fine = GridSpec(2048)
     want = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, fine).collect()}
-    salted = lsi_join_salted(ea, eb, fine, hot_threshold=0, n_salts=4)
+    salted = lsi_join_salted(ea, eb, fine, hot_threshold=0)
     got3 = [(r["eid_a"], r["eid_b"]) for r in salted.collect()]
     assert len(got3) == len(set(got3))
     assert set(got3) == want and want
@@ -104,7 +104,6 @@ def test_skewed_fixture_salting(spark):
     """The power-law fixture really is skewed (hot cells exist at a
     threshold that uniform data would not hit), and the salted join
     returns exactly the plain join's rows on it."""
-    from rayjoin_spark.plans.cells import explode_edges_to_cells
     from rayjoin_spark.sources.datagen import skewed_segments
 
     ca, pa = skewed_segments(spark, 2000, exponent=3)
@@ -122,7 +121,7 @@ def test_skewed_fixture_salting(spark):
     # skew: the hottest cell carries >10x the median cell's workload
     assert loads[0] > 10 * loads[len(loads) // 2], loads[:5]
     plain = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, grid).collect()}
-    salted = lsi_join_salted(ea, eb, grid, hot_threshold=loads[len(loads) // 2], n_salts=8)
+    salted = lsi_join_salted(ea, eb, grid, hot_threshold=loads[len(loads) // 2])
     got = [(r["eid_a"], r["eid_b"]) for r in salted.collect()]
     assert len(got) == len(set(got)) and set(got) == plain
     assert len(plain) > 0

@@ -9,19 +9,22 @@ and dies at the 8 GiB deserialized cap. These tests pin the fix:
 * fragment explode is linear in the span and results are IDENTICAL to the
   coarse-grid / unsplit plan (grid choice is physical, not logical);
 * matched pairs are deduped (fragment pairs can re-meet in several cells);
-* the explode-aware broadcast guard pins the cell join to sort-merge.
+* the explode-aware broadcast guard pins the cell join to sort-merge when
+  even the smaller side's estimate passes plans.cells.BROADCAST_ROWS.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from rayjoin_spark.operators import lsi as lsi_mod
 from rayjoin_spark.operators.lsi import lsi_candidates, lsi_join
 from rayjoin_spark.operators.pip import pip_locate
+from rayjoin_spark.plans import cells
 from rayjoin_spark.plans.cells import (
     SPLIT_CELLS_DEFAULT,
     edge_cell_stats,
     explode_edges_to_cells,
+    join_grid,
+    layer_split,
 )
 from rayjoin_spark.plans.layers import build_edges
 from rayjoin_spark.plans.scaling import GridSpec, compute_scaling
@@ -128,7 +131,7 @@ def test_pip_fine_grid_matches_coarse(spark, layers):
 @pytest.mark.parametrize("op", [lsi_join, lsi_candidates])
 def test_broadcast_guard_pins_sort_merge(spark, layers, monkeypatch, op):
     _, ea, eb = layers
-    monkeypatch.setattr(lsi_mod, "BROADCAST_GUARD_ROWS", 0)
+    monkeypatch.setattr(cells, "BROADCAST_ROWS", 0)
     df = op(ea, eb, GridSpec(64))
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" in analyzed and "merge" in analyzed.lower()
@@ -136,3 +139,15 @@ def test_broadcast_guard_pins_sort_merge(spark, layers, monkeypatch, op):
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in executed
     assert "SortMergeJoin" in executed
+
+
+def test_broadcast_guard_reads_the_smaller_side(spark, layers, monkeypatch):
+    """A cap between the two sides' estimates leaves the join unpinned:
+    the smaller side is safe to broadcast, whatever the bigger one is."""
+    _, ea, eb = layers
+    grid = join_grid(ea, eb, GridSpec(64))
+    lo, hi = sorted((layer_split(ea, grid)[1], layer_split(eb, grid)[1]))
+    assert lo < hi
+    monkeypatch.setattr(cells, "BROADCAST_ROWS", lo)
+    analyzed = lsi_join(ea, eb, GridSpec(64))._jdf.queryExecution().analyzed().toString()
+    assert "merge" not in analyzed.lower()

@@ -120,6 +120,17 @@ def test_neardup_components_chain_and_cliques(spark):
     )
 
 
+def test_neardup_components_round_cap_is_loud(spark):
+    """A chain that needs more rounds than allowed raises instead of
+    returning half-propagated labels."""
+    from rayjoin_spark.functions.textops import neardup_components
+
+    ids = spark.createDataFrame([(v,) for v in (1, 2, 3, 4)], "doc_id long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        neardup_components(ids, pairs, max_rounds=1).collect()
+
+
 def test_sampling_and_chunking(spark):
     """Deterministic sampling: fraction accuracy, salt independence,
     subset stability. Chunking: overlap/tail/empty-text edge cases."""
