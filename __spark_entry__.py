@@ -2415,7 +2415,7 @@ def q_host_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over a deterministic 5-chain host graph
     (k -> k+5 for k <= 91: the 97 hosts split into 5 path components by
     k mod 5) via the engine's pointer-jumping min-label CC
-    (functions/textops.neardup_components — O(log n) rounds, not
+    (plans/labels.min_label via neardup_components — O(log n) rounds, not
     O(diameter), which these ~20-long chains actually exercise, unlike
     the tiny near-dup cliques). Oracle: recursive-CTE reachability with
     MIN-label, size and canonical flag."""
@@ -2730,9 +2730,9 @@ def q_mirror_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strongly connected components (operators/graph.scc — iterative
-    forward/backward min-label peeling; each peel provably assigns the
-    global-min node's SCC) over a deterministic MULTI-SCC directed
+    """Strongly connected components (operators/graph.scc —
+    randomized-priority forward/backward min-label peeling; each peel
+    assigns every color root's SCC) over a deterministic MULTI-SCC directed
     graph: per decade a 10-chain with a 6->3 back edge (one 4-cycle SCC
     per decade) plus one-way cross-decade bridges — ~10 size-4 SCCs
     among singletons, several peels deep (the full host graph is one
@@ -2766,13 +2766,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "dedup_keep_best": q_dedup_keep_best,
         "dup_spans": q_dup_spans,
-        "source_mix": q_source_mix,
+        "mirror_clusters": q_mirror_clusters,
         "kmeans_labels": q_kmeans,
         "kmeans_reps": q_kmeans_reps,
         "tfidf_topk": q_tfidf_topk,
-        "repetition_ratio": q_repetition,
-        "shard_stats": q_shard_stats,
-        "pack_sequences": q_pack_sequences,
+        "scc_hosts": q_scc,
+        "semdedup": q_semdedup,
+        "neardup_clusters": q_neardup_clusters,
         "face_stats": q_face_stats,
         "decontaminate": q_decontaminate,
         "redact_pii": q_redact_pii,
@@ -2793,7 +2793,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zonal_stats": q_zonal_stats,
         "neardup_containment": q_neardup_containment,
         "hits_hosts": q_hits,
-        "length_quantiles": q_length_quantiles,
+        "host_components": q_host_components,
         "page_metadata": q_page_metadata,
         "canonical_dedup": q_canonical_dedup,
         "lsi_join_salted": q_lsi_salted,
@@ -2820,9 +2820,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skipgram_pairs": q_skipgram_pairs,
         "tile_quantiles": q_tile_quantiles,
         "raster_diff": q_raster_diff,
-        "mirror_clusters": q_mirror_clusters,
-        "scc_hosts": q_scc,
-        "semdedup": q_semdedup,
+        "source_mix": q_source_mix,
+        "repetition_ratio": q_repetition,
+        "shard_stats": q_shard_stats,
         "winnow_fingerprints": q_winnow,
         "graph_degrees": q_graph_degrees,
         "inverted_index": q_inverted_index,
@@ -2875,7 +2875,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_signatures": q_minhash,
         "lsh_bands": q_lsh_bands,
         "neardup_jaccard": q_neardup,
-        "neardup_clusters": q_neardup_clusters,
+        "pack_sequences": q_pack_sequences,
         "sample_stratified": q_sample_stratified,
         "doc_chunks": q_doc_chunks,
         "simhash16": q_simhash,
@@ -2896,7 +2896,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pagerank_hosts": q_pagerank,
         "triangle_count": q_triangle_count,
         "link_jaccard": q_link_jaccard,
-        "host_components": q_host_components,
+        "length_quantiles": q_length_quantiles,
         "moran_tiles": q_moran_tiles,
         "collocations": q_collocations,
         "dwell_segments": q_dwell_segments,

@@ -309,7 +309,6 @@ def neardup_components(
     ids: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_rounds: int = 50,
 ) -> DataFrame:
     """Dedup-cluster assignment: connected components over verified
     near-dup pairs, labeling every document with the MIN doc id of its
@@ -317,64 +316,28 @@ def neardup_components(
     flag (the kept representative). Docs in no pair become singleton
     clusters.
 
-    Distributed min-label propagation with pointer jumping (the
-    published MapReduce CC family — Kiveris et al., "Connected
-    Components in MapReduce and Beyond"): each round is (1) a neighbor
-    min over the symmetrized edge list (map-side combinable groupBy) and
-    (2) one label(label) jump join, so chains collapse in O(log n)
-    rounds rather than O(diameter). The frontier label table is
-    localCheckpointed each round — iterative lineage otherwise makes
-    round r cost O(r) — and convergence is an exact changed-count == 0
-    test. Near-dup components are overwhelmingly tiny cliques, so
-    real-data convergence is 2-3 rounds; the jump bounds the adversarial
-    long-chain case. Raises RuntimeError when max_rounds pass without
-    the fixpoint (labels would be half-propagated).
+    The labels are `plans/labels.min_label` over the symmetrized pair
+    list: min-label propagation with pointer jumping, so chains collapse
+    in O(log n) rounds rather than O(diameter). Near-dup components are
+    overwhelmingly tiny cliques, so real-data convergence is 2-3 rounds;
+    the jump bounds the adversarial long-chain case. Raises RuntimeError
+    when the loop's round cap passes without the fixpoint (labels would
+    be half-propagated).
     """
+    from rayjoin_spark.plans.labels import min_label
+
     sym = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    sym = sym.localCheckpoint(eager=True)
-    labels = ids.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("label")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        nbr_min = (
-            sym.join(
-                labels.select(F.col("id").alias("dst"), F.col("label").alias("dl")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("dl").alias("nl"))
-            .select(F.col("src").alias("id"), "nl")
-        )
-        cand = labels.join(nbr_min, "id", "left").select(
-            "id",
-            "label",
-            F.least("label", F.coalesce("nl", "label")).alias("l2"),
-        )
-        # pointer jump: chase one more hop through the previous labels
-        jumped = cand.join(
-            labels.select(F.col("id").alias("_jid"), F.col("label").alias("jl")),
-            F.col("l2") == F.col("_jid"),
-            "left",
-        ).select(
-            "id",
-            "label",
-            F.least("l2", F.coalesce("jl", "l2")).alias("new_label"),
-        )
-        jumped = jumped.localCheckpoint(eager=True)
-        changed = jumped.filter(F.col("new_label") != F.col("label")).count()
-        labels = jumped.select("id", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(f"neardup_components: no fixpoint within {max_rounds} rounds")
-    sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    return labels.join(sizes, "label").select(
-        F.col("id").alias(id_col),
-        F.col("label").alias("cluster_id"),
+    labels = min_label(
+        ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("lbl")), sym
+    )
+    sizes = labels.groupBy("lbl").agg(F.count("*").alias("cluster_size"))
+    return labels.join(sizes, "lbl").select(
+        F.col("node").alias(id_col),
+        F.col("lbl").alias("cluster_id"),
         "cluster_size",
-        (F.col("id") == F.col("label")).alias("is_canonical"),
+        (F.col("node") == F.col("lbl")).alias("is_canonical"),
     )
 
 

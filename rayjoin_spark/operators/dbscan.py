@@ -10,8 +10,8 @@ three joins, not a new engine:
 2. core points: neighbor count (incl. self) >= min_pts — one map-side
    combinable groupBy.
 3. clusters: connected components over core-core neighbor pairs via the
-   pointer-jumping min-label CC (functions/textops.neardup_components,
-   O(log n) rounds); cluster id = MIN core point id of the component
+   pointer-jumping min-label CC (plans/labels.min_label through
+   functions/textops.neardup_components, O(log n) rounds); cluster id = MIN core point id of the component
    (canonical, engine-independent).
 4. border points: non-core with >= 1 core neighbor take the MIN
    cluster id among their core neighbors (the deterministic variant of

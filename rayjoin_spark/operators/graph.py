@@ -27,13 +27,15 @@ edge); the inflow groupBy is map-side combinable, so a node with 10^9
 in-links costs one combiner per partition, not a hot reducer. The
 iteration loop is driver-side with O(iters) jobs and each round's result
 is eagerly localCheckpoint-ed (house pattern for iterative frontiers:
-knn.py / neardup_components / kmeans) so plan depth stays O(1).
+knn.py / plans/labels.min_label / kmeans) so plan depth stays O(1).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from rayjoin_spark.plans.labels import min_label
 
 #: fixed-point scale: rank 1.0 == SCALE units
 SCALE = 1_000_000
@@ -608,47 +610,9 @@ def kcore(
     ).select("node", F.coalesce("_in", F.lit(False)).alias("in_core"))
 
 
-def _reach_min(nodes: DataFrame, edges: DataFrame, max_rounds: int) -> DataFrame:
-    """Min-label propagation ALONG edge direction to fixpoint:
-    f(v) = min label over {u : u ->* v} (v included). nodes(node[, lbl]),
-    edges(src, dst) -> (node, lbl). When nodes already carries a `lbl`
-    column it is the initial label (any orderable type incl. structs —
-    least/min/< are all struct-comparable); otherwise lbl = node. Per
-    round one equi-join + one combinable min + a min-merge; checkpointed
-    (house pattern)."""
-    if "lbl" in nodes.columns:
-        lbl = nodes.select("node", "lbl").localCheckpoint(eager=True)
-    else:
-        lbl = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint(
-            eager=True
-        )
-    for _ in range(max_rounds):
-        prop = (
-            lbl.join(edges, lbl["node"] == edges["src"], "inner")
-            .select(F.col("dst").alias("node"), "lbl")
-            .groupBy("node")
-            .agg(F.min("lbl").alias("nl"))
-        )
-        merged = (
-            lbl.join(prop, "node", "left")
-            .select(
-                "node",
-                F.least("lbl", F.coalesce("nl", "lbl")).alias("lbl2"),
-                (F.col("nl").isNotNull() & (F.col("nl") < F.col("lbl"))).alias("_imp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        improved = not merged.filter("_imp").isEmpty()
-        lbl = merged.select("node", F.col("lbl2").alias("lbl"))
-        if not improved:
-            return lbl
-    raise RuntimeError(f"_reach_min: no fixpoint within {max_rounds} rounds")
-
-
 def scc(
     edges: DataFrame,
     max_peels: int = 50,
-    max_rounds: int = 100,
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
@@ -662,16 +626,16 @@ def scc(
     fresh random priorities per round — the parallel-pivot member of the
     distributed FW-BW family). Per round, on the unassigned subgraph:
     give every node the priority struct (xxhash64(node, round), node)
-    and propagate the forward minimum (`_reach_min`): col(v) = the
-    min-priority node reaching v — partitioning live nodes into color
-    classes, each rooted at its unique min-priority node. Then a second
-    `_reach_min` over the REVERSED same-color-restricted edges computes
-    b(v) = the min priority v reaches within its class; b(v) == col(v)
-    holds exactly for the nodes that reach their root through the class,
-    i.e. the root's SCC (the root is the strict in-class priority
-    minimum, so the backward min equals it only via mutual
-    reachability). EVERY color root's SCC is assigned in parallel each
-    round — expected O(log n) rounds for any DAG shape (a k-component
+    and propagate the forward minimum (`plans/labels.min_label`):
+    col(v) = the min-priority node reaching v — partitioning live nodes
+    into color classes, each rooted at its unique min-priority node.
+    Then a second `min_label` over the REVERSED same-color-restricted
+    edges computes b(v) = the min priority v reaches within its class;
+    b(v) == col(v) holds exactly for the nodes that reach their root
+    through the class, i.e. the root's SCC (the root is the strict
+    in-class priority minimum, so the backward min equals it only via
+    mutual reachability). EVERY color root's SCC is assigned in parallel
+    each round — expected O(log n) rounds for any DAG shape (a k-component
     chain that cost the old sequential min-peel k rounds now peels a
     constant expected fraction per round, whichever way its ids run);
     raises past max_peels rather than returning a partial labeling.
@@ -682,9 +646,11 @@ def scc(
     (recursive-CTE pair closure + min over the intersection) — an
     independent definition, not this algorithm.
 
-    Scale shape: each round is two O(diameter)-round label fixpoints
-    (join + combinable min per round) plus color-restriction joins and
-    two semi-joins to shrink the frontier; all frames checkpointed.
+    Scale shape: each round is two pointer-jumping min-label fixpoints
+    (join + combinable min + one jump join per label round; never more
+    label rounds than the class diameter + 1, far fewer on long chains
+    and cycles) plus color-restriction joins and two semi-joins to
+    shrink the frontier; all frames checkpointed.
     Priorities are deterministic per (node, round) — bit-reproducible.
     """
     e = _directed_simple(edges, src, dst)
@@ -717,26 +683,20 @@ def scc(
                 F.col("node").alias("n"),
             ).alias("lbl"),
         )
-        f = _reach_min(pri, cur_e, max_rounds).withColumnRenamed("lbl", "col")
-        f = f.localCheckpoint(eager=True)
+        f = min_label(pri, cur_e).withColumnRenamed("lbl", "col")
         # same-color subgraph: an SCC is always monochromatic (mutual
         # reachability forces equal forward minima), so cross-color edges
         # cannot contribute to any SCC and are dropped for the back pass
         fsrc = f.select(F.col("node").alias("src"), F.col("col").alias("_csrc"))
         fdst = f.select(F.col("node").alias("dst"), F.col("col").alias("_cdst"))
-        # checkpointed (house pattern): the backward fixpoint references
-        # crev once per round — unmaterialized, the two color-restriction
-        # joins would re-run D times per peel (D = class diameter)
-        ce = (
+        crev = (
             cur_e.join(fsrc, "src")
             .join(fdst, "dst")
             .filter(F.col("_csrc") == F.col("_cdst"))
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        crev = ce.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         # b(v) = min in-class priority v reaches (init: own priority)
-        b = _reach_min(pri, crev, max_rounds)
+        b = min_label(pri, crev)
         lab = (
             f.join(b, "node")
             .filter(F.col("lbl") == F.col("col"))

@@ -375,7 +375,7 @@ def kmeans_labels(
     """
     # every iteration scans iv (assign + update) — materialize the
     # quantized vectors once (house pattern for iterative inputs:
-    # eager localCheckpoint, cf. knn/neardup_components) instead of
+    # eager localCheckpoint, cf. knn/plans/labels.min_label) instead of
     # re-reading + re-quantizing the source twice per round
     iv = corpus.select(
         F.col(id_col).alias("vid"), _int_vec(F.col(vec_col)).alias("v")
@@ -468,9 +468,9 @@ def semdedup(
 
     Integer-exact end-to-end — `kmeans_labels`' quantized Lloyd, the
     cross-multiplied cosine threshold of `neardup_cosine`, and
-    `textops.neardup_components`' min-label CC — so the verdict is
-    bit-reproducible on any engine/partitioning and DuckDB-oracle-checked
-    by the driver (`semdedup` query).
+    `plans/labels.min_label`'s CC (via `textops.neardup_components`) —
+    so the verdict is bit-reproducible on any engine/partitioning and
+    DuckDB-oracle-checked by the driver (`semdedup` query).
 
     Scale shape: the defining cost is the intra-cluster pairwise join —
     quadratic in CLUSTER size, never corpus size; k is the knob (SemDeDup

@@ -2,15 +2,14 @@
 
 The reference is batch-only; the graft's "checkpoint-resumable" demand is
 batch-restart (plans/checkpoint.py). This module adds the natural
-streaming front-end anyway: pages arrive as micro-batches, get geocoded
-(stateless column math — streams fine), and are either
-
-* aggregated into per-tile windowed counts (`streaming_tile_counts`) with
-  a watermark for late WARC timestamps, or
-* located in a *static* polygon layer per micro-batch via
-  `foreachBatch` (`stream_locate_pages`) — PIP's iterative walk is a
-  batch algorithm, so it runs inside the epoch against the static layer
-  (stream-static pattern; exactly-once by epoch id + idempotent sink).
+streaming front-end anyway: archives arrive as micro-batches
+(`stream_warc_ingest`), pages get geocoded (stateless column math —
+streams fine) and aggregated into per-tile windowed counts
+(`streaming_tile_counts`) with a watermark for late WARC timestamps.
+Stateful operators (host sessionization, burst detection) and
+watermark-bounded dedup ride the same streams; `ExactlyOnceParquetSink`
+lands any of them exactly once through `foreachBatch` (epoch id +
+idempotent sink).
 """
 
 from __future__ import annotations
@@ -207,42 +206,6 @@ class ExactlyOnceParquetSink:
         return spark.read.parquet(*dirs)
 
 
-def stream_locate_pages(
-    pages_stream: DataFrame,
-    base_edges: DataFrame,
-    scaling: Scaling,
-    grid: GridSpec,
-    bbox: tuple[float, float, float, float],
-    sink,
-):
-    """foreachBatch: per epoch, geocode + PIP-locate the micro-batch in the
-    static layer, call sink(df, epoch_id). Returns the DataStreamWriter
-    (caller .start()s it with its own checkpointLocation)."""
-    from rayjoin_spark.operators.pip import PipIndex
-    from rayjoin_spark.sources.pages import locate_pages
-
-    # the layer is static: build the PipIndex ONCE (stays cached across
-    # epochs — the documented repeated-locate pattern); each epoch's
-    # OTHER internal persists (stepped/accepted) are released after the
-    # sink, or a long-running stream accumulates two pinned frames per
-    # epoch until eviction churn (pip_locate docstring)
-    ix = PipIndex(base_edges, grid)
-
-    def handle(batch_df: DataFrame, epoch_id: int):
-        epoch_caches: list = []
-        located = locate_pages(
-            geocode_pages(batch_df, *bbox), base_edges, scaling, grid,
-            index=ix, caches=epoch_caches,
-        )
-        try:
-            sink(located, epoch_id)
-        finally:
-            for c in epoch_caches:
-                c.unpersist()
-
-    return pages_stream.writeStream.foreachBatch(handle)
-
-
 def stream_warc_ingest(spark, path: str) -> DataFrame:
     """Streaming archive ingest: watch a directory for WARC files
     (``readStream.format("binaryFile")`` — new archives become
@@ -250,9 +213,9 @@ def stream_warc_ingest(spark, path: str) -> DataFrame:
     parse is a stateless Arrow-batched mapInPandas, so it streams
     as-is). ``warc_ts`` is materialized as a real timestamp so the
     result composes with the watermarked aggregations above; compose
-    with EpochSink for an exactly-once parquet landing zone — together
-    that is the continuous-crawl front door: drop .warc.gz files in,
-    get an idempotent pages table out.
+    with ExactlyOnceParquetSink for an exactly-once parquet landing zone
+    — together that is the continuous-crawl front door: drop .warc.gz
+    files in, get an idempotent pages table out.
     """
     from rayjoin_spark.sources.warc import parse_warc_blobs
 

@@ -175,3 +175,19 @@ def test_scc_component_chain_converges_in_log_rounds(spark):
     assert len(got) == n + 3
     assert got["c2"] == ("c1", 3) and got["c3"] == ("c1", 3)
     assert all(v == (k, 1) for k, v in got.items() if k.startswith("h"))
+
+
+def test_scc_long_cycle_within_48_label_rounds(spark, monkeypatch):
+    """A 200-node directed cycle is one SCC. Without pointer jumping each
+    label pass needs ~200 rounds; the jump through the priority's node
+    finishes both passes well inside a 48-round cap."""
+    from rayjoin_spark.operators.graph import scc
+    from rayjoin_spark.plans import labels
+
+    monkeypatch.setattr(labels, "MAX_ROUNDS", 48)
+    n = 200
+    e = spark.createDataFrame(
+        [(i, (i + 1) % n) for i in range(n)], "src long, dst long"
+    )
+    got = {r["node"]: (r["scc_id"], r["scc_size"]) for r in scc(e).collect()}
+    assert got == {i: (0, n) for i in range(n)}

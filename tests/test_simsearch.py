@@ -120,15 +120,17 @@ def test_neardup_components_chain_and_cliques(spark):
     )
 
 
-def test_neardup_components_round_cap_is_loud(spark):
-    """A chain that needs more rounds than allowed raises instead of
-    returning half-propagated labels."""
+def test_neardup_components_round_cap_is_loud(spark, monkeypatch):
+    """A chain that needs more rounds than the label loop's cap raises
+    instead of returning half-propagated labels."""
     from rayjoin_spark.functions.textops import neardup_components
+    from rayjoin_spark.plans import labels
 
+    monkeypatch.setattr(labels, "MAX_ROUNDS", 1)
     ids = spark.createDataFrame([(v,) for v in (1, 2, 3, 4)], "doc_id long")
     pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        neardup_components(ids, pairs, max_rounds=1).collect()
+        neardup_components(ids, pairs).collect()
 
 
 def test_sampling_and_chunking(spark):
