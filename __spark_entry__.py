@@ -2797,7 +2797,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "page_metadata": q_page_metadata,
         "canonical_dedup": q_canonical_dedup,
         "lsi_join_salted": q_lsi_salted,
-        "heavy_hitters": q_heavy_hitters,
+        "rect_join": q_rect_join,
         "cells_compact": q_cells_compact,
         "range_report": q_range_report,
         "lm_score": q_lm_score,
@@ -2816,7 +2816,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "closest_pair": q_closest_pair,
         "burst_detect": q_burst_detect,
         "weighted_sample": q_weighted_sample,
-        "rect_join": q_rect_join,
+        "heavy_hitters": q_heavy_hitters,
         "skipgram_pairs": q_skipgram_pairs,
         "tile_quantiles": q_tile_quantiles,
         "raster_diff": q_raster_diff,

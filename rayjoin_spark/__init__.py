@@ -21,7 +21,7 @@ only at the multimodal decode boundary.
 
 from rayjoin_spark.plans.scaling import Scaling, compute_scaling, GridSpec
 from rayjoin_spark.plans.layers import build_edges, scale_points
-from rayjoin_spark.plans.cells import explode_edges_to_cells, cell_of
+from rayjoin_spark.plans.cells import explode_edges_to_cells
 from rayjoin_spark.plans.ranking import ordered_index
 from rayjoin_spark.operators.lsi import lsi_join
 from rayjoin_spark.operators.pip import PipIndex, pip_locate
@@ -34,7 +34,6 @@ __all__ = [
     "build_edges",
     "scale_points",
     "explode_edges_to_cells",
-    "cell_of",
     "ordered_index",
     "lsi_join",
     "pip_locate",

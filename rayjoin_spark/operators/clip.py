@@ -19,9 +19,10 @@ with per-endpoint denominators ≤ 2^29. Degenerate point-segments
 (dx = dy = 0) reduce to a containment test. Everything is codegen
 CASE/when column math — no UDFs, no shuffle beyond the candidate join.
 
-Scale shape: candidates come from the same grid-pruned cell equi-join as
-range_report (one shuffle, min-shared-cell dedup); the clip itself is a
-scan-shaped projection.
+Scale shape: candidates come from the same cell-join core as range_report
+(plans.cells._owned_pairs with the rects as its box side: one shuffle,
+min-shared-cell dedup); the clip itself is a scan-shaped projection,
+followed by a (rect_id, eid) dedup only when the edge side was split.
 """
 
 from __future__ import annotations
@@ -29,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.operators.rangequery import owned_candidates
+from rayjoin_spark.operators.rangequery import _as_box
+from rayjoin_spark.plans.cells import _owned_pairs
 from rayjoin_spark.plans.scaling import GridSpec
 
 
@@ -68,13 +70,12 @@ def clip_segments(
     fully inside keeps its original endpoints (den = 1). Touching
     counts (t-window compared with ≤).
     """
-    grid = grid or GridSpec()
-    j = owned_candidates(edges, rects, grid)
+    j, split = _owned_pairs(edges, _as_box(rects), grid or GridSpec(), boxes=(False, True))
 
-    x1, y1 = F.col("x1"), F.col("y1")
-    dx, dy = F.col("x2") - F.col("x1"), F.col("y2") - F.col("y1")
-    rx1, rx2 = F.col("rx1"), F.col("rx2")
-    ry1, ry2 = F.col("ry1"), F.col("ry2")
+    x1, y1 = F.col("x1_a"), F.col("y1_a")
+    dx, dy = F.col("x2_a") - x1, F.col("y2_a") - y1
+    rx1, rx2 = F.col("x1_b"), F.col("x2_b")
+    ry1, ry2 = F.col("y1_b"), F.col("y2_b")
 
     # per-axis windows; a zero-delta axis contributes the full [0,1]
     # window but must pass the containment test for that axis instead
@@ -101,8 +102,8 @@ def clip_segments(
     survives = x_static_ok & y_static_ok & (n0 * d1 <= n1 * d0)
 
     out = j.filter(survives).select(
-        "rect_id",
-        "eid",
+        F.col("eid_b").alias("rect_id"),
+        F.col("eid_a").alias("eid"),
         (x1 * d0 + dx * n0).alias("cx1_num"),
         (y1 * d0 + dy * n0).alias("cy1_num"),
         d0.alias("den1"),
@@ -110,4 +111,5 @@ def clip_segments(
         (y1 * d1 + dy * n1).alias("cy2_num"),
         d1.alias("den2"),
     )
-    return out
+    # fragment copies of a pair carry the parent's geometry: same clip
+    return out.dropDuplicates(["rect_id", "eid"]) if split else out

@@ -16,8 +16,9 @@ Key deviations from the reference's physical plan (same results):
   the cells stay at least as wide as the layers' mean edge, because cells
   much wider than the edges multiply candidate pairs quadratically in the
   per-cell fan-out. Thin cells keep the caller's grid. Every consumer of
-  the cell-join core (lsi_join, lsi_candidates, lsi_join_salted, overlay,
-  faces) joins at the refined grid.
+  the cell-join core (plans.cells._owned_pairs: lsi_join, lsi_candidates,
+  lsi_join_salted, overlay, faces, and the box joins range_report,
+  clip_segments and rect_join) joins at the refined grid.
 
 * Candidate dedup: the reference tests every shared cell and keeps the
   pair only in the cell containing the exact intersection point
@@ -43,20 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from rayjoin_spark.plans import cells
-from rayjoin_spark.plans.cells import explode_edges_to_cells, join_grid, layer_split
+from rayjoin_spark.plans.cells import _owned_pairs
 from rayjoin_spark.plans.scaling import GridSpec
-
-_EDGE_COLS = ["eid", "x1", "y1", "x2", "y2", "a", "b", "c", "ix1", "iy1"]
-
-
-def _side(edge_cells: DataFrame, suffix: str) -> DataFrame:
-    return edge_cells.selectExpr("cx", "cy", *[f"{c} AS {c}_{suffix}" for c in _EDGE_COLS])
-
-
-#: min-shared-cell ownership: keep a candidate pair only in the first cell
-#: both bbox rectangles cover
-_OWNER_SQL = "cx = greatest(ix1_a, ix1_b) AND cy = greatest(iy1_a, iy1_b)"
 
 
 def _sos_sign_sql(p: str, e: str, flip: bool) -> str:
@@ -90,37 +79,6 @@ def _lsi_predicate_sql() -> str:
 
 #: the exact SoS intersection predicate (built once; pure SQL text)
 _LSI_PREDICATE_SQL = _lsi_predicate_sql()
-
-
-def _owned_pairs(
-    edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec, join=None
-) -> tuple[DataFrame, bool]:
-    """The one cell-join core: pick the join grid (plans.cells.join_grid
-    refines fat cells), explode each side at it (long-edge split decided
-    per side by layer_split), suffix its columns, pin the join to
-    sort-merge when even the smaller side's estimated exploded rows pass
-    plans.cells.BROADCAST_ROWS, equi-join on the cell and keep each pair
-    in its min shared cell.
-
-    The pin is index_side's rule for the side AQE would broadcast: a side
-    of at most BROADCAST_ROWS rows is safe to broadcast, and a bigger one
-    must not be broadcast-converted from its (deceptively small)
-    compressed shuffle stats and then die at the 8 GiB deserialized cap
-    (observed at gsize 15000 over long-edge inputs).
-
-    ``join(cells_a, cells_b)`` replaces the plain (cx, cy) inner join (the
-    salted join of plans/skew.py). Returns (pairs, split): when either side
-    is split a pair may survive ownership in several fragment cells, so
-    consumers needing unique pairs dedup by (eid_a, eid_b)."""
-    grid = join_grid(edges_a, edges_b, grid)
-    k_a, est_a = layer_split(edges_a, grid)
-    k_b, est_b = layer_split(edges_b, grid)
-    ca = _side(explode_edges_to_cells(edges_a, grid, k_a), "a")
-    cb = _side(explode_edges_to_cells(edges_b, grid, k_b), "b")
-    if min(est_a, est_b) > cells.BROADCAST_ROWS:
-        ca, cb = ca.hint("merge"), cb.hint("merge")
-    j = join(ca, cb) if join else ca.join(cb, ["cx", "cy"], "inner")
-    return j.filter(_OWNER_SQL), bool(k_a or k_b)
 
 
 def lsi_candidates(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> DataFrame:
@@ -190,7 +148,7 @@ def _matched_pairs(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec, join=
     was split — an output-sized shuffle that exists only then. Fragment
     copies of a pair carry identical geometry columns, so any survivor is
     exact."""
-    pairs, split = _owned_pairs(edges_a, edges_b, grid, join)
+    pairs, split = _owned_pairs(edges_a, edges_b, grid, join=join)
     out = lsi_intersect_filter(pairs)
     return out.dropDuplicates(["eid_a", "eid_b"]) if split else out
 

@@ -132,18 +132,15 @@ def nearest_edge(
     grid = grid or GridSpec(64)
     # long-edge pre-split, the same layer_split decision as lsi_join /
     # PipIndex: a long diagonal segment at a fine grid would otherwise
-    # explode its bbox QUADRATICALLY (plans/cells.py module doc).
-    # dropDuplicates below absorbs the fragment-seam duplicate (cell, eid)
-    # rows. est_rows bounds the index rows for annulus_rounds' broadcast rule
-    # without a count job.
+    # explode its bbox QUADRATICALLY (plans/cells.py module doc). The
+    # fragment-seam duplicate (cell, eid) rows stay: each carries the same
+    # geometry, so score's min band and the min merge ignore them, and
+    # est_rows (which counts them) bounds the index rows for
+    # annulus_rounds' broadcast rule without a count job.
     k, est_rows = layer_split(edges, grid)
     ec = explode_edges_to_cells(edges, grid, k).selectExpr(
         "cx AS icx", "cy AS icy", "eid", "x1", "y1", "x2", "y2"
     )
-    if k:
-        # only fragment pre-splitting can duplicate a (cell, eid) row; the
-        # plain bbox explode is already distinct — skip the shuffle then
-        ec = ec.dropDuplicates(["icx", "icy", "eid"])
 
     qp = points.select(
         F.col(query_id).alias("qid"),

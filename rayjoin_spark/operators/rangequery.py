@@ -14,12 +14,16 @@ max_corners(...)` over the four rectangle corners — pure int64 (|a|,|b| <=
 2^29, |X|,|Y| <= 2^28, so each term <= 2^57 and the 3-term sum <= 2^59),
 whole-stage codegen, no doubles anywhere.
 
-Scale shape: rectangles explode to their covered cells, edges explode to
-their bbox cells (shared with LSI), the candidate join is a cell equi-join
-(bucketed by construction), and duplicates from multi-cell overlap are
-dropped by min-shared-cell ownership — the same zero-shuffle dedup as
-operators/lsi.py:78-81, so the whole operator is one shuffle (the cell
-join) regardless of rectangle size.
+Scale shape: range_report runs the engine's one cell-join core
+(plans.cells._owned_pairs, shared with the LSI) with the rectangles as a
+box side: a rect enters as the degenerate edge (rx1, ry1) -> (rx2, ry2),
+whose bbox is exactly the rect, and never splits; the edge side gets the
+LSI's long-edge split and sort-merge guard. The join runs at the caller's
+grid (a box side turns off join_grid's refinement, see _owned_pairs). The
+candidate join is a cell equi-join, and duplicates from multi-cell
+overlap are dropped by min-shared-cell ownership (a column filter, no
+shuffle); only when the edge side was split does a (rect_id, eid) dedup
+follow the predicate.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import explode_edges_to_cells
+from rayjoin_spark.plans.cells import _owned_pairs
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 
@@ -54,44 +58,34 @@ def snap_rects(
     )
 
 
+def _as_box(rects: DataFrame) -> DataFrame:
+    """A snap_rects frame as a box side of the cell-join core: the
+    degenerate edge (rx1, ry1) -> (rx2, ry2), keyed by its rect_id."""
+    return rects.selectExpr("rect_id AS eid", "rx1 AS x1", "ry1 AS y1", "rx2 AS x2", "ry2 AS y2")
+
+
 def _corner_sides(a: Column, b: Column, c: Column) -> tuple[Column, Column]:
-    """(min, max) of a·X + b·Y + c over the 4 snapped rect corners."""
-    vals = [
-        a * F.col("rx1") + b * F.col("ry1") + c,
-        a * F.col("rx1") + b * F.col("ry2") + c,
-        a * F.col("rx2") + b * F.col("ry1") + c,
-        a * F.col("rx2") + b * F.col("ry2") + c,
-    ]
+    """(min, max) of a·X + b·Y + c over the 4 corners of the box side."""
+    vals = [a * F.col(x) + b * F.col(y) + c for x in ("x1_b", "x2_b") for y in ("y1_b", "y2_b")]
     return F.least(*vals), F.greatest(*vals)
 
 
 def segment_in_rect_predicate() -> Column:
-    """Exact SAT intersection test for a candidate (edge, rect) row.
+    """Exact SAT intersection test for a candidate (edge, rect) row of the
+    cell-join core.
 
-    Expects edge columns x1 y1 x2 y2 a b c and rect columns rx1 ry1 rx2
-    ry2 (all internal int64). Degenerate point edges (a=b=c=0) reduce to
-    the bbox containment test.
+    Expects the edge side's columns x1_a y1_a x2_a y2_a a_a b_a c_a and
+    the box side's corners x1_b y1_b x2_b y2_b (all internal int64).
+    Degenerate point edges (a=b=c=0) reduce to the bbox containment test.
     """
     bbox = (
-        (F.greatest("x1", "x2") >= F.col("rx1"))
-        & (F.least("x1", "x2") <= F.col("rx2"))
-        & (F.greatest("y1", "y2") >= F.col("ry1"))
-        & (F.least("y1", "y2") <= F.col("ry2"))
+        (F.greatest("x1_a", "x2_a") >= F.col("x1_b"))
+        & (F.least("x1_a", "x2_a") <= F.col("x2_b"))
+        & (F.greatest("y1_a", "y2_a") >= F.col("y1_b"))
+        & (F.least("y1_a", "y2_a") <= F.col("y2_b"))
     )
-    lo, hi = _corner_sides(F.col("a"), F.col("b"), F.col("c"))
+    lo, hi = _corner_sides(F.col("a_a"), F.col("b_a"), F.col("c_a"))
     return bbox & (lo <= 0) & (hi >= 0)
-
-
-def _rect_cells(rects: DataFrame, grid: GridSpec) -> DataFrame:
-    r = rects.withColumn("rix1", grid.cell_of(F.col("rx1"))).withColumn(
-        "rix2", grid.cell_of(F.col("rx2"))
-    )
-    r = r.withColumn("riy1", grid.cell_of(F.col("ry1"))).withColumn(
-        "riy2", grid.cell_of(F.col("ry2"))
-    )
-    return r.withColumn("cx", F.explode(F.sequence("rix1", "rix2"))).withColumn(
-        "cy", F.explode(F.sequence("riy1", "riy2"))
-    )
 
 
 def range_report(
@@ -100,27 +94,17 @@ def range_report(
     """All (rect_id, eid) pairs whose segment meets the rectangle.
 
     `edges`: plans/layers.build_edges output. `rects`: snap_rects output.
-    One cell equi-join; dedup is the min-shared-cell ownership filter
-    (each surviving pair is owned by the lexicographically smallest cell
-    both cover, so no distinct/shuffle is needed).
+    One cell equi-join (the cell-join core, rects as its box side);
+    each surviving pair is owned by the lexicographically smallest cell
+    both cover, so no distinct is needed unless the edge side was split.
     """
-    grid = grid or GridSpec()
-    owned = owned_candidates(edges, rects, grid)
-    return owned.filter(segment_in_rect_predicate()).select("rect_id", "eid")
+    pairs, split = _owned_pairs(edges, _as_box(rects), grid or GridSpec(), boxes=(False, True))
+    out = pairs.filter(segment_in_rect_predicate()).selectExpr("eid_b AS rect_id", "eid_a AS eid")
+    return out.dropDuplicates(["rect_id", "eid"]) if split else out
 
 
-def owned_candidates(edges: DataFrame, rects: DataFrame, grid: GridSpec) -> DataFrame:
-    """The shared candidate generator of `range_report` and
-    operators/clip.clip_segments: edges and rects each explode to their
-    covered cells, equi-join on the cell, and each (edge, rect) pair
-    survives only in the lexicographically smallest cell both cover
-    (min-shared-cell ownership — zero-shuffle dedup, no distinct)."""
-    ec = explode_edges_to_cells(edges, grid)
-    rc = _rect_cells(rects, grid)
-    return ec.join(rc, ["cx", "cy"], "inner").filter(
-        (F.col("cx") == F.greatest("ix1", "rix1"))
-        & (F.col("cy") == F.greatest("iy1", "riy1"))
-    )
+#: exact closed-interval overlap of the two box sides (int64 compares)
+_OVERLAP_SQL = "x1_a <= x2_b AND x1_b <= x2_a AND y1_a <= y2_b AND y1_b <= y2_a"
 
 
 def rect_join(
@@ -133,42 +117,18 @@ def rect_join(
     AABB overlay primitive (bbox prefilter joins, R-tree-style
     intersection queries) beside range_report's segment x box test.
 
-    Same physical shape as the engine's LSI join with rects on BOTH
-    sides: each box explodes to the grid cells it covers (bounded 2-D
-    explode), candidates come from the hash equi-join on the cell key,
-    the exact closed-interval overlap test (pure int64 compares) filters
-    them, and each surviving pair is emitted exactly once by the
-    min-shared-cell OWNERSHIP filter (operators/lsi.py's dedup trick:
-    keep the pair only in the lexicographically smallest cell of the
-    intersection region — a column predicate, never a dropDuplicates
-    shuffle).
+    The engine's cell-join core with boxes on BOTH sides: each box
+    explodes to the cells of the caller's grid it covers, candidates
+    come from the hash equi-join on the cell key, each pair survives
+    only in the lexicographically smallest cell both cover
+    (min-shared-cell ownership, a column predicate; boxes never split,
+    so no dropDuplicates), and the exact closed-interval overlap test
+    (pure int64 compares) filters them.
 
     Returns (rect_a, rect_b). Inputs are snap_rects outputs (rect_id,
     rx1, ry1, rx2, ry2).
     """
-    grid = grid or GridSpec()
-    ca = _rect_cells(rects_a, grid).select(
-        F.col("rect_id").alias("rect_a"),
-        F.col("rx1").alias("ax1"), F.col("ry1").alias("ay1"),
-        F.col("rx2").alias("ax2"), F.col("ry2").alias("ay2"),
-        F.col("rix1").alias("acx1"), F.col("riy1").alias("acy1"),
-        "cx", "cy",
+    pairs, _ = _owned_pairs(
+        _as_box(rects_a), _as_box(rects_b), grid or GridSpec(), boxes=(True, True)
     )
-    cb = _rect_cells(rects_b, grid).select(
-        F.col("rect_id").alias("rect_b"),
-        F.col("rx1").alias("bx1"), F.col("ry1").alias("by1"),
-        F.col("rx2").alias("bx2"), F.col("ry2").alias("by2"),
-        F.col("rix1").alias("bcx1"), F.col("riy1").alias("bcy1"),
-        "cx", "cy",
-    )
-    j = ca.join(cb, ["cx", "cy"], "inner")
-    overlap = (
-        (F.col("ax1") <= F.col("bx2"))
-        & (F.col("bx1") <= F.col("ax2"))
-        & (F.col("ay1") <= F.col("by2"))
-        & (F.col("by1") <= F.col("ay2"))
-    )
-    owner = (F.col("cx") == F.greatest("acx1", "bcx1")) & (
-        F.col("cy") == F.greatest("acy1", "bcy1")
-    )
-    return j.filter(overlap & owner).select("rect_a", "rect_b")
+    return pairs.filter(_OVERLAP_SQL).selectExpr("eid_a AS rect_a", "eid_b AS rect_b")

@@ -11,10 +11,13 @@ internally — we never materialize it.
 Also provides the per-cell workload metrics the reference exposes as
 histograms (src/grid/uniform_grid.h:360-494), which drive explicit salting
 of hot cells at scale (see plans/skew.py), the cell join's stats-driven
-decisions (layer_split: long-edge split; join_grid: the LSI join's
-refinement of fat cells; index_side: broadcast or sort-merge for every
-index-side join), and the one Chebyshev-annulus round loop of the point
-queries (annulus_rounds, behind knn_points and nearest_edge).
+decisions (layer_split: long-edge split; join_grid: the edge-edge cell
+join's refinement of fat cells; index_side: broadcast or sort-merge for
+every index-side join), the one ownership cell join (_owned_pairs: explode ->
+equi-join on cell -> min-shared-cell ownership, behind the LSI, the
+overlay, faces, range_report, clip_segments and rect_join), and the one
+Chebyshev-annulus round loop of the point queries (annulus_rounds,
+behind knn_points and nearest_edge).
 
 Long edges at fine grids: the bbox rectangle explode is QUADRATIC in the
 edge's cell span for diagonal edges (a unit lattice diagonal at gsize 15000
@@ -27,8 +30,9 @@ span. Geometry columns are untouched (fragments carry the PARENT edge's
 coordinates/equation/eid), so every downstream exact predicate is
 unchanged; candidate completeness holds because any point ON the edge lies
 in some fragment's widened sub-bbox. Consumers that relied on "one row per
-(cell, edge)" must dedup pairs by eid after their predicate (operators/
-lsi.py does; PIP's min_by argmin is duplicate-insensitive).
+(cell, edge)" must dedup pairs by eid after their predicate when a side
+was split (_owned_pairs reports it; PIP's min_by argmin and nearest_edge's
+min are duplicate-insensitive).
 """
 
 from __future__ import annotations
@@ -44,10 +48,6 @@ from rayjoin_spark.plans.scaling import GridSpec
 #: fragment length (in cells) for long-edge pre-splitting; also the split
 #: trigger in layer_split: spans <= this explode exactly as before
 SPLIT_CELLS_DEFAULT = 8
-
-
-def cell_of(grid: GridSpec, col):
-    return grid.cell_of(col)
 
 
 def _cell_rect_sql(grid: GridSpec, lo_x: str, hi_x: str, lo_y: str, hi_y: str) -> list[str]:
@@ -79,7 +79,7 @@ def explode_edges_to_cells(
     (src/grid/uniform_grid.h:79-83) — `explode(sequence(...))` twice.
     The output keeps ix1/iy1 so downstream joins can dedup candidate pairs
     without ever computing the exact intersection point (see
-    operators/lsi.py).
+    _owned_pairs).
 
     With ``max_cells_per_edge=k`` set, edges spanning more than k cells are
     pre-split into parametric fragments (see module docstring): ix1..iy2
@@ -183,7 +183,8 @@ def layer_split(edges: DataFrame, grid: GridSpec) -> tuple[int | None, int]:
     than that (the explode then fragments, see module docstring), else
     None (the plain bbox explode). est_rows is the upper bound on the
     exploded rows under that choice — what the broadcast guards compare.
-    Every cell-join consumer (LSI, PIP, nearest edge) decides here.
+    Every cell-join consumer (the ownership cell join's edge sides, PIP,
+    nearest edge) decides here.
     """
     _, span, est_unsplit, est_split = edge_cell_stats(edges, grid)
     if span > SPLIT_CELLS_DEFAULT:
@@ -196,7 +197,7 @@ JOIN_GRID_MAX_FACTOR = 64
 
 
 def join_grid(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> GridSpec:
-    """The grid an LSI cell join runs at: the caller's grid refined by the
+    """The grid _owned_pairs joins at: the caller's grid refined by the
     largest power of two (at most JOIN_GRID_MAX_FACTOR) whose cells are
     still at least as wide as the wider layer's mean edge extent
     max(|x2-x1|, |y2-y1|).
@@ -248,6 +249,81 @@ def index_side(frame: DataFrame, rows: int, exact=None) -> DataFrame:
     if rows <= BROADCAST_ROWS:
         return F.broadcast(frame)
     return frame.hint("merge")
+
+
+#: the columns a side carries through the cell join, suffixed _a / _b: an
+#: edge its geometry and line equation, a box (a rect passed as the
+#: degenerate edge x1=rx1, y1=ry1, x2=rx2, y2=ry2) its corners; both keep
+#: the low corner of their covered cells for the ownership filter
+_EDGE_COLS = ("eid", "x1", "y1", "x2", "y2", "a", "b", "c", "ix1", "iy1")
+_BOX_COLS = ("eid", "x1", "y1", "x2", "y2", "ix1", "iy1")
+
+#: min-shared-cell ownership: keep a candidate pair only in the first cell
+#: both bbox rectangles cover
+_OWNER_SQL = "cx = greatest(ix1_a, ix1_b) AND cy = greatest(iy1_a, iy1_b)"
+
+
+def _side(
+    edges: DataFrame, grid: GridSpec, box: bool, suffix: str
+) -> tuple[DataFrame, int | None, int | None]:
+    """One side of the cell join: (cells, est_rows, k). An edge side
+    explodes under its layer_split decision; a box side never splits,
+    because fragments of its diagonal would not cover its interior, and
+    has no estimate (est_rows None): a rect frame is built per call, so
+    its stats agg would be a fresh job every time."""
+    if box:
+        k, est, cols = None, None, _BOX_COLS
+    else:
+        (k, est), cols = layer_split(edges, grid), _EDGE_COLS
+    out = explode_edges_to_cells(edges, grid, k).selectExpr(
+        "cx", "cy", *[f"{c} AS {c}_{suffix}" for c in cols]
+    )
+    return out, est, k
+
+
+def _owned_pairs(
+    edges_a: DataFrame,
+    edges_b: DataFrame,
+    grid: GridSpec,
+    boxes: tuple[bool, bool] = (False, False),
+    join=None,
+) -> tuple[DataFrame, bool]:
+    """The one cell-join core: pick the join grid, explode each side at it
+    (long-edge split decided per edge side by layer_split), suffix its
+    columns, pin the join to sort-merge when even the smaller edge side's
+    estimated exploded rows pass BROADCAST_ROWS, equi-join on the cell and
+    keep each pair in its min shared cell. lsi_join, lsi_candidates, the
+    salted join, the overlay and faces run it with two edge sides
+    (operators/lsi.py); range_report and clip_segments with an edge side
+    and a box side, rect_join with two box sides (operators/rangequery.py,
+    operators/clip.py). ``boxes`` says which sides are boxes.
+
+    Two edge sides join at join_grid's refinement of fat cells. With a box
+    side the caller's grid stays: a box never splits, so refining to the
+    mean extent would explode a box much larger than the mean to up to
+    JOIN_GRID_MAX_FACTOR^2 times its cells.
+
+    The pin is index_side's rule for the side AQE would broadcast: a side
+    of at most BROADCAST_ROWS rows is safe to broadcast, and a bigger one
+    must not be broadcast-converted from its (deceptively small)
+    compressed shuffle stats and then die at the 8 GiB deserialized cap
+    (observed at gsize 15000 over long-edge inputs). Box sides carry no
+    estimate, so the rule reads the edge sides only, and two box sides
+    leave the strategy to the planner.
+
+    ``join(cells_a, cells_b)`` replaces the plain (cx, cy) inner join (the
+    salted join of plans/skew.py). Returns (pairs, split): when a side is
+    split a pair may survive ownership in several fragment cells, so
+    consumers needing unique pairs dedup by (eid_a, eid_b)."""
+    if not any(boxes):
+        grid = join_grid(edges_a, edges_b, grid)
+    ca, est_a, k_a = _side(edges_a, grid, boxes[0], "a")
+    cb, est_b, k_b = _side(edges_b, grid, boxes[1], "b")
+    ests = [est for est in (est_a, est_b) if est is not None]
+    if ests and min(ests) > BROADCAST_ROWS:
+        ca, cb = ca.hint("merge"), cb.hint("merge")
+    j = join(ca, cb) if join else ca.join(cb, ["cx", "cy"], "inner")
+    return j.filter(_OWNER_SQL), bool(k_a or k_b)
 
 
 def cell_counts(edge_cells: DataFrame) -> DataFrame:

@@ -87,7 +87,7 @@ def salted_cell_join(cells_a: DataFrame, cells_b: DataFrame, hot_threshold: int)
     buckets (module docstring): same row multiset as a plain join.
 
     cells_a/cells_b must already carry side-suffixed columns (as produced
-    by operators.lsi._side): A rows hash by eid_a, B rows by eid_b."""
+    by plans.cells._side): A rows hash by eid_a, B rows by eid_b."""
     buckets = F.broadcast(salt_buckets(cells_a, cells_b, hot_threshold))
     a = _salt_side(cells_a, buckets, "eid_a", "_si", "_sj")
     b = _salt_side(cells_b, buckets, "eid_b", "_sj", "_si")

@@ -57,19 +57,13 @@ def locate_pages(
     scaling: Scaling,
     grid: GridSpec | None = None,
     url: str = "url",
-    index=None,
-    caches: list | None = None,
 ) -> DataFrame:
     """PIP-locate geocoded pages; output keeps url + text byte-identical
     and adds (face_id, closest_eid). Columns pass through untouched —
-    the join is on an opaque surrogate id, never on page payload.
-
-    ``index`` / ``caches`` pass through to pip_locate: repeated locates
-    against the same static layer should build a PipIndex once and
-    release each call's internal persists (see pip_locate docstring)."""
+    the join is on an opaque surrogate id, never on page payload."""
     keyed = pages_geo.withColumn("_pid", F.xxhash64(F.col(url)))
     pts = keyed.select(F.col("_pid").alias("point_id"), "x", "y")
-    located = pip_locate(pts, base_edges, scaling, grid, index=index, caches=caches)
+    located = pip_locate(pts, base_edges, scaling, grid)
     return (
         keyed.join(located, keyed["_pid"] == located["point_id"], "left")
         .drop("point_id", "_pid")

@@ -12,7 +12,10 @@ from fractions import Fraction
 from pyspark.sql import functions as F
 
 from rayjoin_spark.operators.nearest import nearest_edge
-from rayjoin_spark.plans.scaling import GridSpec, Scaling
+from rayjoin_spark.plans.cells import SPLIT_CELLS_DEFAULT, layer_split
+from rayjoin_spark.plans.layers import build_edges
+from rayjoin_spark.plans.scaling import GridSpec, Scaling, compute_scaling
+from rayjoin_spark.sources.datagen import lattice_chains, transformed_lattice
 
 #: identity snap: integer-valued double inputs pass through unchanged
 IDENT = Scaling.identity()
@@ -107,3 +110,29 @@ def test_nearest_edge_tiebreak_and_endpoint(spark):
     edges = [(1, 0, 0, 100, 0)]
     got = _run(spark, [(0, 130.0, 40.0)], edges, GridSpec(32))
     assert got[0] == (1, 30 * 30 + 40 * 40)
+
+
+def test_nearest_edge_split_index_matches_bruteforce(spark):
+    """At gsize 2048 the rotated m=4 lattice's edges span ~234 cells, so
+    the edge-cell index is fragmented and holds duplicate (cell, eid)
+    rows at fragment seams; the argmin must not see them."""
+    import random
+
+    ca, pa = lattice_chains(spark, 4)
+    cb, pb = transformed_lattice(spark, 4)
+    scaling = compute_scaling(pa, pb)
+    edges = [
+        tuple(r)
+        for r in build_edges(cb, pb, scaling).select("eid", "x1", "y1", "x2", "y2").collect()
+    ]
+    xs = [v for e in edges for v in (e[1], e[3])]
+    ys = [v for e in edges for v in (e[2], e[4])]
+    rnd = random.Random(5)
+    pts = [
+        (i, float(rnd.randint(min(xs), max(xs))), float(rnd.randint(min(ys), max(ys))))
+        for i in range(40)
+    ]
+    grid = GridSpec(2048)
+    edf = spark.createDataFrame(edges, "eid long, x1 long, y1 long, x2 long, y2 long")
+    assert layer_split(edf, grid)[0] == SPLIT_CELLS_DEFAULT
+    assert _run(spark, pts, edges, grid) == _brute(pts, edges)

@@ -7,8 +7,10 @@ import random
 
 from rayjoin_spark.functions.cellcodes import compact_cells
 from rayjoin_spark.operators.rangequery import range_report, snap_rects
+from rayjoin_spark.plans.cells import SPLIT_CELLS_DEFAULT, edge_cell_stats, layer_split
 from rayjoin_spark.plans.layers import build_edges
-from rayjoin_spark.plans.scaling import GridSpec, Scaling
+from rayjoin_spark.plans.scaling import GridSpec, Scaling, compute_scaling
+from rayjoin_spark.sources.datagen import lattice_chains, transformed_lattice
 
 
 # ------------------------------------------------------------- compact_cells
@@ -261,6 +263,40 @@ def test_clip_agrees_with_range_report(spark):
     assert clipped == reported
 
 
+def test_fine_grid_range_splits_the_edge_side(spark):
+    """At gsize 8192 the rotated m=4 lattice's edges span ~900 cells, so
+    the cell-join core fragments the edge side (never the box side):
+    range_report and clip_segments return the gsize-64 rows, each pair
+    once after the split dedup."""
+    from rayjoin_spark.operators.clip import clip_segments
+
+    ca, pa = lattice_chains(spark, 4)
+    cb, pb = transformed_lattice(spark, 4)
+    scaling = compute_scaling(pa, pb)
+    edges = build_edges(cb, pb, scaling).localCheckpoint(eager=True)
+    rdf = spark.createDataFrame(
+        [(i, 0.3 * i - 0.2, 0.35 * i + 0.4, 0.3 * i + 0.3, 0.35 * i + 0.9) for i in range(8)],
+        "rect_id bigint, x1 double, y1 double, x2 double, y2 double",
+    )
+    rects = snap_rects(rdf, scaling)
+    fine, coarse = GridSpec(8192), GridSpec(64)
+    k, est = layer_split(edges, fine)
+    assert k == SPLIT_CELLS_DEFAULT and est * 10 < edge_cell_stats(edges, fine)[2]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    fine_rr = range_report(edges, rects, fine)
+    assert "Deduplicate" in fine_rr._jdf.queryExecution().logical().toString()
+    want = rows(range_report(edges, rects, coarse))
+    assert want == sorted(_brute_pairs(edges.collect(), rects.collect()))
+    assert len(want) >= 10
+    assert rows(fine_rr) == want
+    clipped = rows(clip_segments(edges, rects, fine))
+    assert clipped == rows(clip_segments(edges, rects, coarse))
+    assert sorted(r[:2] for r in clipped) == want
+
+
 def test_clip_endpoints_inside_box_and_ordered(spark):
     from fractions import Fraction
 
@@ -329,3 +365,45 @@ def test_rect_join_matches_bruteforce_and_grid_invariant(spark):
     # exactly-once: no pair dedup needed, so count == distinct count
     rows = rect_join(ra, rb, GridSpec(256)).collect()
     assert len(rows) == len(want)
+
+
+def test_box_sides_explode_at_the_callers_grid(spark, monkeypatch):
+    """Boxes never split, so the cell join keeps the caller's grid when a
+    side is a box: one domain-wide box among 200 near-point rects (mean
+    extent ~1/200 of the domain) explodes to its 8 x 8 cells at gsize 8,
+    not to the 128 x 128 of a grid refined to the mean extent."""
+    from rayjoin_spark.operators.rangequery import rect_join
+    from rayjoin_spark.plans import cells
+    from rayjoin_spark.plans.scaling import INTERNAL_MAX, INTERNAL_MIN
+
+    rnd = random.Random(3)
+
+    def tiny(rid):
+        x, y = rnd.randrange(-(1 << 27), 1 << 27), rnd.randrange(-(1 << 27), 1 << 27)
+        return (rid, x, y, x + 1000, y + 1000)
+
+    schema = "rect_id long, rx1 long, ry1 long, rx2 long, ry2 long"
+    big = (999, INTERNAL_MIN, INTERNAL_MIN, INTERNAL_MAX - 1, INTERNAL_MAX - 1)
+    ra = spark.createDataFrame([tiny(i) for i in range(200)] + [big], schema)
+    rb = spark.createDataFrame([tiny(1000 + i) for i in range(100)], schema)
+
+    seen = []
+    real = cells.explode_edges_to_cells
+
+    def spy(edges, grid, *args, **kw):
+        out = real(edges, grid, *args, **kw)
+        seen.append((grid.grid_size, out))
+        return out
+
+    monkeypatch.setattr(cells, "explode_edges_to_cells", spy)
+    got = {(r.rect_a, r.rect_b) for r in rect_join(ra, rb, GridSpec(8)).collect()}
+    assert [g for g, _ in seen] == [8, 8]
+    assert seen[0][1].filter("eid = 999").count() == 64
+    assert {(999, b[0]) for b in rb.collect()} <= got
+    want = {
+        (a.rect_id, b.rect_id)
+        for a in ra.collect()
+        for b in rb.collect()
+        if a.rx1 <= b.rx2 and b.rx1 <= a.rx2 and a.ry1 <= b.ry2 and b.ry1 <= a.ry2
+    }
+    assert got == want
