@@ -1829,15 +1829,15 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lsi_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join, explicit hot-cell salting path (threshold 0 = salt all
-    joint cells, each into min(32, workload) buckets, exercising the
+    """Same join, explicit hot-cell salting path (lsi_join_salted salts
+    every joint cell, each into min(32, workload) buckets, exercising the
     scatter/replicate plan end-to-end).
     Oracle: identical to lsi_join — salting must not change the rows."""
     from rayjoin_spark.plans.skew import lsi_join_salted
 
     ea = derived.edges_a(spark, sf_dir)
     eb = derived.edges_b(spark, sf_dir)
-    return lsi_join_salted(ea, eb, DERIVED_GRID, hot_threshold=0)
+    return lsi_join_salted(ea, eb, DERIVED_GRID)
 
 
 def q_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2803,7 +2803,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_score": q_lm_score,
         "ccnet_buckets": q_ccnet_buckets,
         "tile_payloads": q_tile_payloads,
-        "structured_data": q_structured_data,
+        "lsi_join_finegrid": q_lsi_finegrid,
         "segment_clip": q_segment_clip,
         "overlay_chains": q_overlay,
         "overlay_points": q_overlay_points,
@@ -2856,7 +2856,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quadkey_encode": q_quadkey,
         "mercator_tiles": q_mercator_tiles,
         "tile_bounds": q_tile_bounds,
-        "lsi_join_finegrid": q_lsi_finegrid,
+        "structured_data": q_structured_data,
         "event_asof": q_event_asof,
         "event_interval_join": q_event_interval_join,
         "boilerplate_frac": q_boilerplate,

@@ -402,7 +402,7 @@ def _scaling_queries(spark, only: str | None = None):
 
     m = int(os.environ.get("SPARK_GRAFT_SCALING_M", "1536"))
     npts = int(os.environ.get("SPARK_GRAFT_SCALING_NPTS", "4000000"))
-    need_lattice = only in (None, "lsi_big", "pip_big", "lsi_big_unsalted")
+    need_lattice = only in (None, "lsi_big", "pip_big")
     if need_lattice:
         ca, pa = lattice_chains(spark, m)
         cb, pb = transformed_lattice(spark, m)
@@ -420,20 +420,11 @@ def _scaling_queries(spark, only: str | None = None):
         # the skew-aware LSI plan over the lattice pair. The caller's gsize
         # 64 cells are ~m/64 lattice units wide, but the cell join refines
         # them (plans/cells.join_grid, up to 64x) to about one unit per
-        # cell, a few edges per cell and side; no cell then reaches the
-        # 1M-pair hot threshold, so the salted join runs the plain cell
-        # join plus its per-cell workload agg (plans/skew.py hot_cells).
-        # Explode, shuffle and the exact predicate do the work. A cell
-        # that stays hot at the join grid splits into 2-D buckets sized
-        # from the threshold alone: ceil(workload / 250k), at most 32.
-        from rayjoin_spark.plans.skew import lsi_join_salted
-
-        return lsi_join_salted(ea, eb, GridSpec(gsize_big), hot_threshold=1_000_000)
-
-    def q_lsi_big_unsalted():
-        # DIAGNOSIS row (context, not a workload row): the plain plan on
-        # the same input; it shows what the hot-cell check costs when the
-        # join grid leaves no cell hot
+        # cell, a few edges per cell and side. The cell join's salting gate
+        # (plans/cells._owned_pairs) then finds no cell that can reach
+        # plans/cells.HOT_WORKLOAD and runs the plain cell join; explode,
+        # shuffle and the exact predicate do the work. A cell that stays
+        # hot at the join grid splits into 2-D buckets (plans/skew.py).
         return lsi_join(ea, eb, GridSpec(gsize_big))
 
     pip_seed = {"n": 0}
@@ -464,7 +455,6 @@ def _scaling_queries(spark, only: str | None = None):
         "lsi_big": q_lsi_big,
         "pip_big": q_pip_big,
         "minhash_big": q_minhash_big,
-        "lsi_big_unsalted": q_lsi_big_unsalted,
     }, ([ea, eb] if need_lattice else [])
 
 
@@ -681,9 +671,7 @@ def _sf1_evidence(spark) -> dict:
     return res
 
 
-SCALING_QUERY_NAMES = ["lsi_big", "pip_big", "minhash_big", "lsi_big_unsalted"]
-#: rows bound by the north rule (the diagnosis row is context)
-BINDING_QUERY_NAMES = ["lsi_big", "pip_big", "minhash_big"]
+SCALING_QUERY_NAMES = ["lsi_big", "pip_big", "minhash_big"]
 
 
 def _one_in_subprocess(cpus: int, qname: str) -> dict:
@@ -750,8 +738,8 @@ def main():
             k: round(r_small["times"][k] / r_big["times"][k] / 4.0, 3)
             for k in r_small["times"]
         }
-        bind_small = sum(r_small["times"][k] for k in BINDING_QUERY_NAMES)
-        bind_big = sum(r_big["times"][k] for k in BINDING_QUERY_NAMES)
+        bind_small = sum(r_small["times"][k] for k in SCALING_QUERY_NAMES)
+        bind_big = sum(r_big["times"][k] for k in SCALING_QUERY_NAMES)
         total_eff = round(bind_small / bind_big / 4.0, 3)
         reps = os.environ.get("SPARK_GRAFT_SCALING_REPEATS", "3")
         lines = [
@@ -789,7 +777,7 @@ def main():
                 f"| {eff[k]} |"
             )
 
-        for k in BINDING_QUERY_NAMES:
+        for k in SCALING_QUERY_NAMES:
             lines.append(row(k))
         lines.append(
             f"| **total** | | {round(bind_small, 3)} | {round(bind_big, 3)} "
@@ -804,33 +792,6 @@ def main():
             "binding criterion is the **total** row, which aggregates "
             "the three workloads measured under the same conditions.",
         ]
-        if "lsi_big_unsalted" in r_small["times"]:
-            lines += [
-                "",
-                "## Diagnosis: salted vs plain LSI row",
-                "",
-                "The lsi_big row above runs the engine's skew-aware plan: the "
-                "per-cell workload metrics table (plans/skew.py `hot_cells`, "
-                "the analog of the reference's workload histograms, "
-                "src/grid/uniform_grid.h:444-494) flags cells above 1M "
-                "candidate pairs and splits each into ceil(workload/250k) "
-                "2-D salt buckets (p x q factoring, capped at 32); the bucket "
-                "size is a quarter of the threshold and the cap is "
-                "`plans/skew.SALT_MAX`, so the threshold is the row's only "
-                "salting option. "
-                "plans/cells.join_grid refines the caller's grid to about one "
-                "lattice unit per cell, no cell is hot, and both rows run the "
-                "same cell join; the salted row also pays its hot-cell agg. "
-                "Same output rows (parity-tested in "
-                "tests/test_io_and_infra.py):",
-                "",
-                "| plan | T_N (s) | T_4N (s) | efficiency |",
-                "|---|---|---|---|",
-                f"| lsi_big (salted, binding row) | {r_small['times']['lsi_big']} "
-                f"| {r_big['times']['lsi_big']} | {eff['lsi_big']} |",
-                f"| lsi_big_unsalted (plain) | {r_small['times']['lsi_big_unsalted']} "
-                f"| {r_big['times']['lsi_big_unsalted']} | {eff['lsi_big_unsalted']} |",
-            ]
         lines += [
             "",
             "Context vs the reference (BASELINE.md; GPU RT-core numbers are "

@@ -15,10 +15,7 @@ Key deviations from the reference's physical plan (same results):
   plans.cells.join_grid refines it by a power of two (at most 64x) while
   the cells stay at least as wide as the layers' mean edge, because cells
   much wider than the edges multiply candidate pairs quadratically in the
-  per-cell fan-out. Thin cells keep the caller's grid. Every consumer of
-  the cell-join core (plans.cells._owned_pairs: lsi_join, lsi_candidates,
-  lsi_join_salted, overlay, faces, and the box joins range_report,
-  clip_segments and rect_join) joins at the refined grid.
+  per-cell fan-out. Thin cells keep the caller's grid.
 
 * Candidate dedup: the reference tests every shared cell and keeps the
   pair only in the cell containing the exact intersection point
@@ -142,13 +139,12 @@ def with_xsect_point(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _matched_pairs(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec, join=None) -> DataFrame:
-    """Unique exactly-intersecting pairs: the core's owned candidates
-    through the SoS predicate, deduped by (eid_a, eid_b) only when a side
-    was split — an output-sized shuffle that exists only then. Fragment
-    copies of a pair carry identical geometry columns, so any survivor is
-    exact."""
-    pairs, split = _owned_pairs(edges_a, edges_b, grid, join=join)
+def _matched_pairs(pairs: DataFrame, split: bool) -> DataFrame:
+    """Unique exactly-intersecting pairs of the core's (pairs, split): the
+    owned candidates through the SoS predicate, deduped by (eid_a, eid_b)
+    only when a side was split — an output-sized shuffle that exists only
+    then. Fragment copies of a pair carry identical geometry columns, so
+    any survivor is exact."""
     out = lsi_intersect_filter(pairs)
     return out.dropDuplicates(["eid_a", "eid_b"]) if split else out
 
@@ -165,20 +161,15 @@ def lsi_join(
     ----------
     edges_a, edges_b : outputs of plans.layers.build_edges (map0, map1)
     grid : the coarsest grid the join may use (reference default 2048,
-        experiments 15000 — src/flags.cc:6). plans.cells.join_grid refines
-        it by a power of two while the cells stay at least as wide as the
-        mean edge; a grid already that fine is kept. The rows do not depend
-        on it.
+        experiments 15000 — src/flags.cc:6; plans.cells.join_grid may
+        refine it). The rows do not depend on it.
     with_points : also emit the exact intersection point columns
 
-    Each side's long-edge split comes from plans.cells.layer_split at the
-    join grid (one cheap agg per DataFrame object and grid): a side whose
-    longest edge spans more than the fragment length explodes as
-    parametric fragments, and when the smaller side's estimated exploded
-    rows pass plans.cells.BROADCAST_ROWS the join is hinted to sort-merge
-    so AQE cannot broadcast-convert an exploded side.
+    The long-edge split, hot-cell salting and the sort-merge pin are
+    decided in the cell-join core (plans.cells._owned_pairs) from stats
+    cached per DataFrame object and grid.
     """
-    out = _matched_pairs(edges_a, edges_b, grid or GridSpec())
+    out = _matched_pairs(*_owned_pairs(edges_a, edges_b, grid or GridSpec()))
     if with_points:
         return with_xsect_point(out).selectExpr(
             "eid_a", "eid_b", "num_x", "num_y", "den", "xsect_xd", "xsect_yd"

@@ -9,15 +9,11 @@ The count/prefix-sum/fill machinery is exactly what a shuffle write does
 internally — we never materialize it.
 
 Also provides the per-cell workload metrics the reference exposes as
-histograms (src/grid/uniform_grid.h:360-494), which drive explicit salting
-of hot cells at scale (see plans/skew.py), the cell join's stats-driven
-decisions (layer_split: long-edge split; join_grid: the edge-edge cell
-join's refinement of fat cells; index_side: broadcast or sort-merge for
-every index-side join), the one ownership cell join (_owned_pairs: explode ->
-equi-join on cell -> min-shared-cell ownership, behind the LSI, the
-overlay, faces, range_report, clip_segments and rect_join), and the one
-Chebyshev-annulus round loop of the point queries (annulus_rounds,
-behind knn_points and nearest_edge).
+histograms (src/grid/uniform_grid.h:360-494), the cell join's
+stats-driven decisions (layer_split, join_grid, index_side, the
+HOT_WORKLOAD salting gate), the one ownership cell join (_owned_pairs,
+behind the LSI, the overlay, faces and the box joins) and the one
+Chebyshev-annulus round loop of the point queries (annulus_rounds).
 
 Long edges at fine grids: the bbox rectangle explode is QUADRATIC in the
 edge's cell span for diagonal edges (a unit lattice diagonal at gsize 15000
@@ -45,8 +41,7 @@ from pyspark.sql import functions as F
 
 from rayjoin_spark.plans.scaling import GridSpec
 
-#: fragment length (in cells) for long-edge pre-splitting; also the split
-#: trigger in layer_split: spans <= this explode exactly as before
+#: fragment length (in cells) for long-edge pre-splitting (layer_split)
 SPLIT_CELLS_DEFAULT = 8
 
 
@@ -125,15 +120,12 @@ def _fragment_cell_bboxes(edges: DataFrame, grid: GridSpec, k: int) -> DataFrame
     return e.selectExpr(*cols, *_cell_rect_sql(grid, lox, hix, loy, hiy))
 
 
-#: per-DataFrame stats, keyed by the frame object itself, then by gsize.
-#: A DataFrame fixes its file listing when it is analyzed, so an entry is
-#: never staler than the frame it belongs to; a fresh read gets fresh
-#: stats, and a dropped frame drops its entry.
+#: per-DataFrame stats, keyed by the frame object itself, then by gsize
+#: (edge_cell_stats), ("max", gsize) (max_cell_rows) or "extent" (the
+#: grid-free mean edge extent). A DataFrame fixes its file listing when it
+#: is analyzed, so an entry is never staler than the frame it belongs to;
+#: a fresh read gets fresh stats, and a dropped frame drops its entry.
 _STATS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-#: per-DataFrame mean edge extent avg(greatest(|x2-x1|, |y2-y1|)) in
-#: snapped units: grid-free, so it rides along the frame's first
-#: edge_cell_stats agg
-_EXTENT: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, int]:
@@ -145,11 +137,11 @@ def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, in
     fragment bbox <= (k+3)^2 cells incl. the +-1 widen and DIV slack).
     Computed once per DataFrame object and grid (see _STATS); read
     through layer_split. The first call on a frame also records its mean
-    edge extent (_EXTENT), which join_grid reads.
+    edge extent, which join_grid reads.
     """
-    per_grid = _STATS.setdefault(edges, {})
-    if grid.grid_size in per_grid:
-        return per_grid[grid.grid_size]
+    per_frame = _STATS.setdefault(edges, {})
+    if grid.grid_size in per_frame:
+        return per_frame[grid.grid_size]
     k = SPLIT_CELLS_DEFAULT
     frag_est = (
         f"CASE WHEN greatest(sx, sy) <= {k} THEN sx * sy "
@@ -171,25 +163,39 @@ def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, in
         .collect()[0]
     )
     out = (int(row["n"]), int(row["mx"]), int(row["eu"]), int(row["es"]))
-    per_grid[grid.grid_size] = out
-    _EXTENT[edges] = float(row["ext"])
+    per_frame[grid.grid_size] = out
+    per_frame["extent"] = float(row["ext"])
     return out
 
 
 def layer_split(edges: DataFrame, grid: GridSpec) -> tuple[int | None, int]:
     """The long-edge decision for one edge layer at one grid: (k, est_rows).
 
-    k = SPLIT_CELLS_DEFAULT when the layer's longest edge spans more cells
-    than that (the explode then fragments, see module docstring), else
-    None (the plain bbox explode). est_rows is the upper bound on the
-    exploded rows under that choice — what the broadcast guards compare.
+    k = SPLIT_CELLS_DEFAULT when the fragmented explode's upper bound is
+    below the exact unsplit rows (a split costs its consumers a dedup
+    shuffle; without an edge longer than k the two are equal), else None
+    (the plain bbox explode). est_rows is the upper bound on the exploded
+    rows under that choice — what the broadcast guards and the salting
+    gate compare.
     Every cell-join consumer (the ownership cell join's edge sides, PIP,
     nearest edge) decides here.
     """
-    _, span, est_unsplit, est_split = edge_cell_stats(edges, grid)
-    if span > SPLIT_CELLS_DEFAULT:
+    _, _, est_unsplit, est_split = edge_cell_stats(edges, grid)
+    if est_split < est_unsplit:
         return SPLIT_CELLS_DEFAULT, est_split
     return None, est_unsplit
+
+
+def max_cell_rows(edges: DataFrame, grid: GridSpec) -> int:
+    """The most rows one cell gets in the layer's explode at ``grid``
+    (under its layer_split decision), _owned_pairs' salting bound: one
+    cell_counts max agg, cached per frame (_STATS), so a repeat is free."""
+    per_frame = _STATS.setdefault(edges, {})
+    key = ("max", grid.grid_size)
+    if key not in per_frame:
+        cells = explode_edges_to_cells(edges, grid, layer_split(edges, grid)[0])
+        per_frame[key] = int(cell_counts(cells).selectExpr("coalesce(max(ne), 0)").first()[0])
+    return per_frame[key]
 
 
 #: cap on join_grid's refinement of the caller's grid
@@ -215,7 +221,7 @@ def join_grid(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> GridSpe
     """
     for edges in (edges_a, edges_b):
         edge_cell_stats(edges, grid)
-    extent = max(_EXTENT[edges_a], _EXTENT[edges_b])
+    extent = max(_STATS[edges_a]["extent"], _STATS[edges_b]["extent"])
     f = 1
     while f < JOIN_GRID_MAX_FACTOR and 1.0 / GridSpec(grid.grid_size * f * 2).cell_scale >= extent:
         f *= 2
@@ -281,48 +287,63 @@ def _side(
     return out, est, k
 
 
+#: the per-cell workload ne_a * ne_b above which the edge-edge cell join
+#: salts a cell (plans/skew.py)
+HOT_WORKLOAD = 1_000_000
+
+
 def _owned_pairs(
     edges_a: DataFrame,
     edges_b: DataFrame,
     grid: GridSpec,
     boxes: tuple[bool, bool] = (False, False),
-    join=None,
+    salt_all: bool = False,
 ) -> tuple[DataFrame, bool]:
-    """The one cell-join core: pick the join grid, explode each side at it
-    (long-edge split decided per edge side by layer_split), suffix its
-    columns, pin the join to sort-merge when even the smaller edge side's
-    estimated exploded rows pass BROADCAST_ROWS, equi-join on the cell and
-    keep each pair in its min shared cell. lsi_join, lsi_candidates, the
-    salted join, the overlay and faces run it with two edge sides
-    (operators/lsi.py); range_report and clip_segments with an edge side
-    and a box side, rect_join with two box sides (operators/rangequery.py,
-    operators/clip.py). ``boxes`` says which sides are boxes.
+    """The one cell-join core: explode each side at the join grid (edge
+    sides under their layer_split decision), suffix its columns, salt hot
+    cells, pin the join, equi-join on the cell and keep each pair in its
+    min shared cell. lsi_join, lsi_candidates, the overlay and faces run
+    it with two edge sides (operators/lsi.py); range_report and
+    clip_segments with an edge and a box side, rect_join with two box
+    sides (operators/rangequery.py, operators/clip.py), as ``boxes`` says.
 
-    Two edge sides join at join_grid's refinement of fat cells. With a box
-    side the caller's grid stays: a box never splits, so refining to the
-    mean extent would explode a box much larger than the mean to up to
-    JOIN_GRID_MAX_FACTOR^2 times its cells.
+    Two edge sides join at join_grid's refinement of fat cells. A box
+    never splits, so a refined grid could explode a box much larger than
+    the mean extent to JOIN_GRID_MAX_FACTOR^2 times its cells: with a box
+    side the caller's grid stays.
 
-    The pin is index_side's rule for the side AQE would broadcast: a side
-    of at most BROADCAST_ROWS rows is safe to broadcast, and a bigger one
-    must not be broadcast-converted from its (deceptively small)
-    compressed shuffle stats and then die at the 8 GiB deserialized cap
-    (observed at gsize 15000 over long-edge inputs). Box sides carry no
-    estimate, so the rule reads the edge sides only, and two box sides
-    leave the strategy to the planner.
+    Salting (two edge sides): a cell's workload ne_a * ne_b is at most
+    est_a * est_b and at most the product of the sides' max_cell_rows, so
+    the join stays plain when either is within HOT_WORKLOAD (the first
+    check starts no job, the second is one cached agg per side); else
+    plans/skew.salt_sides salts the cells over it, or every shared cell
+    with ``salt_all`` (lsi_join_salted). Box sides have no estimate (see
+    _side) and stay unsalted.
 
-    ``join(cells_a, cells_b)`` replaces the plain (cx, cy) inner join (the
-    salted join of plans/skew.py). Returns (pairs, split): when a side is
-    split a pair may survive ownership in several fragment cells, so
-    consumers needing unique pairs dedup by (eid_a, eid_b)."""
+    The pin is index_side's rule (see there): the join that runs, salted
+    or not, is sort-merge when even the smaller edge side's estimated rows
+    pass BROADCAST_ROWS; two box sides leave it to the planner.
+
+    Returns (pairs, split): when a side is split a pair may survive
+    ownership in several fragment cells, so consumers needing unique
+    pairs dedup by (eid_a, eid_b)."""
     if not any(boxes):
         grid = join_grid(edges_a, edges_b, grid)
     ca, est_a, k_a = _side(edges_a, grid, boxes[0], "a")
     cb, est_b, k_b = _side(edges_b, grid, boxes[1], "b")
+    keys = ["cx", "cy"]
+    if not any(boxes) and (salt_all or (
+        est_a * est_b > HOT_WORKLOAD
+        and max_cell_rows(edges_a, grid) * max_cell_rows(edges_b, grid) > HOT_WORKLOAD
+    )):
+        from rayjoin_spark.plans.skew import salt_sides
+
+        ca, cb = salt_sides(ca, cb, 0 if salt_all else HOT_WORKLOAD)
+        keys += ["_si", "_sj"]
     ests = [est for est in (est_a, est_b) if est is not None]
     if ests and min(ests) > BROADCAST_ROWS:
         ca, cb = ca.hint("merge"), cb.hint("merge")
-    j = join(ca, cb) if join else ca.join(cb, ["cx", "cy"], "inner")
+    j = ca.join(cb, keys, "inner").drop("_si", "_sj")
     return j.filter(_OWNER_SQL), bool(k_a or k_b)
 
 

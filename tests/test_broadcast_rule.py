@@ -16,6 +16,7 @@ from rayjoin_spark.operators.pip import pip_locate
 from rayjoin_spark.plans import cells
 from rayjoin_spark.plans.layers import build_edges
 from rayjoin_spark.plans.scaling import GridSpec, Scaling, compute_scaling
+from rayjoin_spark.plans.skew import lsi_join_salted
 from rayjoin_spark.sources.datagen import lattice_chains, transformed_lattice, uniform_points
 
 #: join keys of the point/probe-vs-index joins, per operator
@@ -148,6 +149,26 @@ def test_index_side_rule_same_rows(spark, monkeypatch, op, index_keys):
     assert got == want
     for keys in index_keys:
         assert {name for name, k in joins if k == keys} == {"SortMergeJoin"}, (keys, joins)
+
+
+def test_salted_join_pinned_at_cap_zero(spark, monkeypatch):
+    """The LSI merge guard lands on the salted (cx, cy, _si, _sj) join that
+    runs, not on the joins that build its salted sides: at cap 0 it is a
+    sort-merge join, with the same rows."""
+    def salted(spark):
+        ca, pa = lattice_chains(spark, 4)
+        cb, pb = transformed_lattice(spark, 4)
+        scaling = compute_scaling(pa, pb)
+        ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
+        return [lsi_join_salted(ea, eb, GridSpec(16))]
+
+    want, _ = _run(spark, salted)
+    assert want[0][0] > 0
+    monkeypatch.setattr(cells, "BROADCAST_ROWS", 0)
+    got, joins = _run(spark, salted)
+    assert got == want
+    keys = frozenset({"cx", "cy", "_si", "_sj"})
+    assert {name for name, k in joins if k == keys} == {"SortMergeJoin"}, joins
 
 
 def _dbscan(spark):

@@ -9,8 +9,9 @@ from pyspark.sql import functions as F
 from rayjoin_spark.operators.lsi import lsi_join
 from rayjoin_spark.plans.layers import build_edges
 from rayjoin_spark.plans.scaling import GridSpec, compute_scaling
-from rayjoin_spark.plans.cells import explode_edges_to_cells, join_grid
-from rayjoin_spark.plans.skew import hot_cells, lsi_join_salted, salt_buckets
+from rayjoin_spark.plans import cells
+from rayjoin_spark.plans.cells import explode_edges_to_cells, join_grid, layer_split
+from rayjoin_spark.plans.skew import hot_cells, lsi_join_salted
 from rayjoin_spark.sources.cdb import read_cdb, write_cdb_text, cdb_to_parquet
 from rayjoin_spark.sources.datagen import lattice_chains, transformed_lattice, synthetic_pages
 from rayjoin_spark.sources.sampling import sample_map, sample_edges
@@ -79,10 +80,10 @@ def test_salted_lsi_row_parity(spark):
     # threshold 0 -> every joint cell is 'hot' -> everything salted, each
     # cell into min(SALT_MAX, workload) buckets: the split is real
     jg = join_grid(ea, eb, grid)
-    buckets = salt_buckets(explode_edges_to_cells(ea, jg), explode_edges_to_cells(eb, jg), 0)
+    buckets = hot_cells(explode_edges_to_cells(ea, jg), explode_edges_to_cells(eb, jg), 0)
     n_buckets = [r["_p"] * r["_q"] for r in buckets.collect()]
     assert max(n_buckets) > 1
-    salted = lsi_join_salted(ea, eb, grid, hot_threshold=0)
+    salted = lsi_join_salted(ea, eb, grid)
     got = [(r["eid_a"], r["eid_b"]) for r in salted.collect()]
     assert len(got) == len(set(got))
     assert set(got) == plain
@@ -94,16 +95,23 @@ def test_salted_lsi_row_parity(spark):
     ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
     fine = GridSpec(2048)
     want = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, fine).collect()}
-    salted = lsi_join_salted(ea, eb, fine, hot_threshold=0)
+    salted = lsi_join_salted(ea, eb, fine)
     got3 = [(r["eid_a"], r["eid_b"]) for r in salted.collect()]
     assert len(got3) == len(set(got3))
     assert set(got3) == want and want
 
 
-def test_skewed_fixture_salting(spark):
+def _job_ids(spark) -> set:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def test_skewed_fixture_salting(spark, monkeypatch):
     """The power-law fixture really is skewed (hot cells exist at a
-    threshold that uniform data would not hit), and the salted join
-    returns exactly the plain join's rows on it."""
+    threshold that uniform data would not hit), and a plain lsi_join salts
+    it once HOT_WORKLOAD is the median cell workload: some hot cell gets
+    more than one bucket, the salted (cx, cy, _si, _sj) join runs, the
+    rows equal the unsalted join's, and a second join on the same frames
+    reads the cached gate without a job."""
     from rayjoin_spark.sources.datagen import skewed_segments
 
     ca, pa = skewed_segments(spark, 2000, exponent=3)
@@ -112,19 +120,44 @@ def test_skewed_fixture_salting(spark):
     ea = build_edges(ca, pa, scaling)
     eb = build_edges(cb, pb, scaling)
     grid = GridSpec(64)
-    w = hot_cells(
-        explode_edges_to_cells(ea, grid), explode_edges_to_cells(eb, grid),
-        threshold=0,
-    ).select("cx", "cy", "workload").collect()
-    loads = sorted((r["workload"] for r in w), reverse=True)
+    plain = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, grid).collect()}
+    assert len(plain) > 0
+    # the workloads of the cells the core joins: its grid, its explodes
+    jg = join_grid(ea, eb, grid)
+    sides = [explode_edges_to_cells(e, jg, layer_split(e, jg)[0]) for e in (ea, eb)]
+    loads = sorted((r["workload"] for r in hot_cells(*sides, 0).collect()), reverse=True)
     assert len(loads) > 10
     # skew: the hottest cell carries >10x the median cell's workload
-    assert loads[0] > 10 * loads[len(loads) // 2], loads[:5]
-    plain = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, grid).collect()}
-    salted = lsi_join_salted(ea, eb, grid, hot_threshold=loads[len(loads) // 2])
+    median = loads[len(loads) // 2]
+    assert loads[0] > 10 * median, loads[:5]
+    assert max(r["_p"] * r["_q"] for r in hot_cells(*sides, median).collect()) > 1
+
+    monkeypatch.setattr(cells, "HOT_WORKLOAD", median)
+    salted = lsi_join(ea, eb, grid)
     got = [(r["eid_a"], r["eid_b"]) for r in salted.collect()]
     assert len(got) == len(set(got)) and set(got) == plain
-    assert len(plain) > 0
+    plan = salted._jdf.queryExecution().executedPlan().toString()
+    assert any("Join" in line and "_si" in line and "_sj" in line for line in plan.splitlines())
+
+    before = _job_ids(spark)
+    lsi_join(ea, eb, grid)
+    assert _job_ids(spark) == before
+
+
+def test_small_layers_start_no_salting_job(spark):
+    """When est_a * est_b is within HOT_WORKLOAD no cell can be hot: the
+    join is planned plain without a gate job."""
+    ca, pa = lattice_chains(spark, 4)
+    cb, pb = transformed_lattice(spark, 4)
+    scaling = compute_scaling(pa, pb)
+    ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
+    grid = GridSpec(64)
+    jg = join_grid(ea, eb, grid)
+    assert layer_split(ea, jg)[1] * layer_split(eb, jg)[1] <= cells.HOT_WORKLOAD
+    before = _job_ids(spark)
+    df = lsi_join(ea, eb, grid)
+    assert _job_ids(spark) == before
+    assert "_si" not in df._jdf.queryExecution().analyzed().toString()
 
 
 def test_tablestore_roundtrip_and_pruning(spark, tmp_path):

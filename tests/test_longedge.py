@@ -61,6 +61,21 @@ def test_fragment_explode_is_linear(spark, layers):
     assert got_split * 5 < est_unsplit  # the real explode is ~linear in span
 
 
+def test_split_only_when_its_bound_is_smaller(spark, layers):
+    # the rotated lattice at gsize 64 spans more than the fragment length,
+    # but its split bound is above the exact unsplit rows: no split, and
+    # the rows of a coarse grid
+    _, ea, eb = layers
+    grid = GridSpec(64)
+    _, span, est_unsplit, est_split = edge_cell_stats(eb, grid)
+    assert span > SPLIT_CELLS_DEFAULT and est_split >= est_unsplit
+    assert layer_split(eb, grid) == (None, est_unsplit)
+    assert join_grid(ea, eb, grid) == grid
+    coarse = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, GridSpec(16)).collect()}
+    got = [(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, grid).collect()]
+    assert len(got) == len(set(got)) and set(got) == coarse and coarse
+
+
 def test_edge_cell_stats_bound_to_the_frame(spark, tmp_path):
     # stats belong to one DataFrame object: a fresh read of an overwritten
     # path gets fresh stats (they steer the OOM-protective broadcast
