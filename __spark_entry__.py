@@ -2581,14 +2581,15 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_closest_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global closest pair over the derived point fixture
-    (operators/knn.py closest_pair — radius-widening rounds of
-    dist_join; one non-empty round is PROVABLY sufficient, ties break
-    on (dist2, id, id)). Oracle: brute-force min over all pairs with
-    the same lexicographic tiebreak."""
+    (operators/knn.py closest_pair — knn_points of the points against
+    themselves with k=2, pairs with id_a < id_b; the least pair's first
+    point PROVABLY has it in its top 2, ties break on (dist2, id, id)).
+    Oracle: brute-force min over all pairs with the same lexicographic
+    tiebreak."""
     from rayjoin_spark.operators.knn import closest_pair
 
     pts = derived.query_points(spark, sf_dir, residue=2, mod=4)
-    return closest_pair(pts, DERIVED_SCALING, DERIVED_GRID, d0=1 << 22)
+    return closest_pair(pts, DERIVED_SCALING, DERIVED_GRID)
 
 
 def q_local_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2800,7 +2801,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rect_join": q_rect_join,
         "cells_compact": q_cells_compact,
         "range_report": q_range_report,
-        "lm_score": q_lm_score,
+        "dwell_segments": q_dwell_segments,
         "ccnet_buckets": q_ccnet_buckets,
         "tile_payloads": q_tile_payloads,
         "lsi_join_finegrid": q_lsi_finegrid,
@@ -2899,7 +2900,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "length_quantiles": q_length_quantiles,
         "moran_tiles": q_moran_tiles,
         "collocations": q_collocations,
-        "dwell_segments": q_dwell_segments,
+        "lm_score": q_lm_score,
         "union_area": q_union_area,
         "interval_merge": q_interval_merge,
         "reciprocity": q_reciprocity,

@@ -8,14 +8,17 @@ is within the ring's guaranteed-covered radius. Distances are snapped-int
 arithmetic — exact, portable, total-ordered (ties by corpus id).
 
 Scale shape: the rounds are the shared annulus loop
-(plans/cells.annulus_rounds, also behind nearest_edge). Every round is an
-equi-join on the cell against the same corpus-cell table (broadcast when
-small, else persisted and sort-merge pinned); only unresolved queries
-survive to the next round; lineage is cut per round. Rounds batch a
-geometrically growing annulus of Chebyshev rings [lo..hi] with a
-density-derived (and candidate-volume-capped) round-0 radius sized so the
-expected window holds >= ~3k corpus points — the typical query resolves in
-ONE round and the driver-synchronized round count is O(log gsize) worst
+(plans/cells.annulus_rounds, also behind nearest_edge). The projected
+corpus is checkpointed once; one agg over the checkpoint gives its count
+and bbox, from which plans/cells.probe_grid picks the grid the rounds
+probe: the caller's grid rescaled by a power of two until the radius-1
+circle of cells is expected to hold k + 3*sqrt(k) + 2 corpus points, so
+the typical query resolves in ONE round, which starts at radius 1. Every
+round is an equi-join on the cell against the same corpus-cell table
+(broadcast when small, else persisted and sort-merge pinned); only
+unresolved queries survive to the next round; lineage is cut per round.
+Rounds batch a geometrically growing annulus of Chebyshev rings
+[lo..hi], so the driver-synchronized round count is O(log gsize) worst
 case instead of O(resolution radius). The carried top-k array rides
 through the per-round groupBy as exploded candidate rows (annulus cell
 sets are disjoint across rounds, so a corpus id can never duplicate
@@ -27,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rayjoin_spark.plans.cells import annulus_rounds, index_side, round0_radius
+from rayjoin_spark.plans.cells import annulus_rounds, index_side, probe_grid
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
 
@@ -45,25 +48,27 @@ def knn_points(
     queries: (query_id, x, y); corpus: (corpus_id, x, y) doubles.
     Returns (point_id, corpus_id, dist2, rank), rank 1..k by (dist2, id).
     """
-    grid = grid or GridSpec(64)
-    cp = (
-        corpus.select(
-            F.col(corpus_id).alias("cid"),
-            scaling.scale_x(F.col("x")).alias("cx_i"),
-            scaling.scale_y(F.col("y")).alias("cy_i"),
-        )
-        .withColumn("icx", grid.cell_of(F.col("cx_i")))
-        .withColumn("icy", grid.cell_of(F.col("cy_i")))
+    # the projected corpus is materialized once: its count and bbox agg
+    # and the rounds' index read the checkpoint, not the source
+    cp = corpus.select(
+        F.col(corpus_id).alias("cid"),
+        scaling.scale_x(F.col("x")).alias("cx_i"),
+        scaling.scale_y(F.col("y")).alias("cy_i"),
+    ).localCheckpoint(eager=True)
+    n_cp, *box = cp.selectExpr(
+        "count(*)", "coalesce(min(cx_i), 0)", "coalesce(max(cx_i), 0)",
+        "coalesce(min(cy_i), 0)", "coalesce(max(cy_i), 0)",
+    ).first()
+    grid = probe_grid(grid or GridSpec(64), n_cp, box, k)
+    index = cp.selectExpr(
+        "*", f"{grid.cell_of_sql('cx_i')} AS icx", f"{grid.cell_of_sql('cy_i')} AS icy"
     )
-    n_cp = cp.count()
     qp = queries.select(
         F.col(query_id).alias("qid"),
         scaling.scale_x(F.col("x")).alias("qx"),
         scaling.scale_y(F.col("y")).alias("qy"),
         F.array().cast("array<struct<d:bigint,cid:bigint>>").alias("best"),
     )
-    # round-0 radius: shared circle-Poisson + candidate-volume-cap rule
-    density = max(n_cp, 1) / float(grid.grid_size * grid.grid_size)
 
     def score(j: DataFrame) -> DataFrame:
         d2 = (F.col("cx_i") - F.col("qx")) * (F.col("cx_i") - F.col("qx")) + (
@@ -81,7 +86,7 @@ def knn_points(
         return (F.size("best") >= k) & (F.element_at("best", k)["d"] < safe2)
 
     out = annulus_rounds(
-        qp, cp, n_cp, grid, lambda n: round0_radius(density, k, n), score,
+        qp, index, n_cp, box, grid, score,
         # the carried top-k rides as exploded candidate rows; explode_outer
         # keeps a query with an empty top-k alive as one null cand, which
         # collect_list skips
@@ -121,7 +126,8 @@ def dist_join(
     point within d_int (R = d_int // cell_w + 1, cell_w the guaranteed
     minimum cell int-width) — a *bounded* fan-out explode; candidates come
     from an equi-join on (cx, cy) against the corpus cell table, which is
-    counted (one job, nothing cached) and joined through
+    localCheckpointed once (its count and the join read the checkpoint,
+    so the source is scanned once; nothing cached) and joined through
     plans/cells.index_side: broadcast when small, else sort-merge pinned.
     A corpus point lives in exactly one cell and probe cells are distinct
     per query, so no pair dedup is needed. Pick grid so R stays small
@@ -134,6 +140,7 @@ def dist_join(
     r = d_int // cell_w + 1
     d2 = d_int * d_int
 
+    # materialized once, so the count and the join read the checkpoint
     cp = (
         corpus.select(
             F.col(corpus_id).alias("cid"),
@@ -142,6 +149,7 @@ def dist_join(
         )
         .withColumn("ccx", grid.cell_of(F.col("cx_i")))
         .withColumn("ccy", grid.cell_of(F.col("cy_i")))
+        .localCheckpoint(eager=True)
     )
     cp = index_side(cp, cp.count())
     probes = (
@@ -237,8 +245,8 @@ def geo_dist_join(
     (query_id, corpus_id, dist_m).
 
     Scale shape: one bounded explode + one equi-join on the cell (the
-    counted corpus side through plans/cells.index_side, as in dist_join;
-    nothing cached) + codegen math.
+    checkpointed and counted corpus side through plans/cells.index_side,
+    as in dist_join; nothing cached) + codegen math.
     ``cell_udeg`` is the fan-out knob, exactly like dist_join's grid.
     """
     import math
@@ -266,7 +274,7 @@ def geo_dist_join(
         F.col("lat_udeg").alias("clat"),
         cx_of("lon_udeg").alias("ccx"),
         cy_of("lat_udeg").alias("ccy"),
-    )
+    ).localCheckpoint(eager=True)
     cp = index_side(cp, cp.count())
 
     # x-ring: EXACT spherical longitude reach at the worst parallel the
@@ -337,6 +345,29 @@ def geo_dist_join(
     )
 
 
+def _route_legs(points: DataFrame, route_id: str, seq: str, lon: str, lat: str):
+    """The leg prelude of route_length and dwell_segments: each point with
+    _leg, the meter-rounded haversine from the previous point of its route
+    by ``seq`` (null at a route's first), and the (route, seq) window."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("_rid").orderBy("_seq")
+    p = points.select(
+        F.col(route_id).alias("_rid"),
+        F.col(seq).alias("_seq"),
+        F.col(lon).alias("_lon"),
+        F.col(lat).alias("_lat"),
+    )
+    p = p.withColumn("_plon", F.lag("_lon").over(w)).withColumn(
+        "_plat", F.lag("_lat").over(w)
+    )
+    leg = F.when(
+        F.col("_plon").isNotNull(),
+        _haversine_m(F.col("_plon"), F.col("_plat"), F.col("_lon"), F.col("_lat")),
+    )
+    return p.withColumn("_leg", leg), w
+
+
 def route_length(
     points: DataFrame,
     route_id: str = "route_id",
@@ -360,22 +391,7 @@ def route_length(
     sum the per-range outputs (the lag seam legs are the ranges' border
     pairs).
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_rid").orderBy("_seq")
-    p = points.select(
-        F.col(route_id).alias("_rid"),
-        F.col(seq).alias("_seq"),
-        F.col(lon).alias("_lon"),
-        F.col(lat).alias("_lat"),
-    )
-    p = p.withColumn("_plon", F.lag("_lon").over(w)).withColumn(
-        "_plat", F.lag("_lat").over(w)
-    )
-    leg_m = _haversine_m(
-        F.col("_plon"), F.col("_plat"), F.col("_lon"), F.col("_lat")
-    )
-    p = p.withColumn("_leg", F.when(F.col("_plon").isNotNull(), leg_m))
+    p, _ = _route_legs(points, route_id, seq, lon, lat)
     return p.groupBy("_rid").agg(
         F.count("*").cast("bigint").alias("n_points"),
         F.coalesce(F.sum("_leg"), F.lit(0)).cast("bigint").alias("length_m"),
@@ -415,21 +431,8 @@ def dwell_segments(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy("_rid").orderBy("_seq")
-    p = points.select(
-        F.col(route_id).alias("_rid"),
-        F.col(seq).alias("_seq"),
-        F.col(lon).alias("_lon"),
-        F.col(lat).alias("_lat"),
-    )
-    p = p.withColumn("_plon", F.lag("_lon").over(w)).withColumn(
-        "_plat", F.lag("_lat").over(w)
-    )
-    leg = F.when(
-        F.col("_plon").isNotNull(),
-        _haversine_m(F.col("_plon"), F.col("_plat"), F.col("_lon"), F.col("_lat")),
-    )
-    p = p.withColumn("_leg", leg).withColumn(
+    p, w = _route_legs(points, route_id, seq, lon, lat)
+    p = p.withColumn(
         "_brk",
         F.when(
             F.col("_leg").isNull() | (F.col("_leg") > jump_m), F.lit(1)
@@ -454,55 +457,31 @@ def closest_pair(
     points: DataFrame,
     scaling: Scaling,
     grid: GridSpec | None = None,
-    d0: int = 1 << 22,
-    growth: int = 8,
     point_id: str = "point_id",
 ) -> DataFrame:
-    """Global closest pair of points — exact, via radius-widening rounds
-    of the engine's own within-distance join (the classic grid answer to
-    the divide-and-conquer textbook algorithm, reusing dist_join's
-    bounded cell-neighborhood explode).
+    """Global closest pair of points — exact, as the minimum over each
+    point's nearest other point: knn_points of the points against
+    themselves with k=2, keeping the pairs (a, b) with a < b.
 
-    Exactness argument: dist_join(d) returns ALL pairs at snapped-int
-    distance <= d. If that set is non-empty, the global closest pair is
-    in it (its distance is <= any member's), so one non-empty round is
-    sufficient — the widening loop (d *= growth) only runs while the set
-    is EMPTY and d is below the whole-domain cap, so it ends by
-    construction within ceil(log_growth(2^31 / d0)) + 1 rounds, and any
-    two points meet by the cap round. Ties break on (dist2, id_a, id_b)
-    via a lexicographic struct-min, so the answer is bit-stable on any
-    engine/partitioning.
+    Exactness argument: let (a*, b*) be the answer, the least pair by
+    (dist2, id_a, id_b) with a* < b*. Every point at distance 0 from a*
+    has a larger id (a smaller one would pair with a* at distance 0), so
+    a*'s top-2 by (dist2, id) starts with a* itself; every other point
+    nearer to a* than b*, or as near with a smaller id, would form a
+    smaller pair, so b* comes second, and a* < b* keeps it. Ties break on
+    (dist2, id_a, id_b) via a lexicographic struct-min, so the answer is
+    bit-stable on any engine/partitioning.
 
     Returns one row (point_a, point_b, dist2) with point_a < point_b, or
     zero rows for fewer than 2 input points.
 
-    Scale shape: each round is one dist_join (bounded explode + hash
-    equi-join) + a map-side-combinable struct-min; rounds materialize
-    via localCheckpoint (house iterative pattern) and cache nothing, so
-    no round leaves a corpus copy behind. Choose d0 near the
-    expected NN distance (domain_extent / sqrt(n)) so round one already
-    lands non-empty and the probe fan-out (d0/cell)^2 stays small.
+    Scale shape: the kNN annulus rounds (ends by construction, grid
+    picked by plans/cells.probe_grid) + a map-side-combinable struct-min.
     """
-    if d0 < 1 or growth < 2:
-        raise ValueError("closest_pair: d0 must be >= 1 and growth >= 2")
-    corpus = points.select(
-        F.col(point_id).alias("corpus_id"), F.col("x"), F.col("y")
+    corpus = points.select(F.col(point_id).alias("corpus_id"), F.col("x"), F.col("y"))
+    pairs = knn_points(points, corpus, scaling, grid, k=2, query_id=point_id).filter(
+        F.col(point_id) < F.col("corpus_id")
     )
-    # snapped coords live in +-2^28 (plans/scaling.INTERNAL_*), so any
-    # two points are within 2^30 of each other on each axis; d at the
-    # cap covers the whole domain AND keeps d^2 < 2^63 (d_int >= 2^32
-    # would overflow dist_join's int64 d^2 literal)
-    d_cap = 1 << 31
-    d = min(d0, d_cap)
-    while True:
-        pairs = (
-            dist_join(points, corpus, scaling, grid=grid, d_int=d, query_id=point_id)
-            .filter(F.col(point_id) < F.col("corpus_id"))
-            .localCheckpoint(eager=True)
-        )
-        if d >= d_cap or not pairs.isEmpty():
-            break
-        d = min(d * growth, d_cap)
     best = pairs.agg(
         F.min(
             F.struct(F.col("dist2"), F.col(point_id), F.col("corpus_id"))

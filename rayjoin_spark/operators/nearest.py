@@ -27,18 +27,19 @@ fractional bits separate all distinct distances; ties break by eid.
 floor(d2) itself fits int64 (d2 <= 2*2^58).
 
 Scale shape: the rounds are the shared annulus loop
-(plans/cells.annulus_rounds, also behind knn_points). Each round is one
+(plans/cells.annulus_rounds, also behind knn_points), at the grid
+plans/cells.probe_grid picks from the layer's edge count and bbox (read
+from its cached edge_cell_stats): the caller's grid rescaled by a power
+of two until the radius-1 circle of cells is expected to hold 6 edges
+(k + 3*sqrt(k) + 2 at k = 1), so typical points meet enough edges to
+resolve in the first round, which starts at radius 1. Each round is one
 equi-join of the active queries' candidate cells against the edge-cell
 table (broadcast when its stats bound is small, else persisted and
 sort-merge pinned); only unresolved queries survive; lineage is cut per
 round with localCheckpoint. Rounds batch a geometrically GROWING annulus
-of rings [lo..hi] (hi doubles each round), and round 0 starts at a
-density-derived radius r0 so that typical points meet enough edges to
-resolve immediately: driver-synchronized rounds are O(log gsize) worst
-case and 1-2 in the dense common case, instead of O(resolution radius).
-The extra cells a near-resolving point explodes are bounded by the
-constant (2*r0+1)^2 and are join-side work, which is ~free next to the
-per-round job + checkpoint constant this trades away.
+of rings [lo..hi] (hi doubles each round): driver-synchronized rounds
+are O(log gsize) worst case and 1-2 in the common case, instead of
+O(resolution radius).
 """
 
 from __future__ import annotations
@@ -46,11 +47,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rayjoin_spark.plans import cells
 from rayjoin_spark.plans.cells import (
     annulus_rounds,
+    edge_cell_stats,
     explode_edges_to_cells,
     layer_split,
-    round0_radius,
+    probe_grid,
 )
 from rayjoin_spark.plans.scaling import GridSpec, Scaling
 
@@ -130,6 +133,9 @@ def nearest_edge(
     is decided on the full 118-fractional-bit key, ties by smallest eid.
     """
     grid = grid or GridSpec(64)
+    n_edges = edge_cell_stats(edges, grid)[0]
+    box = cells._STATS[edges]["box"]
+    grid = probe_grid(grid, n_edges, box, 1)
     # long-edge pre-split, the same layer_split decision as lsi_join /
     # PipIndex: a long diagonal segment at a fine grid would otherwise
     # explode its bbox QUADRATICALLY (plans/cells.py module doc). The
@@ -148,9 +154,6 @@ def nearest_edge(
         scaling.scale_y(F.col("y")).alias("qy"),
         F.lit(None).cast("struct<d2f:bigint,lo1:bigint,lo2:bigint,eid:bigint>").alias("best"),
     )
-    # round-0 radius: shared circle-Poisson + candidate-volume-cap rule
-    # with k=1 (the query resolves on its FIRST in-circle edge)
-    density = max(est_rows, 1) / float(grid.grid_size * grid.grid_size)
     d2d, key = _distance_keys()
 
     def score(j: DataFrame) -> DataFrame:
@@ -178,7 +181,7 @@ def nearest_edge(
         return F.col("best").isNotNull() & (F.col("best.d2f") < safe2)
 
     out = annulus_rounds(
-        qp, ec, est_rows, grid, lambda n: round0_radius(density, 1, n, r_max=4), score,
+        qp, ec, est_rows, box, grid, score,
         carry=F.col("best"),
         merge=F.min("cand"),  # min skips the null best of a fresh query
         resolved=resolved,

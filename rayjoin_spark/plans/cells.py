@@ -12,8 +12,9 @@ Also provides the per-cell workload metrics the reference exposes as
 histograms (src/grid/uniform_grid.h:360-494), the cell join's
 stats-driven decisions (layer_split, join_grid, index_side, the
 HOT_WORKLOAD salting gate), the one ownership cell join (_owned_pairs,
-behind the LSI, the overlay, faces and the box joins) and the one
-Chebyshev-annulus round loop of the point queries (annulus_rounds).
+behind the LSI, the overlay, faces and the box joins), and the point
+queries' grid (probe_grid) and their one Chebyshev-annulus round loop
+(annulus_rounds), which starts at radius 1 on that grid.
 
 Long edges at fine grids: the bbox rectangle explode is QUADRATIC in the
 edge's cell span for diagonal edges (a unit lattice diagonal at gsize 15000
@@ -34,6 +35,7 @@ min are duplicate-insensitive).
 from __future__ import annotations
 
 import functools
+import math
 import weakref
 
 from pyspark.sql import DataFrame
@@ -121,10 +123,11 @@ def _fragment_cell_bboxes(edges: DataFrame, grid: GridSpec, k: int) -> DataFrame
 
 
 #: per-DataFrame stats, keyed by the frame object itself, then by gsize
-#: (edge_cell_stats), ("max", gsize) (max_cell_rows) or "extent" (the
-#: grid-free mean edge extent). A DataFrame fixes its file listing when it
-#: is analyzed, so an entry is never staler than the frame it belongs to;
-#: a fresh read gets fresh stats, and a dropped frame drops its entry.
+#: (edge_cell_stats), ("max", gsize) (max_cell_rows), "extent" (the
+#: grid-free mean edge extent) or "box" (the grid-free snapped bbox of the
+#: layer). A DataFrame fixes its file listing when it is analyzed, so an
+#: entry is never staler than the frame it belongs to; a fresh read gets
+#: fresh stats, and a dropped frame drops its entry.
 _STATS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -136,8 +139,10 @@ def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, in
     upper-bound estimate under SPLIT_CELLS_DEFAULT fragmentation (each
     fragment bbox <= (k+3)^2 cells incl. the +-1 widen and DIV slack).
     Computed once per DataFrame object and grid (see _STATS); read
-    through layer_split. The first call on a frame also records its mean
-    edge extent, which join_grid reads.
+    through layer_split. Each call that runs the agg also records the
+    layer's mean edge extent, which join_grid reads, and its snapped
+    bbox (xmin, xmax, ymin, ymax; zeros for an empty layer), which
+    nearest_edge hands to probe_grid.
     """
     per_frame = _STATS.setdefault(edges, {})
     if grid.grid_size in per_frame:
@@ -152,6 +157,8 @@ def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, in
         .selectExpr(
             "ix2 - ix1 + 1 AS sx", "iy2 - iy1 + 1 AS sy",
             "greatest(abs(x2 - x1), abs(y2 - y1)) AS ext",
+            "least(x1, x2) AS lx", "greatest(x1, x2) AS hx",
+            "least(y1, y2) AS ly", "greatest(y1, y2) AS hy",
         )
         .selectExpr(
             "count(*) AS n",
@@ -159,12 +166,15 @@ def edge_cell_stats(edges: DataFrame, grid: GridSpec) -> tuple[int, int, int, in
             "coalesce(sum(sx * sy), 0) AS eu",
             f"coalesce(sum({frag_est}), 0) AS es",
             "coalesce(avg(ext), 0D) AS ext",
+            "coalesce(min(lx), 0)", "coalesce(max(hx), 0)",
+            "coalesce(min(ly), 0)", "coalesce(max(hy), 0)",
         )
         .collect()[0]
     )
     out = (int(row["n"]), int(row["mx"]), int(row["eu"]), int(row["es"]))
     per_frame[grid.grid_size] = out
     per_frame["extent"] = float(row["ext"])
+    per_frame["box"] = tuple(int(v) for v in row[-4:])
     return out
 
 
@@ -378,33 +388,31 @@ def workload_histogram(workload: DataFrame, n_buckets: int = 16) -> DataFrame:
     )
 
 
-def round0_radius(
-    density: float,
-    k: int,
-    n_queries: int,
-    r_max: int = 6,
-    cand_cap: int = 40_000_000,
-) -> int:
-    """Shared round-0 annulus radius for the point-query loops
-    (operators/knn.py, operators/nearest.py): a query RESOLVES only when
-    its k-th hit lies inside the radius-r inscribed circle of the covered
-    window, so pick the smallest r whose circle's expected Poisson mass
-    pi*r^2*density reaches k + 3*sqrt(k) + 2 (~3-sigma margin, <~0.2%
-    expected survivors — typical queries finish in ONE round), then
-    shrink while the round-0 candidate volume
-    n_queries*(2r+1)^2*density exceeds cand_cap: at many queries the
-    variable join cost dominates the per-round fixed cost a big r
-    amortizes (and nearest's two-phase argmin evaluates its slim join
-    twice). density = expected index rows per grid cell."""
-    import math
+def probe_grid(grid: GridSpec, rows: int, box: tuple[int, int, int, int], k: int) -> GridSpec:
+    """The grid a point query's annulus rounds probe at: the finest
+    power-of-two rescale of the caller's grid (finer or coarser, from one
+    cell up to cells one snapped unit wide) at which the index's ``rows``
+    over the cells of its snapped bbox ``box`` (xmin, xmax, ymin, ymax)
+    still average target = (k + 3*sqrt(k) + 2) / pi per cell, so the
+    radius-1 circle of the first round expects a ~3-sigma Poisson margin
+    over k hits and a typical query resolves there. Refining by two at
+    most quadruples the box's cells, so the density lies in
+    [target, 4 * target). Grid size is physical: the rows do not change.
+    """
+    target = (k + 3.0 * math.sqrt(k) + 2.0) / math.pi
 
-    need = k + 3.0 * math.sqrt(k) + 2.0
-    r = 1
-    while r < r_max and math.pi * r * r * density < need:
-        r += 1
-    while r > 1 and n_queries * ((2 * r + 1) ** 2) * density > cand_cap:
-        r -= 1
-    return r
+    def dense(g: int) -> bool:
+        s = GridSpec(g)
+        nx = s.cell_of_py(box[1]) - s.cell_of_py(box[0]) + 1
+        ny = s.cell_of_py(box[3]) - s.cell_of_py(box[2]) + 1
+        return rows >= target * nx * ny
+
+    g = grid.grid_size
+    while g > 1 and not dense(g):
+        g //= 2
+    while GridSpec(2 * g).cell_scale <= 1.0 and dense(2 * g):
+        g *= 2
+    return grid if g == grid.grid_size else GridSpec(g)
 
 
 _QUERY_COLS = ("qid", "qx", "qy", "qcx", "qcy")
@@ -414,70 +422,66 @@ def annulus_rounds(
     queries: DataFrame,
     index: DataFrame,
     index_rows: int,
+    box: tuple[int, int, int, int],
     grid: GridSpec,
-    radius0,
     score,
     carry,
     merge,
     resolved,
 ) -> DataFrame:
     """The batched Chebyshev-annulus round loop of the point queries
-    (operators/knn.py, operators/nearest.py).
+    (operators/knn.py, operators/nearest.py), at probe_grid's grid.
 
     ``queries`` is (qid, qx, qy, best): snapped ints and each query's
     empty best. ``index`` is the cell-keyed side with its cell in
-    (icx, icy) and at most ``index_rows`` rows; index_side decides its
-    join, and a merge-side index is persisted for the rounds and released
-    on return. ``radius0(n_queries)``
-    gives the round-0 radius (round0_radius with the caller's k). Round i
-    probes the rings [lo..hi] around each unresolved query's cell
-    (clipped to the grid), equi-joins them to the index on the cell, and
-    ``score`` maps the joined rows to (qid, qx, qy, qcx, qcy, cand). The
-    ``carry`` column re-emits each query's current best as cand rows, and
-    the ``merge`` aggregate folds carry and new candidates into the next
-    best in ONE groupBy; the always-present carry row keeps a query with
-    no candidates alive. Annulus cell sets are disjoint across rounds, so
-    a candidate never meets its own carry. A query is done once
-    ``resolved(safe2)`` holds, safe2 = (hi * cell width)^2 being the
-    squared radius that rings 0..hi fully cover, or once hi reaches the
-    grid size. Each round is checkpointed, so the returned union of done
-    (qid, best) rows no longer reads the index.
+    (icx, icy), at most ``index_rows`` rows, all inside the cells of the
+    snapped bbox ``box``; index_side decides its join, and a merge-side
+    index is persisted for the rounds and released on return. Round i
+    probes the rings [lo..hi] beyond each unresolved query's gap (its
+    cell's Chebyshev distance to the box's cells), clipped to the box's
+    cells, starting at [0..1]; it equi-joins them to the index on the
+    cell, and ``score`` maps the joined rows to (qid, qx, qy, qcx, qcy,
+    cand). The ``carry`` column re-emits each query's current best as
+    cand rows, and the ``merge`` aggregate folds carry and new
+    candidates into the next best in ONE groupBy; the always-present
+    carry row keeps a query with no candidates alive. Annulus cell sets
+    are disjoint across rounds, so a candidate never meets its own
+    carry. A query is done once ``resolved(safe2)`` holds, safe2 =
+    ((gap + hi) * cell width)^2 being the squared radius its probed
+    rings fully cover, once they cover every box cell, or once hi
+    reaches the grid size. Each round is checkpointed, so the returned
+    union of done (qid, best) rows no longer reads the index.
     """
     gsize = grid.grid_size
     # guaranteed minimum int-width of a cell (floor of 1/cell_scale)
     cell_w = int(1.0 / grid.cell_scale)
+    bx0, bx1, by0, by1 = (grid.cell_of_py(v) for v in box)
+    gap = f"greatest({bx0} - qcx, qcx - {bx1}, {by0} - qcy, qcy - {by1}, 0)"
+    # Chebyshev distance from the query's cell to the farthest box cell
+    reach = f"greatest(qcx - {bx0}, {bx1} - qcx, qcy - {by0}, {by1} - qcy)"
     active = queries.selectExpr(
         "qid", "qx", "qy",
         f"{grid.cell_of_sql('qx')} AS qcx", f"{grid.cell_of_sql('qy')} AS qcy", "best",
     ).localCheckpoint(eager=True)
-    # the count is a cheap scan of the checkpoint just materialized
-    r0 = radius0(active.count())
     persisted = index.persist() if index_rows > BROADCAST_ROWS else None
     index = index_side(index if persisted is None else persisted, index_rows)
     done = []
-    lo, hi = 0, r0
+    lo, hi = 0, 1
     try:
         # hi at least doubles each round and a round with hi >= gsize
         # resolves every query, so the loop ends within
         # ceil(log2(gsize)) + 1 rounds
         while True:
-            # annulus of rings [lo..hi]: two tiny sequence explodes
-            # (constant-size plan for any hi, unlike a literal offset array)
+            # the rings [gap + lo .. gap + hi], clipped to the box's cells
+            # (never empty: gap is the distance to them): two sequence
+            # explodes, a constant-size plan for any hi
+            r = f"({hi} + {gap})"
+            x0, x1 = f"greatest(qcx - {r}, {bx0})", f"least(qcx + {r}, {bx1})"
+            y0, y1 = f"greatest(qcy - {r}, {by0})", f"least(qcy + {r}, {by1})"
             probes = (
-                active.withColumn("_dx", F.explode(F.sequence(F.lit(-hi), F.lit(hi))))
-                .withColumn("_dy", F.explode(F.sequence(F.lit(-hi), F.lit(hi))))
-                .filter(F.greatest(F.abs("_dx"), F.abs("_dy")) >= F.lit(lo))
-                .select(
-                    *_QUERY_COLS,
-                    (F.col("qcx") + F.col("_dx")).alias("cx"),
-                    (F.col("qcy") + F.col("_dy")).alias("cy"),
-                )
-                .filter(
-                    (F.col("cx") >= 0)
-                    & (F.col("cx") < gsize)
-                    & (F.col("cy") >= 0)
-                    & (F.col("cy") < gsize)
-                )
+                active.selectExpr(*_QUERY_COLS, f"explode(sequence({x0}, {x1})) AS cx")
+                .selectExpr("*", f"explode(sequence({y0}, {y1})) AS cy")
+                .filter(f"greatest(abs(cx - qcx), abs(cy - qcy)) >= {lo} + {gap}")
             )
             cand = score(probes.join(
                 index, (F.col("cx") == F.col("icx")) & (F.col("cy") == F.col("icy")), "inner"
@@ -488,7 +492,12 @@ def annulus_rounds(
                 .agg(merge.alias("best"), *(F.first(c).alias(c) for c in _QUERY_COLS[1:]))
                 .localCheckpoint(eager=True)
             )
-            is_done = resolved(F.lit((hi * cell_w) * (hi * cell_w))) | F.lit(hi >= gsize)
+            radius = F.expr(f"CAST({r} AS BIGINT) * {cell_w}")
+            is_done = (
+                resolved(radius * radius)
+                | F.expr(f"{reach} <= {r}")
+                | F.lit(hi >= gsize)
+            )
             done.append(merged.filter(is_done).select("qid", "best"))
             active = merged.filter(~is_done)
             if hi >= gsize or active.isEmpty():

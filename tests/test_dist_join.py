@@ -1,6 +1,5 @@
 """dist_join semantics: exact within-distance pairs, grid-invariant."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from rayjoin_spark.operators.knn import dist_join
@@ -102,10 +101,10 @@ def test_closest_pair_exact_and_widening(spark):
     from rayjoin_spark.operators.knn import closest_pair
 
     scaling = Scaling.from_bbox(0.0, 100.0, 0.0, 100.0)
-    # far-apart scatter: the tiny d0 forces several widening rounds
+    # far-apart scatter: only one pair is close
     rows = [(1, 0.0, 0.0), (2, 90.0, 90.0), (3, 50.0, 10.0), (4, 52.0, 11.0)]
     pts = _pts(spark, rows, "point_id")
-    got = closest_pair(pts, scaling, GridSpec(64), d0=1, growth=8).collect()
+    got = closest_pair(pts, scaling, GridSpec(64)).collect()
     assert len(got) == 1
     r = got[0]
     assert (r["point_a"], r["point_b"]) == (3, 4)
@@ -126,9 +125,7 @@ def test_closest_pair_tie_breaks_on_ids(spark):
     scaling = Scaling.from_bbox(0.0, 100.0, 0.0, 100.0)
     # two pairs at identical distance; (1,2) wins on id order
     rows = [(2, 0.0, 0.0), (1, 10.0, 0.0), (9, 0.0, 50.0), (5, 10.0, 50.0)]
-    r = closest_pair(
-        _pts(spark, rows, "point_id"), scaling, GridSpec(64), d0=1 << 28
-    ).collect()[0]
+    r = closest_pair(_pts(spark, rows, "point_id"), scaling, GridSpec(64)).collect()[0]
     assert (r["point_a"], r["point_b"]) == (1, 2)
 
 
@@ -136,28 +133,16 @@ def test_closest_pair_single_point_empty(spark):
     from rayjoin_spark.operators.knn import closest_pair
 
     scaling = Scaling.from_bbox(0.0, 100.0, 0.0, 100.0)
-    r = closest_pair(
-        _pts(spark, [(1, 5.0, 5.0)], "point_id"), scaling, GridSpec(64), d0=1,
-    )
+    r = closest_pair(_pts(spark, [(1, 5.0, 5.0)], "point_id"), scaling, GridSpec(64))
     assert r.count() == 0
 
 
 def test_closest_pair_widens_to_the_cap(spark):
-    """Two points ~90 units apart from d0=1 at the default growth: the
-    widening runs until they meet (a round budget used to end it first
-    and return no rows)."""
+    """Two points ~90 units apart at a fine caller grid: the pair is
+    found however far apart the two points are."""
     from rayjoin_spark.operators.knn import closest_pair
 
     scaling = Scaling.from_bbox(0.0, 100.0, 0.0, 100.0)
     pts = _pts(spark, [(1, 5.0, 5.0), (2, 95.0, 5.0)], "point_id")
-    got = closest_pair(pts, scaling, GridSpec(64), d0=1).collect()
+    got = closest_pair(pts, scaling, GridSpec(15000)).collect()
     assert [(r["point_a"], r["point_b"]) for r in got] == [(1, 2)]
-
-
-def test_closest_pair_rejects_non_growing_radius(spark):
-    from rayjoin_spark.operators.knn import closest_pair
-
-    scaling = Scaling.from_bbox(0.0, 100.0, 0.0, 100.0)
-    pts = _pts(spark, [(1, 5.0, 5.0), (2, 95.0, 5.0)], "point_id")
-    with pytest.raises(ValueError):
-        closest_pair(pts, scaling, GridSpec(64), growth=1)

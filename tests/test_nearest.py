@@ -1,7 +1,9 @@
 """nearest_edge: exact point-to-segment argmin via cell-ring expansion.
 
 Covers: brute-force Fraction parity (incl. degenerate zero-length edges
-and endpoint cases), grid invariance, the exact-key adversarial case
+and endpoint cases), grid invariance over caller grids from one cell to
+15000, with the probe grid (plans/cells.probe_grid) and with the caller's
+grid forced, the exact-key adversarial case
 (two candidate distances whose doubles are bit-identical but whose exact
 rationals differ — only the 118-fractional-bit limb key can order them),
 and the eid tiebreak on exactly equal distances.
@@ -11,6 +13,7 @@ from fractions import Fraction
 
 from pyspark.sql import functions as F
 
+from rayjoin_spark.operators import nearest
 from rayjoin_spark.operators.nearest import nearest_edge
 from rayjoin_spark.plans.cells import SPLIT_CELLS_DEFAULT, layer_split
 from rayjoin_spark.plans.layers import build_edges
@@ -49,7 +52,11 @@ def _brute(pts, edges):
     return want
 
 
-def test_nearest_edge_bruteforce_and_grid_invariant(spark):
+def _keep_caller_grid(monkeypatch):
+    monkeypatch.setattr(nearest, "probe_grid", lambda grid, rows, box, k: grid)
+
+
+def test_nearest_edge_bruteforce_and_grid_invariant(spark, monkeypatch):
     import random
 
     rnd = random.Random(11)
@@ -69,12 +76,14 @@ def test_nearest_edge_bruteforce_and_grid_invariant(spark):
         for i in range(50)
     ]
     want = _brute(pts, edges)
-    got64 = _run(spark, pts, edges, GridSpec(64))
-    assert got64 == want
-    # grid invariance: a much coarser grid changes candidate generation
-    # order/rounds but not the exact argmin
-    got8 = _run(spark, pts, edges, GridSpec(8))
-    assert got8 == want
+    # grid invariance: the grid changes candidate generation order and
+    # rounds but not the exact argmin, with the probe grid and then with
+    # the caller's grid
+    for gsize in (1, 16, 256, 15000):
+        assert _run(spark, pts, edges, GridSpec(gsize)) == want, gsize
+    _keep_caller_grid(monkeypatch)
+    for gsize in (1, 16, 256, 15000):
+        assert _run(spark, pts, edges, GridSpec(gsize)) == want, ("caller", gsize)
 
 
 def test_nearest_edge_sub_double_resolution(spark):
@@ -112,11 +121,15 @@ def test_nearest_edge_tiebreak_and_endpoint(spark):
     assert got[0] == (1, 30 * 30 + 40 * 40)
 
 
-def test_nearest_edge_split_index_matches_bruteforce(spark):
+def test_nearest_edge_split_index_matches_bruteforce(spark, monkeypatch):
     """At gsize 2048 the rotated m=4 lattice's edges span ~234 cells, so
     the edge-cell index is fragmented and holds duplicate (cell, eid)
-    rows at fragment seams; the argmin must not see them."""
+    rows at fragment seams; the argmin must not see them. The probe grid
+    is held at the caller's 2048 (its own pick for this layer is far
+    coarser and unsplit)."""
     import random
+
+    _keep_caller_grid(monkeypatch)
 
     ca, pa = lattice_chains(spark, 4)
     cb, pb = transformed_lattice(spark, 4)
