@@ -2768,15 +2768,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_keep_best": q_dedup_keep_best,
         "dup_spans": q_dup_spans,
         "mirror_clusters": q_mirror_clusters,
-        "kmeans_labels": q_kmeans,
+        "pages_geocode": q_pages_geocode,
         "kmeans_reps": q_kmeans_reps,
-        "tfidf_topk": q_tfidf_topk,
+        "raster_vectorize": q_raster_vectorize,
         "scc_hosts": q_scc,
         "semdedup": q_semdedup,
         "neardup_clusters": q_neardup_clusters,
         "face_stats": q_face_stats,
         "decontaminate": q_decontaminate,
-        "redact_pii": q_redact_pii,
+        "xsect_density": q_xsect_density,
         "dist_join": q_dist_join,
         "convex_hull": q_convex_hull,
         "group_diameter": q_group_diameter,
@@ -2865,7 +2865,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "grid_cell_counts": q_grid_cells,
         "cell_workload_hist": q_cell_workload,
         "tile_counts": q_tiles,
-        "raster_vectorize": q_raster_vectorize,
+        "tfidf_topk": q_tfidf_topk,
         "script_profile": q_script_profile,
         "token_count": q_token_count,
         "bpe_token_count": q_bpe_tokens,
@@ -2882,7 +2882,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash16": q_simhash,
         "simhash_neardup": q_simhash_neardup,
         "ann_topk_dot": q_ann,
-        "pages_geocode": q_pages_geocode,
+        "kmeans_labels": q_kmeans,
         "warc_roundtrip": q_warc_roundtrip,
         "html_extract": q_html_extract,
         "charset_detect": q_charset_detect,
@@ -2905,7 +2905,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interval_merge": q_interval_merge,
         "reciprocity": q_reciprocity,
         "assortativity": q_assortativity,
-        "xsect_density": q_xsect_density,
+        "redact_pii": q_redact_pii,
         "local_moran": q_local_moran,
         "cell_morton": q_cell_morton,
         "event_rollup": q_event_rollup,

@@ -10,12 +10,12 @@ of Simplicity (reference src/algo/lsi.h:27-103) and the grid-backed join
 
 Key deviations from the reference's physical plan (same results):
 
-* Join grid: the reference joins at the user's --grid_size (src/flags.cc:6).
-  Here the caller's grid is the COARSEST cell the join may use:
-  plans.cells.join_grid refines it by a power of two (at most 64x) while
-  the cells stay at least as wide as the layers' mean edge, because cells
-  much wider than the edges multiply candidate pairs quadratically in the
-  per-cell fan-out. Thin cells keep the caller's grid.
+* Join grid: the reference joins at the user's --grid_size (src/flags.cc:6)
+  and scales it with the input (expr/env.sh:12). Here plans.cells.join_grid
+  rescales the caller's grid by a power of two (at most 64x either way) to
+  the finest grid whose cells are still as wide as the layers' mean edge:
+  cells much wider than the edges multiply candidate pairs quadratically
+  in the per-cell fan-out, and cells much narrower multiply explode rows.
 
 * Candidate dedup: the reference tests every shared cell and keeps the
   pair only in the cell containing the exact intersection point
@@ -82,7 +82,7 @@ def lsi_candidates(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> Da
     """Candidate pairs sharing >=1 grid cell (before the exact test),
     deduped by min-shared-cell ownership — the cell-join core's output.
     Their cx, cy (and ix1, iy1) are cells of the JOIN grid
-    (plans.cells.join_grid), which may be finer than ``grid``.
+    (plans.cells.join_grid), which may be finer or coarser than ``grid``.
 
     The long-edge split keeps this generator LINEAR in an edge's cell
     span at fine grids. When a side is split a pair may survive ownership
@@ -160,9 +160,9 @@ def lsi_join(
     Parameters
     ----------
     edges_a, edges_b : outputs of plans.layers.build_edges (map0, map1)
-    grid : the coarsest grid the join may use (reference default 2048,
-        experiments 15000 — src/flags.cc:6; plans.cells.join_grid may
-        refine it). The rows do not depend on it.
+    grid : the caller's grid (reference default 2048, experiments 15000
+        — src/flags.cc:6); plans.cells.join_grid rescales it to the
+        layers' mean edge. The rows do not depend on it.
     with_points : also emit the exact intersection point columns
 
     The long-edge split, hot-cell salting and the sort-merge pin are

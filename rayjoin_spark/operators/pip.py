@@ -11,15 +11,17 @@ vertices) break by slope; the hit edge's face resolves via p1.x < p2.x
 Physical plan (all JVM-side): ONE guarded band pass — each point
 equi-joins edge-cells on (cx, cy) over the first `BAND0` non-empty cells
 of its grid column at or above it, argmin with the reference's
-acceptance guard — then the few unresolved points re-join over their
-ENTIRE remaining column (where the global argmin needs no guard). No
-round loop and no eager checkpoint: the accepted set is persisted and
-read by both the completion's anti-join and the final union. Sound
-because any edge whose acceptance fails has its ray crossing registered
-in a cell above the searched band (the bbox rectangle explode covers the
-crossing cell), so the completion pass re-finds it. This replaces the
-reference's cell-by-cell walk (src/app/pip_grid.h:37-70) with two
-set-at-a-time passes.
+acceptance guard — then the few unresolved points left-join their
+ENTIRE remaining column (where the global argmin needs no guard), one
+row each, hit or miss. Points with no non-empty cell at or above them
+are misses without a join. The result is the disjoint union accepted ∪
+completion ∪ misses. No round loop and no eager checkpoint: the accepted
+set is persisted and read by both the completion's anti-join and the
+union. Sound because any edge whose acceptance fails has its ray
+crossing registered in a cell above the searched band (the bbox
+rectangle explode covers the crossing cell), so the completion pass
+re-finds it. This replaces the reference's cell-by-cell walk
+(src/app/pip_grid.h:37-70) with two set-at-a-time passes.
 
 * exact comparisons everywhere: sign tests are int64; the argmin key is
   floor(n * 2^62 / b) as a lexicographic pair of int64 limbs — an exact
@@ -29,8 +31,8 @@ set-at-a-time passes.
   double (src/algo/pip.h:53) and hopes ("Roundoff error should not cause
   it, I hope"); we are exact;
 * argmin per point is one `min_by(payload, key_struct)` — partial-
-  aggregating map-side, no window sort, no join-back (px and the hit
-  edge's face ride in the payload);
+  aggregating map-side, no window sort (px and the hit edge's face ride
+  in the payload);
 * empty cells are skipped: a broadcast map cx -> sorted non-empty cys
   lets each point jump straight to its candidate cells.
 
@@ -208,22 +210,32 @@ class PipIndex:
 
 def _argmin_in_cells(src: DataFrame, index: PipIndex, query_map_id: int,
                      cells_col: str, with_guard: bool) -> DataFrame:
-    """Explode each point over its candidate cells, equi-join the edge-cells
-    on (cx, cy), filter, argmin. Returns (point_id, eid, face_id[, band_top,
-    x/y payload]) — one row per point that has any candidate."""
+    """Explode each point over its candidate cells, join the edge-cells on
+    (cx, cy) with the candidate filter in the join condition, argmin.
+    Returns (point_id, eid, x/y payload[, band_top]).
+
+    The guarded band pass is an inner join: one row per point that has
+    any candidate in its band. The completion (no guard) is a left join,
+    so every point gets one row: a cell row with no candidate has a NULL
+    argmin key, which min_by skips, and a point with no candidate in any
+    cell comes out with a NULL payload."""
+    key = _argmin_key_sql(query_map_id)
+    if not with_guard:
+        key = f"IF(eid IS NULL, NULL, {key})"
     cand = (
         src.selectExpr("*", f"explode({cells_col}) AS band_cy")
-        .join(index.joinable_cells(), F.expr("pcx = cx AND band_cy = cy"), "inner")
-        .filter(_candidate_filter_sql(query_map_id))
+        .join(
+            index.joinable_cells(),
+            F.expr(f"pcx = cx AND band_cy = cy AND {_candidate_filter_sql(query_map_id)}"),
+            "inner" if with_guard else "left",
+        )
         .selectExpr("*", "-a * px - c AS n_")
     )
     payload = (
         "eid, x1, y1, x2, y2, a, b, c, px, left_polygon_id, right_polygon_id"
         + (", band_top" if with_guard else "")
     )
-    best = cand.groupBy("point_id").agg(
-        F.expr(f"min_by(struct({payload}), {_argmin_key_sql(query_map_id)}) AS e")
-    )
+    best = cand.groupBy("point_id").agg(F.expr(f"min_by(struct({payload}), {key}) AS e"))
     return best.selectExpr("point_id", "e.*")
 
 
@@ -306,11 +318,12 @@ def pip_locate(
         caches.append(accepted)
     # completion: unresolved points join their whole remaining column —
     # the global argmin there needs no guard (a rejected band argmin
-    # re-registers at its crossing cell above the band)
-    rest = stepped.join(accepted.selectExpr("point_id"), "point_id", "left_anti")
-    rest = rest.filter("size(cands) > 0")
-    bestB = _argmin_in_cells(rest, index, query_map_id, "cands", False)
-    hits = accepted.unionByName(bestB.selectExpr(*_HIT_COLS))
-
-    out = pts.selectExpr("point_id").join(hits, "point_id", "left")
+    # re-registers at its crossing cell above the band) — one row each
+    rest = banded.join(accepted.selectExpr("point_id"), "point_id", "left_anti")
+    completed = _argmin_in_cells(rest, index, query_map_id, "cands", False)
+    # points with no non-empty cell above them miss without a join
+    misses = stepped.filter("cands IS NULL OR size(cands) = 0").selectExpr(
+        "point_id", "NULL AS closest_eid", "0 AS face_id"
+    )
+    out = accepted.unionByName(completed.selectExpr(*_HIT_COLS)).unionByName(misses)
     return out.selectExpr("point_id", "closest_eid", "coalesce(face_id, 0) AS face_id")

@@ -19,7 +19,7 @@ Scale shape: range_report runs the engine's one cell-join core
 box side: a rect enters as the degenerate edge (rx1, ry1) -> (rx2, ry2),
 whose bbox is exactly the rect, and never splits; the edge side gets the
 LSI's long-edge split and sort-merge guard. The join runs at the caller's
-grid (a box side turns off join_grid's refinement, see _owned_pairs). The
+grid (a box side turns off join_grid's rescale, see _owned_pairs). The
 candidate join is a cell equi-join, and duplicates from multi-cell
 overlap are dropped by min-shared-cell ownership (a column filter, no
 shuffle); only when the edge side was split does a (rect_id, eid) dedup

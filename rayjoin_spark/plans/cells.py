@@ -208,34 +208,42 @@ def max_cell_rows(edges: DataFrame, grid: GridSpec) -> int:
     return per_frame[key]
 
 
-#: cap on join_grid's refinement of the caller's grid
+#: cap on join_grid's rescale of the caller's grid, either way
 JOIN_GRID_MAX_FACTOR = 64
 
 
 def join_grid(edges_a: DataFrame, edges_b: DataFrame, grid: GridSpec) -> GridSpec:
-    """The grid _owned_pairs joins at: the caller's grid refined by the
-    largest power of two (at most JOIN_GRID_MAX_FACTOR) whose cells are
-    still at least as wide as the wider layer's mean edge extent
-    max(|x2-x1|, |y2-y1|).
+    """The grid _owned_pairs joins at: the caller's grid rescaled by a
+    power of two (at most JOIN_GRID_MAX_FACTOR either way) to the finest
+    grid whose cells are still at least as wide as the wider layer's mean
+    edge extent max(|x2-x1|, |y2-y1|). It halves the grid (floor
+    division, as probe_grid does) while the cells are narrower than that
+    extent, then doubles it while the finer cells are still as wide.
 
     A cell much wider than the edges costs candidate pairs, which grow
-    with the square of the per-cell fan-out; at one mean edge per cell
-    width an edge explodes to ~2 cells, and refining further only adds
-    explode rows (the fan-out table in BENCH.md: lsi_coarse at gsize 32
-    tests 27.6M candidates for 97,870 pairs, at 256 1.02M, while rows per
-    edge grow 1.09 -> 1.77 and the warm join stops getting faster).
-    Never coarser: thin cells keep the caller's grid and its long-edge
-    split. Grid size is physical, so the rows do not change. The extents
-    come with the frames' edge_cell_stats at the caller's grid (cached),
-    so a repeat decision starts no job.
+    with the square of the per-cell fan-out; a cell much narrower costs
+    explode rows, which grow with the edge's span in cells. At one mean
+    edge per cell width an edge explodes to ~2 cells, the knee of both
+    (the fan-out table in BENCH.md: lsi_coarse at gsize 32 tests 27.6M
+    candidates for 97,870 pairs, at 256 1.02M; fine_grid's edges explode
+    to 7.9 cells at 5000 and its join is ~2x faster at 512-2048). Grid
+    size is physical, so the rows do not change. The extents come with
+    the frames' edge_cell_stats at the caller's grid (cached), so a
+    repeat decision starts no job.
     """
     for edges in (edges_a, edges_b):
         edge_cell_stats(edges, grid)
     extent = max(_STATS[edges_a]["extent"], _STATS[edges_b]["extent"])
-    f = 1
-    while f < JOIN_GRID_MAX_FACTOR and 1.0 / GridSpec(grid.grid_size * f * 2).cell_scale >= extent:
-        f *= 2
-    return grid if f == 1 else GridSpec(grid.grid_size * f)
+
+    def wide(g: int) -> bool:
+        return 1.0 / GridSpec(g).cell_scale >= extent
+
+    g, n, cap = grid.grid_size, 0, JOIN_GRID_MAX_FACTOR.bit_length() - 1
+    while g > 1 and n > -cap and not wide(g):
+        g, n = g // 2, n - 1
+    while 0 <= n < cap and wide(2 * g):
+        g, n = g * 2, n + 1
+    return grid if n == 0 else GridSpec(g)
 
 
 #: the build-side cap of every index-side join: an index of at most this
@@ -317,7 +325,8 @@ def _owned_pairs(
     clip_segments with an edge and a box side, rect_join with two box
     sides (operators/rangequery.py, operators/clip.py), as ``boxes`` says.
 
-    Two edge sides join at join_grid's refinement of fat cells. A box
+    Two edge sides join at join_grid's rescale: fat cells refined, thin
+    cells coarsened, each side's layer_split decided at that grid. A box
     never splits, so a refined grid could explode a box much larger than
     the mean extent to JOIN_GRID_MAX_FACTOR^2 times its cells: with a box
     side the caller's grid stays.

@@ -70,7 +70,7 @@ def test_sampling(spark):
     assert sample_edges(e, 0.5).count() == sn
 
 
-def test_salted_lsi_row_parity(spark):
+def test_salted_lsi_row_parity(spark, monkeypatch):
     ca, pa = lattice_chains(spark, 6)
     cb, pb = transformed_lattice(spark, 6)
     scaling = compute_scaling(pa, pb)
@@ -88,12 +88,15 @@ def test_salted_lsi_row_parity(spark):
     assert len(got) == len(set(got))
     assert set(got) == plain
     # fine grid: the m=4 pair's edges span hundreds of cells at gsize
-    # 2048, so the core's long-edge split (and its dedup) fires here too
+    # 2048, so with the join pinned there (join_grid would coarsen it)
+    # the core's long-edge split (and its dedup) fires here too
     ca, pa = lattice_chains(spark, 4)
     cb, pb = transformed_lattice(spark, 4)
     scaling = compute_scaling(pa, pb)
     ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
     fine = GridSpec(2048)
+    monkeypatch.setattr(cells, "join_grid", lambda a, b, g: g)
+    assert layer_split(eb, fine)[0] is not None
     want = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, fine).collect()}
     salted = lsi_join_salted(ea, eb, fine)
     got3 = [(r["eid_a"], r["eid_b"]) for r in salted.collect()]

@@ -61,7 +61,7 @@ def test_fragment_explode_is_linear(spark, layers):
     assert got_split * 5 < est_unsplit  # the real explode is ~linear in span
 
 
-def test_split_only_when_its_bound_is_smaller(spark, layers):
+def test_split_only_when_its_bound_is_smaller(spark, layers, monkeypatch):
     # the rotated lattice at gsize 64 spans more than the fragment length,
     # but its split bound is above the exact unsplit rows: no split, and
     # the rows of a coarse grid
@@ -70,7 +70,7 @@ def test_split_only_when_its_bound_is_smaller(spark, layers):
     _, span, est_unsplit, est_split = edge_cell_stats(eb, grid)
     assert span > SPLIT_CELLS_DEFAULT and est_split >= est_unsplit
     assert layer_split(eb, grid) == (None, est_unsplit)
-    assert join_grid(ea, eb, grid) == grid
+    monkeypatch.setattr(cells, "join_grid", lambda a, b, g: g)  # join at 64
     coarse = {(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, GridSpec(16)).collect()}
     got = [(r["eid_a"], r["eid_b"]) for r in lsi_join(ea, eb, grid).collect()]
     assert len(got) == len(set(got)) and set(got) == coarse and coarse
@@ -107,12 +107,22 @@ def test_fragment_explode_covers_edge_cells(spark, layers):
     assert extra.isEmpty()
 
 
-def test_lsi_fine_grid_matches_coarse(spark, layers):
+def _at_the_callers_grid(monkeypatch, ea, eb, grid):
+    """Pin the cell join to ``grid`` (join_grid would coarsen these thin
+    cells), where eb's long edges split and the pair dedup runs."""
+    monkeypatch.setattr(cells, "join_grid", lambda a, b, g: g)
+    assert layer_split(eb, grid)[0] == SPLIT_CELLS_DEFAULT
+    analyzed = lsi_join(ea, eb, grid)._jdf.queryExecution().analyzed().toString()
+    assert "Deduplicate" in analyzed
+
+
+def test_lsi_fine_grid_matches_coarse(spark, layers, monkeypatch):
     _, ea, eb = layers
     coarse = {
         (r["eid_a"], r["eid_b"])
         for r in lsi_join(ea, eb, GridSpec(16)).collect()
     }
+    _at_the_callers_grid(monkeypatch, ea, eb, GridSpec(2048))
     rows = lsi_join(ea, eb, GridSpec(2048)).collect()  # auto-split fires
     fine = [(r["eid_a"], r["eid_b"]) for r in rows]
     assert len(fine) == len(set(fine))  # deduped despite fragment re-meets
@@ -120,10 +130,11 @@ def test_lsi_fine_grid_matches_coarse(spark, layers):
     assert len(coarse) > 0
 
 
-def test_lsi_fine_grid_points_match_coarse(spark, layers):
+def test_lsi_fine_grid_points_match_coarse(spark, layers, monkeypatch):
     _, ea, eb = layers
     key = lambda r: (r["eid_a"], r["eid_b"], str(r["num_x"]), str(r["num_y"]), str(r["den"]))  # noqa: E731
     coarse = {key(r) for r in lsi_join(ea, eb, GridSpec(16), with_points=True).collect()}
+    _at_the_callers_grid(monkeypatch, ea, eb, GridSpec(2048))
     fine = {key(r) for r in lsi_join(ea, eb, GridSpec(2048), with_points=True).collect()}
     assert fine == coarse
 

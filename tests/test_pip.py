@@ -117,3 +117,69 @@ def test_pip_points_on_lattice_vertices(spark):
     for (pid, x, y), px, py in zip(rows, xi, yi):
         best = pip_oracle_one(int(px), int(py), ea_py)
         assert got[pid] == (None if best is None else best["eid"], face_of(best))
+
+
+@pytest.fixture(scope="module")
+def edge_cases(spark):
+    """m=4 lattice plus one steep chain right of it, (4.5, -3) -> (5, 7),
+    and a flat one above it, (4, 7.5) -> (4.9, 7.5), with uniform points
+    over [-4, 8]^2 and three placed ones: (-3.5, 0) in a column no edge
+    reaches (NULL cys), (0.5, 7.5) above every edge of its column (empty
+    cands), and (4.9, -3.9) under the steep edge, whose crossing lies far
+    above the band at fine grids (a rejected band argmin). The flat edge
+    ends at that point's x, which its SoS x-range excludes, so the
+    completion meets a candidate cell with no match there."""
+    ca, pa = lattice_chains(spark, 4)
+    ca = ca.unionByName(spark.createDataFrame(
+        [(1000, 100, 101), (1001, 101, 102)],
+        "chain_id long, left_polygon_id long, right_polygon_id long"))
+    pa = pa.unionByName(spark.createDataFrame(
+        [(1000, 0, 4.5, -3.0), (1000, 1, 5.0, 7.0), (1001, 0, 4.0, 7.5), (1001, 1, 4.9, 7.5)],
+        "chain_id long, seq int, x double, y double"),
+        allowMissingColumns=True)
+    placed = [(-3.5, 0.0), (0.5, 7.5), (4.9, -3.9)]
+    pts = uniform_points(spark, 300, -4.0, 8.0, -4.0, 8.0).unionByName(spark.createDataFrame(
+        [(300 + i, x, y) for i, (x, y) in enumerate(placed)], "point_id long, x double, y double"))
+    pts = pts.localCheckpoint(eager=True)
+    scaling = compute_scaling(pa, pts)
+    ea = build_edges(ca, pa, scaling).localCheckpoint(eager=True)
+    ca_py = {r["chain_id"]: (r["left_polygon_id"], r["right_polygon_id"]) for r in ca.collect()}
+    pa_py = [(r["chain_id"], r["seq"], r["x"], r["y"]) for r in pa.collect()]
+    return scaling, ea, build_edges_py(ca_py, pa_py, scaling), pts
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "merge"])
+@pytest.mark.parametrize("gsize", [4, 32, 256])
+def test_pip_edge_cases_match_oracle(spark, monkeypatch, edge_cases, gsize, broadcast):
+    """Every point gets one row equal to the oracle's, whether it misses
+    without a join (NULL or empty cands), is accepted by the band pass,
+    or goes to the completion after its band argmin was rejected; with
+    the index broadcast and with it shuffled and merge-pinned."""
+    from rayjoin_spark.operators import pip
+    from rayjoin_spark.plans import cells
+
+    scaling, ea, ea_py, pts = edge_cases
+    if not broadcast:
+        monkeypatch.setattr(cells, "BROADCAST_ROWS", 0)
+    spark.catalog.clearCache()  # cached frames would keep the other run's joins
+    grid = GridSpec(gsize)
+    index, caches = pip.PipIndex(ea, grid), []
+    n_hits = _check(spark, scaling, ea, ea_py, pts, gsize, index=index, caches=caches)
+    assert 0 < n_hits < 303
+
+    stepped = next(c for c in caches if "cands" in c.columns)
+    placed = {r["point_id"]: r["cands"] for r in stepped.filter("point_id >= 300").collect()}
+    assert placed[300] is None and placed[301] == []
+    _, (flat_y,) = scale_points_py([4.9], [7.5], scaling)
+    assert grid.cell_of_py(int(flat_y)) in placed[302]
+    # the band pass over the steep edge's point, as pip_locate runs it
+    band = f"slice(cands, 1, {pip.BAND0})"
+    banded = stepped.filter("point_id = 302").selectExpr(
+        "*", f"{band} AS band", f"element_at({band}, -1) AS band_top")
+    best = pip._argmin_in_cells(banded, index, 1, "band", True)
+    rejected = best.filter(f"NOT ({pip._accept_sql(grid)})").count()
+    # a column of at most BAND0 non-empty cells leaves nothing above the band
+    assert rejected == (gsize >= 32)
+    for c in caches:
+        c.unpersist()
+    index.unpersist()

@@ -108,6 +108,28 @@ def test_point_prep_plan_no_shuffle(spark):
     assert "Exchange" not in _plan(pts)
 
 
+def test_pip_locate_joins_no_points_back(spark):
+    """pip_locate's output is the disjoint union of the accepted band
+    argmins, the completion (one row per unresolved point) and the misses
+    without a candidate cell, so the only join keyed on point_id is the
+    completion's anti-join against the accepted set: no join brings the
+    hits back to the input points."""
+    import re
+
+    from rayjoin_spark.operators.pip import pip_locate
+    from rayjoin_spark.sources.datagen import uniform_points
+
+    ca, pa = lattice_chains(spark, 4)
+    pts = uniform_points(spark, 100, -0.5, 4.5, -0.5, 4.5, seed=1)
+    scaling = compute_scaling(pa, pts)
+    df = pip_locate(pts, build_edges(ca, pa, scaling), scaling, GridSpec(16))
+    assert df.count() == 100
+    df.collect()
+    joins = re.findall(r"(\w+Join) \[([^\]]*)\], \[[^\]]*\], (\w+)", _plan(df))
+    assert joins
+    assert {how for _, keys, how in joins if "point_id#" in keys} == {"LeftAnti"}
+
+
 def test_new_ops_plans_no_python_hot_path(spark):
     """nearest_edge / bm25 / hotspot / route_length stay pure-JVM; the
     tile_top_hosts rank has no single-partition global window exchange."""
@@ -195,7 +217,7 @@ def test_plan_build_round_trip_budget(spark):
     """Building an operator's plan costs a few JVM calls, not thousands:
     the per-query driver constant must not creep back."""
     from rayjoin_spark.operators.pip import PipIndex, pip_locate
-    from rayjoin_spark.plans.cells import edge_cell_stats
+    from rayjoin_spark.plans.cells import edge_cell_stats, join_grid
     from rayjoin_spark.sources.datagen import uniform_points
 
     ca, pa = lattice_chains(spark, 4)
@@ -203,9 +225,11 @@ def test_plan_build_round_trip_budget(spark):
     scaling = compute_scaling(pa, pb)
     ea, eb = build_edges(ca, pa, scaling), build_edges(cb, pb, scaling)
     grid = GridSpec(16)
-    # the stats aggs and the index's size probe are jobs, not plan building;
-    # the stats stay bound to these frame objects for the builds below
-    edge_cell_stats(ea, grid), edge_cell_stats(eb, grid)
+    # the stats aggs (at the caller's and the join grid) and the index's
+    # size probe are jobs, not plan building; the stats stay bound to
+    # these frame objects for the builds below
+    jg = join_grid(ea, eb, grid)
+    edge_cell_stats(ea, jg), edge_cell_stats(eb, jg)
     idx = PipIndex(ea, grid)
     idx.joinable_cells(), idx.skipmap_joinable()
     pts = uniform_points(spark, 100, -0.5, 4.5, -0.5, 4.5, seed=1)
